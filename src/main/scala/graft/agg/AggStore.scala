@@ -34,36 +34,20 @@ import org.apache.spark.sql.types._
   * avgState divisor). avg is derived at read time
   * (`sum_micros / 1e6 / cnt`), the standard mergeable-state decomposition.
   *
-  * Layout + crash-safety protocol are [[graft.dedup.SeenStore]]'s,
-  * verbatim: states subtree first (idempotent dynamic overwrite), tiny
-  * [[graft.core.AtomicStore]] meta relation last — a crash before the
-  * meta commit leaves an orphan subtree that reads never surface; the
-  * replayed shard overwrites it. Meta additionally carries the store's
-  * key schema (as DataType JSON) so readers are footer-job-free without
-  * the caller restating the grouping columns' types. Single-writer per
-  * store path.
+  * Layout + crash-safety protocol follow [[graft.core.ShardStore]]:
+  * states subtree first (idempotent dynamic overwrite), the driver-side
+  * `meta.json` document ([[graft.core.AtomicStore.writeMetaJson]]) last —
+  * a crash before the meta commit leaves an orphan subtree that reads
+  * never surface; the replayed shard overwrites it. Meta additionally
+  * carries the store's key schema (as DataType JSON) so readers are
+  * footer-job-free without the caller restating the grouping columns'
+  * types. Single-writer per store path.
   */
 object AggStore {
 
   private val CompactedShard = "__compacted"
 
-  private def metaPath(path: String) = s"$path/meta"
   private def statesPath(path: String) = s"$path/states"
-
-  private val MetaSchema = StructType(Seq(
-    StructField("shard_id", StringType),
-    StructField("state_schema_json", StringType),
-    StructField("key_names", StringType),
-    // store GENERATION (round-11): bumped by every maintenance op that
-    // changes what the states MEAN (retire/expire coarsen or delete
-    // history; migrate re-shapes measures) — compact preserves it
-    // (reader-invisible by construction). A persisted MV registration
-    // records the generation it was registered against; the rewrite
-    // falls back when the store has moved on (the cross-session
-    // staleness guard). Pre-generation stores read NULL here → 0.
-    StructField("generation", LongType)))
-  /** key_names separator (column names can legally contain commas). */
-  private val KeySep = ""
 
   /** Per-measure states carry the measure name as a prefix:
     * `<m>_sum_u` (micro-unit BIGINT sum), `<m>_min`, `<m>_max`. The
@@ -173,6 +157,13 @@ object AggStore {
     * mirror: `CAST(floor(value * 1e6) AS BIGINT)`. */
   def micros(c: Column): Column = floor(c * lit(1e6)).cast(LongType)
 
+  /** `generation` (round-11) is bumped by every maintenance op that
+    * changes what the states MEAN (retire/expire coarsen or delete
+    * history; migrate re-shapes measures) — compact preserves it
+    * (reader-invisible by construction). A persisted MV registration
+    * records the generation it was registered against; the rewrite falls
+    * back when the store has moved on (the cross-session staleness
+    * guard). */
   private case class Meta(shardIds: Set[String], stateSchema: Option[StructType],
       keyNames: Seq[String], generation: Long) {
     /** Whether this store carries the distinct-sketch state. */
@@ -185,57 +176,23 @@ object AggStore {
       stateSchema.get.fieldNames.toSeq.filterNot(keyNames.contains)
   }
 
-  /** State names a LEGACY (pre-key_names meta) store could carry — used
-    * only to recover such a store's key columns by exclusion. */
-  private val LegacyStateNames = Set("n", "sum_micros", "min_v", "max_v",
-    "cnt_v", SketchField.name)
-
   private def metaJsonPath(path: String) = s"$path/meta.json"
 
   /** Meta read is DRIVER-SIDE (round-11 optimization): the meta is a
-    * handful of driver-built values (shard guard, schema string, keys,
+    * handful of driver-built values (shard guard, state schema, keys,
     * generation), and reading it as a parquet relation cost one full
     * Spark job per store touch — ~70–110 ms × every append/read/probe on
-    * the gate host, a driver↔cluster round trip at scale. JSON file via
-    * [[graft.core.AtomicStore.readLocalJson]]; stores written before
-    * round-11 (parquet meta dir, possibly without key_names) fall back to
-    * the legacy relation read and are rewritten in the new format by
-    * their next meta commit. A torn meta.json tmp never parses (the
-    * document is written in one call), which lands in the same legacy
-    * fallback — the pre-crash meta the swap never touched. */
+    * the gate host, a driver↔cluster round trip at scale. Read strictly
+    * through [[graft.core.AtomicStore.readMetaJson]]: a damaged meta
+    * throws; an absent one is the empty store. */
   private def readMeta(spark: SparkSession, path: String): Meta =
-    graft.core.AtomicStore.readLocalJson(spark, metaJsonPath(path)).flatMap { txt =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        val ids = m.get("shard_ids").elements().asScala.map(_.asText()).toSet
-        val schema = Option(m.get("state_schema_json")).filterNot(_.isNull)
-          .map(n => DataType.fromJson(n.asText()).asInstanceOf[StructType])
-        val keys = m.get("key_names").elements().asScala.map(_.asText()).toSeq
-        Some(Meta(ids, schema, keys, m.get("generation").asLong()))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }.getOrElse(readMetaLegacy(spark, path))
-
-  private def readMetaLegacy(spark: SparkSession, path: String): Meta =
-    graft.core.AtomicStore.read(spark, metaPath(path), MetaSchema) match {
-      case Some(df) =>
-        val rows = df.collect() // one row per ingested shard — tiny by design
-        val schema = rows.headOption.map(r =>
-          DataType.fromJson(r.getString(1)).asInstanceOf[StructType])
-        val keys = rows.headOption.toSeq.flatMap { r =>
-          // a store written before meta carried key_names reads null here
-          // — those stores were single-measure by construction, so their
-          // keys recover exactly by excluding the fixed legacy state set
-          // (bricking existing durable rollup stores is not acceptable)
-          if (r.isNullAt(2))
-            schema.get.fieldNames.toSeq.filterNot(LegacyStateNames)
-          else r.getString(2).split(KeySep).toSeq.filter(_.nonEmpty)
-        }
-        val gen = rows.headOption
-          .map(r => if (r.isNullAt(3)) 0L else r.getLong(3)).getOrElse(0L)
-        Meta(rows.map(_.getString(0)).toSet, schema, keys, gen)
-      case None => Meta(Set.empty, None, Seq.empty, 0L)
-    }
+    graft.core.AtomicStore.readMetaJson(spark, metaJsonPath(path)) { m =>
+      Meta(graft.core.AtomicStore.shardIds(m),
+        Some(DataType.fromJson(m.required("state_schema_json").asText())
+          .asInstanceOf[StructType]),
+        graft.core.AtomicStore.strings(m, "key_names"),
+        m.required("generation").asLong())
+    }.getOrElse(Meta(Set.empty, None, Seq.empty, 0L))
 
   /** The store's current generation (0 before any maintenance op; bumped
     * by retire/expire/migrate). The MV-registration staleness handle. */
@@ -244,25 +201,16 @@ object AggStore {
 
   /** Meta commit is DRIVER-SIDE (see [[readMeta]]); the JSON document is
     * built with Jackson so schema strings and arbitrary key names escape
-    * correctly. A legacy parquet meta dir left by a pre-round-11 writer
-    * is removed AFTER the JSON commit (its content is now stale; the JSON
-    * read wins anyway, this is hygiene). */
+    * correctly. */
   private def writeMeta(spark: SparkSession, path: String, ids: Set[String],
-      stateSchema: StructType, keyNames: Seq[String], generation: Long): Unit = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
-    val idArr = root.putArray("shard_ids")
-    ids.toSeq.sorted.foreach(idArr.add)
-    root.put("state_schema_json", stateSchema.json)
-    val keyArr = root.putArray("key_names")
-    keyNames.foreach(keyArr.add)
-    root.put("generation", generation)
-    graft.core.AtomicStore.writeLocalJson(spark, metaJsonPath(path),
-      om.writeValueAsString(root))
-    val legacy = new org.apache.hadoop.fs.Path(metaPath(path))
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(legacy)) fs.delete(legacy, true)
-  }
+      stateSchema: StructType, keyNames: Seq[String], generation: Long): Unit =
+    graft.core.AtomicStore.writeMetaJson(spark, metaJsonPath(path)) { root =>
+      graft.core.AtomicStore.putShardIds(root, ids)
+      root.put("state_schema_json", stateSchema.json)
+      val keyArr = root.putArray("key_names")
+      keyNames.foreach(keyArr.add)
+      root.put("generation", generation)
+    }
 
   private def onDiskSchema(stateSchema: StructType): StructType =
     StructType(stateSchema.fields.toSeq :+ StructField("shard", StringType))

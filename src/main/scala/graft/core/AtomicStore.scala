@@ -1,25 +1,33 @@
 package graft.core
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe replace of a persisted parquet "store" directory — the
-  * discipline behind the engine's incremental stores (seen-hash dedup,
-  * per-partition fingerprints): write the new contents to `<path>_tmp`,
-  * delete the old store, rename tmp into place. A crash between the
-  * delete and the rename leaves a COMPLETED tmp and no store, which
-  * [[read]] adopts; a crash mid-write leaves a partial tmp WITHOUT the
-  * `_SUCCESS` marker, which [[read]] deletes so the caller rebuilds
-  * (adopting it would poison every later read). All filesystem ops go
-  * through the path's Hadoop FileSystem so object-store paths behave like
-  * local ones; the write itself is distributed (no driver materialise —
-  * stores like the seen-hash set scale with the corpus, not the
-  * partition count).
+/** Crash-safe persistence primitives behind the engine's stores.
+  *
+  *  - Data trees: [[replace]]/[[replaceVia]] write the new contents to
+  *    `<path>_tmp`, delete the old tree and rename tmp into place. A crash
+  *    between the delete and the rename leaves a COMPLETED tmp and no
+  *    tree, which [[read]]/[[heal]] adopt; a crash mid-write leaves a
+  *    partial tmp WITHOUT the `_SUCCESS` marker, which they delete so the
+  *    caller rebuilds (adopting it would poison every later read). The
+  *    write itself is distributed (no driver materialise — trees like the
+  *    seen-hash set scale with the corpus, not the partition count).
+  *  - Store metas: [[writeMetaJson]]/[[readMetaJson]] keep a store's
+  *    driver-bounded metadata as one JSON document with the same
+  *    tmp/delete/rename discipline, read strictly — a damaged meta
+  *    throws, it never reads as an empty store.
+  *
+  * [[ShardStore]] composes the two into the shard-subtree protocol of the
+  * incremental stores. All filesystem ops go through the path's Hadoop
+  * FileSystem so object-store paths behave like local ones.
   *
   * NOT a concurrency mechanism: one writer at a time per store path
   * (pipelines run shards sequentially; the streaming variant serialises
-  * through foreachBatch). See
-  * [[graft.streaming.StreamingReconcile.mergeFingerprintBatch]] for the
-  * replay-guarded (batch-id-carrying) flavour of the same discipline.
+  * through foreachBatch), enforced by [[WriterLease]] and its commit
+  * fence. See [[graft.streaming.StreamingReconcile.mergeFingerprintBatch]]
+  * for the replay-guarded (batch-id-carrying) flavour of [[replace]].
   */
 object AtomicStore {
 
@@ -112,28 +120,26 @@ object AtomicStore {
     fs.rename(tmp, store)
   }
 
-  /** Driver-side fast path for DRIVER-BOUNDED store metadata (round-11
-    * optimization): a store-meta read or write was a full Spark job —
-    * plan + dispatch + commit, measured ~70–110 ms per action on the gate
-    * host, and a driver↔cluster round trip at any scale — for content
-    * that is a handful of driver-built values by construction (shard
-    * guards, generations, schema strings; never corpus data). These
-    * helpers keep such metas in ONE JSON file beside the data trees,
-    * written and read driver-side through the path's Hadoop FileSystem
-    * (object-store safe), with the replace() crash discipline (tmp +
-    * delete + rename; torn tmp detected by parse failure — the whole
-    * document is written in one call, so a partial file never parses)
-    * and the same WriterLease commit fence. Callers keep their LEGACY
-    * parquet meta readable: [[readLocalJson]] returns None when the file
-    * is absent, and the caller falls back to its old parquet relation —
-    * the next meta commit rewrites in the new format. */
-  def writeLocalJson(spark: SparkSession, path: String, json: String): Unit = {
+  /** Driver-side store metadata (round-11): a store-meta read or write as
+    * a parquet relation was a full Spark job — plan + dispatch + commit,
+    * measured ~70–110 ms per action on the gate host — for content that
+    * is a handful of driver-built values by construction (shard guards,
+    * generations, schema strings; never corpus data). Every JSON store
+    * meta (the [[ShardStore]] family, [[graft.agg.AggStore]], the IVF/PQ
+    * indexes) is therefore ONE JSON object in one file beside the data
+    * trees, written and read driver-side through the path's Hadoop
+    * FileSystem (object-store safe), with the [[replace]] crash
+    * discipline (tmp + delete + rename) and the same WriterLease commit
+    * fence. `fill` populates the document's root object. */
+  def writeMetaJson(spark: SparkSession, path: String)(fill: ObjectNode => Unit): Unit = {
+    val root = Json.createObjectNode()
+    fill(root)
     val file = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val fs = fsFor(spark, file)
     fs.delete(tmp, false)
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(Json.writeValueAsBytes(root))
     finally out.close()
     // commit fence — the AtomicStore.replace discipline, verbatim
     WriterLease.validateForCommit(spark, path)
@@ -141,54 +147,67 @@ object AtomicStore {
     fs.rename(tmp, file)
   }
 
-  /** Read a [[writeLocalJson]] file: Some(text) when present and complete;
-    * adopts a complete tmp left by a crash between delete and rename
-    * (completeness = the caller's parse succeeding — a torn tmp is the
-    * caller's cue to fall back to the pre-crash parquet meta, which the
-    * crash never touched). None when absent. */
-  def readLocalJson(spark: SparkSession, path: String): Option[String] = {
+  /** Read a [[writeMetaJson]] document through `decode`: None when the
+    * store has no meta yet, the decoded value otherwise. STRICT: a meta
+    * file that does not parse, or that `decode` rejects, throws
+    * IllegalStateException naming the file — a store must never read as
+    * empty because its meta is damaged (for the seen store that would
+    * silently turn dedup into a no-op).
+    *
+    * Recovery: [[writeMetaJson]] closes the tmp BEFORE it deletes the old
+    * file, so a tmp with no file is either complete (a crash between the
+    * delete and the rename — adopted) or torn by a crash inside the FIRST
+    * commit, when no file existed yet (deleted: the store has no meta). */
+  def readMetaJson[T](spark: SparkSession, path: String)(decode: JsonNode => T): Option[T] = {
     val file = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val fs = fsFor(spark, file)
-    if (!fs.exists(file) && fs.exists(tmp)) fs.rename(tmp, file)
+    if (!fs.exists(file) && fs.exists(tmp)) {
+      if (parseJson(fs, tmp).isDefined) fs.rename(tmp, file) else fs.delete(tmp, false)
+    }
     if (!fs.exists(file)) None
     else {
-      val in = fs.open(file)
-      try {
-        val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
+      def corrupt(cause: Throwable) = new IllegalStateException(
+        s"store meta $file is corrupt (not a complete meta document)", cause)
+      val doc = parseJson(fs, file).getOrElse(throw corrupt(null))
+      try Some(decode(doc))
+      catch { case scala.util.control.NonFatal(e) => throw corrupt(e) }
     }
   }
 
-  /** The common shard-guard meta (a set of folded shard ids) through the
-    * [[writeLocalJson]] fast path — shared by the seen/near-dup/feature/
-    * fingerprint stores whose meta is exactly this set. `legacyDir` is the
-    * store's pre-round-11 parquet meta dir, removed after the JSON commit
-    * (stale once the JSON read wins). */
-  def writeShardMetaJson(spark: SparkSession, jsonPath: String,
-      legacyDir: String, ids: Set[String]): Unit = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
+  /** Some(document) when the file holds exactly one complete JSON object,
+    * None when it does not (a torn write: the document is written in one
+    * call, so a partial file never parses, and on a checksummed
+    * filesystem its bytes may fail their checksum first). The one
+    * store-meta parse site; other I/O errors propagate. */
+  private def parseJson(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[JsonNode] = {
+    val in = fs.open(p)
+    try Some(Json.readTree(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)))
+      .filter(_.isObject)
+    catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException |
+          _: org.apache.hadoop.fs.ChecksumException => None
+    } finally in.close()
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** The shard-guard set every store meta carries, as `shard_ids`. */
+  def putShardIds(root: ObjectNode, ids: Set[String]): Unit = {
     val arr = root.putArray("shard_ids")
     ids.toSeq.sorted.foreach(arr.add)
-    writeLocalJson(spark, jsonPath, om.writeValueAsString(root))
-    val legacy = new org.apache.hadoop.fs.Path(legacyDir)
-    val fs = fsFor(spark, legacy)
-    if (fs.exists(legacy)) fs.delete(legacy, true)
   }
 
-  /** Some(ids) when a parseable [[writeShardMetaJson]] file exists; None
-    * otherwise (absent, or torn tmp — the caller falls back to its legacy
-    * parquet meta, which a torn JSON swap never touched). */
-  def readShardMetaJson(spark: SparkSession, jsonPath: String): Option[Set[String]] =
-    readLocalJson(spark, jsonPath).flatMap { txt =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        Some(m.get("shard_ids").elements().asScala.map(_.asText()).toSet)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
+  /** [[putShardIds]]' inverse; throws when the field is absent. */
+  def shardIds(doc: JsonNode): Set[String] = strings(doc, "shard_ids").toSet
+
+  /** A required string-array field of a meta document. */
+  def strings(doc: JsonNode, field: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    doc.required(field).elements().asScala.map(_.asText()).toSeq
+  }
 
   /** Small-file maintenance: rewrite the store as `nFiles` files (same
     * rows, same schema — spec'd identical before/after). Incremental

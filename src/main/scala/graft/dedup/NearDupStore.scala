@@ -9,18 +9,16 @@ import org.apache.spark.sql.functions._
   * of ANYTHING accepted before?" without recomputing history-vs-history
   * pairs; this store makes that probe O(shard + candidate set).
   *
-  * Layout (the [[SeenStore]] shard-subtree + atomic-meta discipline):
-  *
-  *  - `sigs/shard=<id>/` — per accepted doc: `id`, the k-minhash `sig`,
-  *    and `ts`, the DISTINCT shingle set backing EXACT Jaccard
-  *    verification of candidates (the [[Dedup.verifiedNearDupPairs]]
-  *    contract: banding proposes, exact intersection decides). Storing
-  *    the shingle strings costs ~text-size per doc; a production
-  *    deployment that accepts estimated-Jaccard verification can store
-  *    only `sig` (~260 B/doc) and verify with [[Dedup.estJaccard]] —
-  *    same probe shape, 100x smaller store, approximate verdicts.
-  *  - `meta` — [[graft.core.AtomicStore]] relation of folded shard ids;
-  *    a shard's signatures are visible only after its meta commit.
+  * Layout and crash safety are the [[graft.core.ShardStore]] protocol
+  * over one `sigs/shard=<id>/` tree: per accepted doc, `id`, the
+  * k-minhash `sig`, and `ts`, the DISTINCT shingle set backing EXACT
+  * Jaccard verification of candidates (the [[Dedup.verifiedNearDupPairs]]
+  * contract: banding proposes, exact intersection decides). Storing the
+  * shingle strings costs ~text-size per doc; a production deployment that
+  * accepts estimated-Jaccard verification can store only `sig` (~260
+  * B/doc) and verify with [[Dedup.estJaccard]] — same probe shape, 100x
+  * smaller store, approximate verdicts. A shard's signatures are visible
+  * only after its `meta.json` commit.
   *
   * Probe scale shape ([[filterNew]]): candidate generation shuffles only
   * 16-byte `(band, id)` rows — 8 per stored doc, 8 per incoming doc —
@@ -32,65 +30,28 @@ import org.apache.spark.sql.functions._
   * `maxBucket` guard caps boilerplate buckets exactly as in
   * [[Dedup.minhashPairs]].
   *
-  * Crash/replay protocol per shard = [[SeenStore]]'s: filter the shard
-  * against the store, commit survivors downstream, then [[update]] with
-  * the survivors; `processedShards` short-circuits replays after the
-  * meta commit. Single-writer per store path. */
+  * Replay protocol per shard = [[SeenStore]]'s: filter the shard against
+  * the store, commit survivors downstream, then [[update]] with the
+  * survivors; `processedShards` short-circuits replays after the meta
+  * commit. */
 object NearDupStore {
 
-  private val CompactedShard = "__compacted"
-
-  private def metaPath(path: String) = s"$path/meta"
-  private def sigsPath(path: String) = s"$path/sigs"
-
-  // engine-written trees: explicit schemas make every read footer-job-
-  // free (partition col `shard` as string — inference is off)
-  private val MetaSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("shard_id", StringType)))
-  }
-  private val SigsSchema = {
+  private val store = new graft.core.ShardStore("sigs", {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("id", LongType),
       StructField("sig", ArrayType(LongType, containsNull = false)),
       StructField("ts", ArrayType(StringType, containsNull = false)),
       StructField("shard", StringType)))
-  }
+  })
 
-  private def metaJsonPath(path: String) = s"$path/meta.json"
-
-  // meta rides the driver-side JSON fast path (round-11: a guard-set
-  // read/write was a full Spark job each); legacy parquet metas fall
-  // back and migrate on the next commit
-  private def shardIds(spark: SparkSession, path: String): Set[String] =
-    graft.core.AtomicStore.readShardMetaJson(spark, metaJsonPath(path))
-      .getOrElse(graft.core.AtomicStore.read(spark, metaPath(path), MetaSchema) match {
-        case Some(df) => df.select("shard_id").collect().map(_.getString(0)).toSet
-        case None => Set.empty
-      })
-
-  private def writeMeta(spark: SparkSession, path: String, ids: Set[String]): Unit =
-    graft.core.AtomicStore.writeShardMetaJson(spark, metaJsonPath(path),
-      metaPath(path), ids)
-
-  /** (id, sig, ts) of every doc in meta-committed shards, or None before
-    * the first [[update]]. Orphan subtrees of torn updates stay invisible. */
-  def read(spark: SparkSession, path: String): Option[DataFrame] = {
-    val ids = shardIds(spark, path)
-    if (ids.isEmpty) None
-    else {
-      // corpus-scale store tree: register for the broadcast demotion rule;
-      // readRequired so a torn compact self-heals on the next read
-      graft.plans.CorpusScale.register(sigsPath(path))
-      Some(graft.core.AtomicStore.readRequired(spark, sigsPath(path), SigsSchema)
-        .filter(col("shard").isin(ids.toSeq: _*))
-        .select("id", "sig", "ts"))
-    }
-  }
+  /** (id, sig, ts) of every doc in committed shards, or None before the
+    * first [[update]]. Orphan subtrees of torn updates stay invisible. */
+  def read(spark: SparkSession, path: String): Option[DataFrame] =
+    store.read(spark, path)
 
   /** Shard ids whose survivors are already folded in. */
   def processedShards(spark: SparkSession, path: String): Set[String] =
-    shardIds(spark, path) - CompactedShard
+    store.processedShards(spark, path)
 
   private def signatures(docs: DataFrame, textCol: String, idCol: String,
       k: Int, shingleN: Int): DataFrame =
@@ -169,9 +130,8 @@ object NearDupStore {
     }
 
   /** Fold a committed shard's accepted docs into the store — O(shard):
-    * signatures + shingle sets land as the shard's own subtree via
-    * dynamic partition overwrite, then the tiny meta relation swaps.
-    * Idempotent per shard id. */
+    * signatures + shingle sets land as the shard's own subtree, then the
+    * meta commit makes them visible. Idempotent per shard id. */
   def update(spark: SparkSession, path: String, accepted: DataFrame,
       textCol: String, idCol: String, shardId: String,
       k: Int = 32, shingleN: Int = 3): Unit =
@@ -184,43 +144,13 @@ object NearDupStore {
     * the survivor ids and hand them here, and the batch pays ONE minhash
     * pass instead of two. The caller owns the contract that `sigs` holds
     * exactly the accepted docs' signatures with the store's `k`/
-    * `shingleN`; everything else (lease, replay guard, heal, dynamic
-    * overwrite, meta commit) is [[update]] verbatim. */
+    * `shingleN`; the append itself is [[update]]'s. */
   def updateFromSigs(spark: SparkSession, path: String, sigs: DataFrame,
       shardId: String): Unit =
-    graft.core.WriterLease.withLease(spark, path) {
-    require(shardId != CompactedShard, s"shard id $CompactedShard is reserved")
-    val ids = shardIds(spark, path)
-    if (ids.contains(shardId)) return
-    // adopt a torn compact before (re-)creating the tree (AtomicStore.heal)
-    graft.core.AtomicStore.heal(spark, sigsPath(path))
-    sigs.select("id", "sig", "ts")
-      .withColumn("shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard")
-      .parquet(sigsPath(path))
-    writeMeta(spark, path, ids + shardId)
-  }
+    store.append(spark, path, sigs, shardId)
 
-  /** Small-file maintenance, [[SeenStore.compact]] protocol: meta gains
-    * the compacted id first (crash-safe — reads stay on the old subtrees),
-    * then every live subtree folds into one `shard=__compacted` tree via
-    * atomic swap; historical ids stay in meta for the replay guard. */
+  /** Small-file maintenance: every committed subtree folds into one tree
+    * of `nFiles` files; historical ids stay in meta for the replay guard. */
   def compact(spark: SparkSession, path: String, nFiles: Int = 1): Boolean =
-    graft.core.WriterLease.withLease(spark, path) {
-    val ids = shardIds(spark, path)
-    if (ids.isEmpty) return false
-    if (!ids.contains(CompactedShard))
-      writeMeta(spark, path, ids + CompactedShard)
-    val live = graft.core.AtomicStore.readRequired(spark, sigsPath(path), SigsSchema)
-      .filter(col("shard").isin(ids.toSeq: _*))
-      .select("id", "sig", "ts")
-      .withColumn("shard", lit(CompactedShard))
-    graft.core.AtomicStore.replaceVia(spark, sigsPath(path)) { tmp =>
-      live.coalesce(nFiles)
-        .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    }
-    true
-  }
+    store.compact(spark, path, nFiles)
 }

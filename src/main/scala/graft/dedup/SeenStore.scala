@@ -1,103 +1,46 @@
 package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The persisted seen-hash store behind incremental exact dedup (the q88
   * primitive, production-shaped): 8 bytes per distinct document ever
   * accepted, anti-joined against each incoming shard so re-ingest cost is
   * O(shard + store), never O(corpus).
   *
-  * Layout (the same shard-subtree + atomic-meta discipline as the BM25
-  * index — [[graft.text.Retrieval]]):
-  *
-  *  - `hashes/shard=<id>/` — one parquet subtree of `content_hash` per
-  *    folded shard, written via dynamic partition overwrite (a replayed
-  *    write replaces exactly its own directories — idempotent)
-  *  - `meta` — [[graft.core.AtomicStore]] relation of processed shard
-  *    ids; committing it is what makes a shard's hashes VISIBLE
-  *
-  * [[update]] is therefore **O(shard)**: the new shard's hashes append as
-  * their own subtree and the tiny meta relation swaps — the store is
-  * never rewritten. (The previous union+distinct rewrite was O(store)
-  * per shard: at 10B documents an ~80 GB key shuffle per daily ingest,
-  * the self-documented scale limit this layout removes.) Repeated
-  * appends accumulate files; [[compact]] folds every recorded subtree
-  * into one `shard=__compacted` tree (read-coalesce-atomic-swap), with
-  * historical shard ids KEPT in meta so replays of long-gone shards
-  * still short-circuit.
-  *
-  * Crash-safety per shard: hashes first (idempotent overwrite), meta
-  * last. A crash before the meta commit leaves an orphan subtree that
-  * [[read]] never surfaces (it filters to meta-recorded shards); the
-  * replayed shard overwrites it and commits. After the commit, the
-  * caller's guard ([[processedShards]]) short-circuits the whole run —
-  * its hashes are all in the store, so re-filtering would emit an empty
-  * relation and clobber the shard's committed output.
+  * Layout and crash safety are the [[graft.core.ShardStore]] protocol
+  * over one `hashes/shard=<id>/` tree of `content_hash`: [[update]] is
+  * **O(shard)** (the shard's distinct hashes append as their own subtree,
+  * then `meta.json` commits its id — the store is never rewritten; the
+  * previous union+distinct rewrite was O(store) per shard, an ~80 GB key
+  * shuffle per daily ingest at 10B documents), orphans of torn updates
+  * stay invisible, and [[compact]] folds the subtrees into one
+  * deduplicated tree with the historical ids kept.
   *
   * Protocol per shard: if `shardId ∈ processedShards` → done (output is
-  * already committed). Else [[filter]] the shard against the store,
-  * commit the survivors downstream, then [[update]] with the survivors +
-  * shard id. A crash before [[update]] replays with the store unchanged,
-  * so the re-run recomputes the identical output; after [[update]], the
-  * replay short-circuits at the guard. Single-writer per store path, as
-  * with every persisted store here. */
+  * already committed; re-filtering would emit an empty relation and
+  * clobber it). Else [[filter]] the shard against the store, commit the
+  * survivors downstream, then [[update]] with the survivors + shard id. A
+  * crash before [[update]] replays with the store unchanged, so the re-run
+  * recomputes the identical output; after [[update]], the replay
+  * short-circuits at the guard. A damaged meta throws rather than reading
+  * as an empty store — an empty seen set would silently pass every
+  * duplicate. */
 object SeenStore {
 
-  private val CompactedShard = "__compacted"
-
-  private def metaPath(path: String) = s"$path/meta"
-  private def hashesPath(path: String) = s"$path/hashes"
-
-  // engine-written trees: explicit schemas make every read footer-job-
-  // free (partition col `shard` as string — inference is off)
-  private val MetaSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("shard_id", StringType)))
-  }
-  private val HashesSchema = {
+  private val store = new graft.core.ShardStore("hashes", {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("content_hash", LongType),
       StructField("shard", StringType)))
-  }
+  })
 
-  private def metaJsonPath(path: String) = s"$path/meta.json"
-
-  // meta rides the driver-side JSON fast path (round-11: a guard-set
-  // read/write was a full Spark job each); legacy parquet metas fall
-  // back and migrate on the next commit
-  private def shardIds(spark: SparkSession, path: String): Set[String] =
-    graft.core.AtomicStore.readShardMetaJson(spark, metaJsonPath(path))
-      .getOrElse(graft.core.AtomicStore.read(spark, metaPath(path), MetaSchema) match {
-        case Some(df) => df.select("shard_id").collect().map(_.getString(0)).toSet
-        case None => Set.empty
-      })
-
-  private def writeMeta(spark: SparkSession, path: String, ids: Set[String]): Unit =
-    graft.core.AtomicStore.writeShardMetaJson(spark, metaJsonPath(path),
-      metaPath(path), ids)
-
-  /** The store's hash relation (content_hash), restricted to shards whose
-    * meta commit landed (orphans of torn updates stay invisible), or None
-    * before the first [[update]]. */
-  def read(spark: SparkSession, path: String): Option[DataFrame] = {
-    val ids = shardIds(spark, path)
-    if (ids.isEmpty) None
-    else {
-      // the store grows with the corpus: its scans must never be a
-      // broadcast build in a join against another corpus relation
-      graft.plans.CorpusScale.register(hashesPath(path))
-      // readRequired: a torn compact (crash inside the tree swap) heals
-      // here instead of throwing on every read until manual repair
-      Some(graft.core.AtomicStore.readRequired(spark, hashesPath(path), HashesSchema)
-        .filter(col("shard").isin(ids.toSeq: _*))
-        .select("content_hash"))
-    }
-  }
+  /** The store's hash relation (content_hash), restricted to committed
+    * shards, or None before the first [[update]]. */
+  def read(spark: SparkSession, path: String): Option[DataFrame] =
+    store.read(spark, path)
 
   /** Shard ids whose survivors are already folded in. */
   def processedShards(spark: SparkSession, path: String): Set[String] =
-    shardIds(spark, path) - CompactedShard
+    store.processedShards(spark, path)
 
   /** Drop rows of `incoming` whose content hash is already in the store;
     * identity when the store does not exist yet. */
@@ -114,40 +57,11 @@ object SeenStore {
     * shard id. */
   def update(spark: SparkSession, path: String, survivors: DataFrame,
       contentCol: String, shardId: String): Unit =
-    graft.core.WriterLease.withLease(spark, path) {
-    require(shardId != CompactedShard, s"shard id $CompactedShard is reserved")
-    val ids = shardIds(spark, path)
-    if (ids.contains(shardId)) return
-    // adopt a torn compact before (re-)creating the tree (AtomicStore.heal)
-    graft.core.AtomicStore.heal(spark, hashesPath(path))
-    Dedup.seenHashes(survivors, contentCol)
-      .withColumn("shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard")
-      .parquet(hashesPath(path))
-    writeMeta(spark, path, ids + shardId)
-  }
+    store.append(spark, path, Dedup.seenHashes(survivors, contentCol), shardId)
 
-  /** Small-file maintenance: fold every recorded subtree into one
-    * `shard=__compacted` tree with `nFiles` files. Meta first (a crash
-    * before the swap leaves reads on the old tree — still correct), then
-    * the crash-safe tree swap; historical ids stay in meta so the replay
-    * guard survives compaction. No-op before the first update. */
+  /** Small-file maintenance: fold every committed subtree into one
+    * deduplicated tree of `nFiles` files; the replay guard survives.
+    * No-op before the first update. */
   def compact(spark: SparkSession, path: String, nFiles: Int = 1): Boolean =
-    graft.core.WriterLease.withLease(spark, path) {
-    val ids = shardIds(spark, path)
-    if (ids.isEmpty) return false
-    if (!ids.contains(CompactedShard))
-      writeMeta(spark, path, ids + CompactedShard)
-    val live = graft.core.AtomicStore.readRequired(spark, hashesPath(path), HashesSchema)
-      .filter(col("shard").isin(ids.toSeq: _*))
-      .select("content_hash").distinct()
-      .withColumn("shard", lit(CompactedShard))
-    graft.core.AtomicStore.replaceVia(spark, hashesPath(path)) { tmp =>
-      live.coalesce(nFiles)
-        .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    }
-    true
-  }
+    store.compact(spark, path, nFiles, _.distinct())
 }

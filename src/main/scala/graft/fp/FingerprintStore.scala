@@ -29,22 +29,30 @@ object FingerprintStore {
   private val Kind = "__kind"
   private val ShardId = "__shard_id"
 
-  /** The fingerprint relation (partition cols + rows + fp), or None. A
-    * pre-guard store (no kind column) reads as all-fp, zero shards. */
-  def read(spark: SparkSession, path: String): Option[DataFrame] =
+  /** The stored relation, or None before the first fold. A relation
+    * without the kind column was not written here and fails loudly. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] =
     graft.core.AtomicStore.read(spark, path).map { df =>
-      if (df.columns.contains(Kind)) df.filter(col(Kind) === "fp").drop(Kind, ShardId)
-      else df
+      if (!df.columns.contains(Kind)) throw new IllegalStateException(
+        s"fingerprint store at $path has no $Kind column — not a " +
+          "shard-guarded store")
+      df
     }
+
+  private def fpOf(df: DataFrame): DataFrame =
+    df.filter(col(Kind) === "fp").drop(Kind, ShardId)
+
+  private def shardsOf(df: DataFrame): Set[String] =
+    df.filter(col(Kind) === "shard").select(ShardId)
+      .collect().map(_.getString(0)).toSet
+
+  /** The fingerprint relation (partition cols + rows + fp), or None. */
+  def read(spark: SparkSession, path: String): Option[DataFrame] =
+    stored(spark, path).map(fpOf)
 
   /** Shard ids already folded into the store. */
   def foldedShards(spark: SparkSession, path: String): Set[String] =
-    graft.core.AtomicStore.read(spark, path) match {
-      case Some(df) if df.columns.contains(Kind) =>
-        df.filter(col(Kind) === "shard").select(ShardId)
-          .collect().map(_.getString(0)).toSet
-      case _ => Set.empty
-    }
+    stored(spark, path).map(shardsOf).getOrElse(Set.empty)
 
   /** Fold `batch`'s per-partition fingerprints into the store unless
     * `shardId` was already folded. Returns true when the fold ran.
@@ -60,21 +68,13 @@ object FingerprintStore {
     // (each AtomicStore.read is a recovery check + listing; and reading
     // the guard twice would be a TOCTOU seam if the single-writer
     // discipline were ever violated)
-    val stored = graft.core.AtomicStore.read(spark, path)
-    val hasKind = stored.exists(_.columns.contains(Kind))
-    val prevShards: Set[String] = stored match {
-      case Some(df) if hasKind =>
-        df.filter(col(Kind) === "shard").select(ShardId)
-          .collect().map(_.getString(0)).toSet
-      case _ => Set.empty
-    }
+    val prev = stored(spark, path)
+    val prevShards = prev.map(shardsOf).getOrElse(Set.empty)
     if (prevShards.contains(shardId)) return false
     val keyNames = partCols.map(_._1)
     val delta = Fingerprint.byPartition(batch, partCols, cols)
-    val merged = stored match {
-      case Some(df) =>
-        val fp = if (hasKind) df.filter(col(Kind) === "fp").drop(Kind, ShardId) else df
-        Fingerprint.mergeDelta(fp, delta, keyNames)
+    val merged = prev match {
+      case Some(df) => Fingerprint.mergeDelta(fpOf(df), delta, keyNames)
       case None => delta
     }
     val shardIds = prevShards + shardId

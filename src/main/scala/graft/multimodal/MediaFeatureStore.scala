@@ -14,53 +14,25 @@ import org.apache.spark.sql.functions._
   * at 100 TB of media that is the difference between a mining query that
   * scans ~0.01% of the bytes and one that decodes the corpus again.
   *
-  * Layout + protocol: exactly the [[graft.dedup.SeenStore]] shard
-  * discipline (one `features/shard=<id>/` subtree per ingest shard via
-  * dynamic partition overwrite, atomic `meta` relation of committed shard
-  * ids, O(shard) append, orphans-of-torn-writes invisible until their
-  * replay commits, [[compact]] folds subtrees with history kept).
-  * `kind` distinguishes feature families (`dhash56`, `audio_fp`, …) so
-  * one store serves several decoders without cross-contamination.
+  * Layout + protocol: the [[graft.core.ShardStore]] shard-subtree
+  * protocol over one `features/shard=<id>/` tree (O(shard) append,
+  * `meta.json` commit of the shard ids, orphans of torn writes invisible
+  * until their replay commits, [[compact]] folds subtrees with history
+  * kept). `kind` distinguishes feature families (`dhash56`, `audio_fp`, …)
+  * so one store serves several decoders without cross-contamination.
   */
 object MediaFeatureStore {
 
-  private val CompactedShard = "__compacted"
-
-  private def metaPath(path: String) = s"$path/meta"
-  private def featuresPath(path: String) = s"$path/features"
-
-  // explicit schemas: engine-written trees never pay a footer-inference
-  // job (partition col `shard` reads back as string — inference is off)
-  private val MetaSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("shard_id", StringType)))
-  }
-  private val FeaturesSchema = {
+  private val store = new graft.core.ShardStore("features", {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("doc_id", LongType),
       StructField("kind", StringType), StructField("sig", LongType),
       StructField("shard", StringType)))
-  }
-
-  private def metaJsonPath(path: String) = s"$path/meta.json"
-
-  // meta rides the driver-side JSON fast path (round-11: a guard-set
-  // read/write was a full Spark job each); legacy parquet metas fall
-  // back and migrate on the next commit
-  private def shardIds(spark: SparkSession, path: String): Set[String] =
-    graft.core.AtomicStore.readShardMetaJson(spark, metaJsonPath(path))
-      .getOrElse(graft.core.AtomicStore.read(spark, metaPath(path), MetaSchema) match {
-        case Some(df) => df.select("shard_id").collect().map(_.getString(0)).toSet
-        case None => Set.empty
-      })
-
-  private def writeMeta(spark: SparkSession, path: String, ids: Set[String]): Unit =
-    graft.core.AtomicStore.writeShardMetaJson(spark, metaJsonPath(path),
-      metaPath(path), ids)
+  })
 
   /** Shard ids whose features are committed (the caller's replay guard). */
   def processedShards(spark: SparkSession, path: String): Set[String] =
-    shardIds(spark, path) - CompactedShard
+    store.processedShards(spark, path)
 
   /** Fold one shard's decoded features in — O(shard). `features` must be
     * (doc_id: long, sig: long) as produced by the decode pass; rows land
@@ -71,52 +43,24 @@ object MediaFeatureStore {
     * mixes feature versions (rebuild the store, or use a new `kind`). */
   def append(spark: SparkSession, path: String, features: DataFrame,
       kind: String, shardId: String): Boolean =
-    graft.core.WriterLease.withLease(spark, path) {
-    require(shardId != CompactedShard, s"shard id $CompactedShard is reserved")
-    val ids = shardIds(spark, path)
-    if (ids.contains(shardId)) return false
-    // adopt a torn compact before (re-)creating the tree (AtomicStore.heal)
-    graft.core.AtomicStore.heal(spark, featuresPath(path))
-    features.select(col("doc_id").cast("long").as("doc_id"),
-        lit(kind).as("kind"), col("sig").cast("long").as("sig"))
-      .withColumn("shard", lit(shardId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard")
-      .parquet(featuresPath(path))
-    writeMeta(spark, path, ids + shardId)
-    true
-  }
+    store.append(spark, path,
+      features.select(col("doc_id").cast("long").as("doc_id"),
+        lit(kind).as("kind"), col("sig").cast("long").as("sig")),
+      shardId)
 
   /** The committed (doc_id, sig) relation for one feature `kind` — what
     * mining reads instead of re-decoding media. Grows with the corpus:
     * registered corpus-scale so it is never a broadcast build side. */
-  def read(spark: SparkSession, path: String, kind: String): DataFrame = {
-    val ids = shardIds(spark, path)
-    require(ids.nonEmpty, s"no media feature store at $path")
-    graft.plans.CorpusScale.register(featuresPath(path))
-    graft.core.AtomicStore.readRequired(spark, featuresPath(path), FeaturesSchema)
-      .filter(col("shard").isin(ids.toSeq: _*) && col("kind") === kind)
+  def read(spark: SparkSession, path: String, kind: String): DataFrame =
+    store.read(spark, path)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no media feature store at $path"))
+      .filter(col("kind") === kind)
       .select("doc_id", "sig")
-  }
 
-  /** Small-file maintenance — the SeenStore.compact protocol verbatim:
-    * meta first (crash-safe), one folded `shard=__compacted` tree,
-    * historical ids kept so shard replays still short-circuit. */
+  /** Small-file maintenance — the [[graft.core.ShardStore.compact]]
+    * protocol: one folded tree, historical ids kept so shard replays
+    * still short-circuit. */
   def compact(spark: SparkSession, path: String, nFiles: Int = 1): Boolean =
-    graft.core.WriterLease.withLease(spark, path) {
-    val ids = shardIds(spark, path)
-    if (ids.isEmpty) return false
-    if (!ids.contains(CompactedShard))
-      writeMeta(spark, path, ids + CompactedShard)
-    val live = graft.core.AtomicStore.readRequired(spark, featuresPath(path), FeaturesSchema)
-      .filter(col("shard").isin(ids.toSeq: _*))
-      .select("doc_id", "kind", "sig")
-      .withColumn("shard", lit(CompactedShard))
-    graft.core.AtomicStore.replaceVia(spark, featuresPath(path)) { tmp =>
-      live.coalesce(nFiles)
-        .write.mode("overwrite").partitionBy("shard").parquet(tmp)
-    }
-    true
-  }
+    store.compact(spark, path, nFiles)
 }

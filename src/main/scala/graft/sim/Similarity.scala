@@ -346,74 +346,33 @@ object Similarity {
     * stays readable until the flip. */
   private final case class IvfMeta(shards: Set[String], gen: String)
 
-  /** Meta relation schema ([[writeIvfMeta]] writes it; pre-`gen` metas
-    * read a null gen column) — footer-job-free meta reads. */
-  private val IvfMetaSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("shard_id",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("gen",
-      org.apache.spark.sql.types.StringType)))
-
   /** Whether a persisted IVF/PQ index exists at `path` — its meta commit
-    * landed in either format (round-11 meta.json, or the legacy parquet
-    * dir a pre-round-11 writer left). The pipeline's append-vs-build
-    * decision keys on this. */
+    * landed. The pipeline's append-vs-build decision keys on this. */
   def indexExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    graft.core.Fs.exists(spark, s"$path/meta.json") ||
-      graft.core.Fs.exists(spark, s"$path/meta")
+    readIvfMeta(spark, path).shards.nonEmpty
 
   /** Meta read is DRIVER-SIDE (round-11 optimization — the
     * [[graft.agg.AggStore]] rationale: a driver-bounded guard relation
-    * cost one Spark job per probe/append). JSON file with legacy-parquet
-    * fallback; the next meta commit migrates the format. */
+    * cost one Spark job per probe/append). Strict: a damaged meta throws;
+    * an absent one reads as no index. */
   private def readIvfMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfMeta =
-    graft.core.AtomicStore.readLocalJson(spark, s"$path/meta.json").flatMap { txt =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        val ids = m.get("shard_ids").elements().asScala.map(_.asText()).toSet
-        Some(IvfMeta(ids, m.get("gen").asText()))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }.getOrElse(readIvfMetaLegacy(spark, path))
-
-  private def readIvfMetaLegacy(spark: org.apache.spark.sql.SparkSession,
-      path: String): IvfMeta =
-    graft.core.AtomicStore.read(spark, s"$path/meta", IvfMetaSchema) match {
-      case Some(df) =>
-        // ONE collect for ids + gen (a meta read happens on every probe
-        // and append; the old head-then-collect pair was two jobs)
-        val genCol = if (df.columns.contains("gen")) col("gen")
-          else lit(null).cast("string")
-        val rows = df.select(col("shard_id"), genCol.as("gen")).collect()
-        val gen = rows.headOption.flatMap(r => Option(r.getString(1))).getOrElse("")
-        IvfMeta(rows.map(_.getString(0)).toSet, gen)
-      case None => IvfMeta(Set.empty, "")
-    }
-
-  private def ivfShardIds(spark: org.apache.spark.sql.SparkSession,
-      path: String): Set[String] = readIvfMeta(spark, path).shards
+    graft.core.AtomicStore.readMetaJson(spark, s"$path/meta.json") { m =>
+      IvfMeta(graft.core.AtomicStore.shardIds(m), m.required("gen").asText())
+    }.getOrElse(IvfMeta(Set.empty, ""))
 
   /** The directory the index's data trees (centroids/assigned resp.
     * codebooks/codes) live under for a generation. */
   private def genRoot(path: String, gen: String): String =
     if (gen.isEmpty) path else s"$path/$gen"
 
-  /** Meta commit is DRIVER-SIDE (see [[readIvfMeta]]); a legacy parquet
-    * meta dir is removed after the JSON commit. */
+  /** Meta commit is DRIVER-SIDE (see [[readIvfMeta]]). */
   private def writeIvfMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: Set[String], gen: String = ""): Unit = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.createObjectNode()
-    val idArr = root.putArray("shard_ids")
-    ids.toSeq.sorted.foreach(idArr.add)
-    root.put("gen", gen)
-    graft.core.AtomicStore.writeLocalJson(spark, s"$path/meta.json",
-      om.writeValueAsString(root))
-    val legacy = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(legacy)) fs.delete(legacy, true)
-  }
+      path: String, ids: Set[String], gen: String = ""): Unit =
+    graft.core.AtomicStore.writeMetaJson(spark, s"$path/meta.json") { root =>
+      graft.core.AtomicStore.putShardIds(root, ids)
+      root.put("gen", gen)
+    }
 
   /** `centroids = null` (the append path) reads the FROZEN relation from
     * the index; the build path passes the literal it just wrote. */
@@ -578,7 +537,7 @@ object Similarity {
     * after enough drift, probed clusters stop containing the true
     * neighbours).
     *
-    * Atomicity via the GENERATION pointer in the meta relation: the new
+    * Atomicity via the GENERATION pointer in the meta document: the new
     * centroids + full re-assignment land COMPLETELY under
     * `path/gen-<n+1>/` while probes keep reading the old generation; the
     * (already-atomic) meta swap then flips both trees at once — there is

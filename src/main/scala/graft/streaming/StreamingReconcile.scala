@@ -514,8 +514,6 @@ object StreamingReconcile {
   def mergeFingerprintBatch(spark: SparkSession, storePath: String,
       batch: DataFrame, partKeys: Seq[(String, org.apache.spark.sql.Column)],
       cols: Seq[org.apache.spark.sql.Column], batchId: Long = 0L): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // crash recovery + read through the shared AtomicStore discipline
     // (completed tmp adopted, partial tmp deleted — one implementation,
     // not a drifting copy of it)
@@ -523,24 +521,13 @@ object StreamingReconcile {
     // Replay guard. Read errors must PROPAGATE (failing the stream), not
     // silently disable the guard — a guard-less replay re-merges and
     // XOR-cancels the store, the exact corruption it exists to prevent.
-    // Only two soft cases fall back: an empty store (max → null) and a
-    // pre-BatchCol legacy store, whose id lives in the old marker FILE
-    // (unparseable marker = absent-but-warn; the marker is deleted after
-    // the first new-style write so it cannot go stale).
-    val legacyMarker = new org.apache.hadoop.fs.Path(storePath + "_last_batch")
+    // The one soft case is an empty store (max → null); a store without
+    // the batch-id column was not written here and fails loudly.
     def lastBatch: Option[Long] = stored.flatMap { df =>
-      if (df.columns.contains(BatchCol))
-        Option(df.agg(max(col(BatchCol))).head().get(0)).map(_.asInstanceOf[Long])
-      else if (!fs.exists(legacyMarker)) None
-      else {
-        val in = fs.open(legacyMarker)
-        val txt = try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim finally in.close()
-        val parsed = scala.util.Try(txt.toLong).toOption
-        if (parsed.isEmpty) System.err.println(
-          s"[graft] unparseable legacy batch marker at $legacyMarker ('$txt') — treating as absent")
-        parsed
-      }
+      if (!df.columns.contains(BatchCol)) throw new IllegalStateException(
+        s"fingerprint store at $storePath has no $BatchCol column — not a " +
+          "replay-guarded store")
+      Option(df.agg(max(col(BatchCol))).head().get(0)).map(_.asInstanceOf[Long])
     }
     if (lastBatch.exists(_ >= batchId)) return // at-least-once replay
     val delta = graft.fp.Fingerprint.byPartition(batch, partKeys, cols)
@@ -555,7 +542,6 @@ object StreamingReconcile {
       spark.createDataFrame(
           spark.sparkContext.parallelize(snapshot, 1), merged.schema)
         .withColumn(BatchCol, lit(batchId)))
-    fs.delete(legacyMarker, false) // superseded by the in-store batch id
   }
 
   /** Streaming maintenance of the stored per-partition fingerprint table:

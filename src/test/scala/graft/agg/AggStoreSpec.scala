@@ -141,32 +141,6 @@ class AggStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("collide"))
   }
 
-  test("legacy meta (no key_names column) still reads: keys recover by exclusion") {
-    val store = tmpDir("agg_legacy")
-    appendSplit(store, 2)
-    val expect = asSet(AggStore.merged(spark, store))
-    // simulate a store written before round-11 (parquet meta dir rather
-    // than meta.json) AND before meta carried key_names: build the legacy
-    // relation from the on-disk states schema, then remove the json meta
-    // so the read takes the legacy-fallback path
-    val stateSchema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(s"$store/states").schema.filterNot(_.name == "shard"))
-    import scala.jdk.CollectionConverters._
-    val legacyMeta = spark.createDataFrame(
-      Seq("batch_0", "batch_1").map(id =>
-        org.apache.spark.sql.Row(id, stateSchema.json, null, null): org.apache.spark.sql.Row).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("shard_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("state_schema_json", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("key_names", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("generation", org.apache.spark.sql.types.LongType))))
-    graft.core.AtomicStore.replace(spark, s"$store/meta", legacyMeta)
-    new java.io.File(s"$store/meta.json").delete()
-    assert(asSet(AggStore.merged(spark, store)) == expect,
-      "legacy single-measure store bricked by the key_names meta column")
-    assert(AggStore.processedShards(spark, store) == Set("batch_0", "batch_1"))
-  }
-
   test("argMax state: merged latest-per-key ≡ windowed from-raw, compact-invariant") {
     val ev = Tables.load(spark, sf001, "events")
     val store = tmpDir("agg_argmax")

@@ -53,17 +53,19 @@ class FingerprintStoreSpec extends SparkSpec {
     assert(snapshot(pA) == snapshot(pB))
   }
 
-  test("pre-guard store (bare byPartition parquet) reads as all-fp with zero shards") {
-    val p = tmpDir("fpstore") + "/legacy"
+  test("pre-guard store (bare byPartition parquet) throws, naming the path") {
+    val p = tmpDir("fpstore") + "/unguarded"
     Fingerprint.byPartition(batch(1L to 4L, "web"), keys, cols)
       .write.parquet(p)
-    assert(FingerprintStore.foldedShards(spark, p).isEmpty)
-    assert(snapshot(p).map(_._1) == Seq("web"))
-    // folding a new shard upgrades it to the guarded format
-    assert(FingerprintStore.fold(spark, p, "s9", batch(5L to 6L, "web"), keys, cols))
-    assert(FingerprintStore.foldedShards(spark, p) == Set("s9"))
-    assert(snapshot(p) == Seq(("web", 6L,
-      Fingerprint.byPartition(batch(1L to 6L, "web"), keys, cols)
-        .collect().head.getLong(2))))
+    // no shard guard to consult: reading it as zero folded shards would
+    // let any replay double-fold, so every entry point refuses it
+    Seq[() => Any](
+      () => FingerprintStore.foldedShards(spark, p),
+      () => FingerprintStore.read(spark, p),
+      () => FingerprintStore.fold(spark, p, "s9", batch(5L to 6L, "web"), keys, cols)
+    ).foreach { op =>
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(p), e.getMessage)
+    }
   }
 }
