@@ -141,6 +141,9 @@ object GraftCopy {
       byFile: Boolean = false,
       dstTable: String = ""): Int = {
     val dTable = if (dstTable.nonEmpty) dstTable else table
+    // the source may have changed since an earlier reconcile in this
+    // session: list it afresh rather than through the load cache
+    Tables.invalidate(srcDir)
     val src = Tables.load(spark, srcDir, table)
     def srcKeyed = if (byFile) src.withColumn("__part", fileKey)
                    else src.withColumn("__part", expr(partKey))
@@ -166,7 +169,7 @@ object GraftCopy {
       // info can only report the mismatch in layout
       if (execute) {
         srcKeyed.write.partitionBy("__part").mode("overwrite").parquet(s"$dstDir/$dTable")
-        if (flatLayout) new java.io.File(dstPath).delete()
+        if (flatLayout) deleteFlat(spark, dstPath)
         println(s"[$Name] migrated destination to per-file layout at $dstDir/$dTable")
         return Status.Ok
       } else {
@@ -213,15 +216,29 @@ object GraftCopy {
         // per-partition repair path applies on every later run.
         val newPath = s"$dstDir/$dTable"
         srcForWrite.write.partitionBy("__part").mode("overwrite").parquet(newPath)
-        new java.io.File(dstPath).delete()
+        deleteFlat(spark, dstPath)
         println(s"[$Name] migrated flat destination to partitioned layout at $newPath")
         Status.Ok
       } else {
-        val repaired = Reconciler.repair(spark, verdicts, srcForWrite, "__part", dstPath, conf)
+        // the verdict rows are already collected: hand repair a local
+        // relation of them, so its filter + collect runs no Spark job
+        // (the lazy `verdicts` plan would scan and hash both sides again)
+        val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), verdicts.schema)
+        val repaired = Reconciler.repair(spark, collected, srcForWrite, "__part", dstPath, conf)
         println(s"[$Name] repaired partitions: ${repaired.mkString(", ")}")
         Status.Ok
       }
     } else if (dirty) Status.HashFail
     else Status.Ok
+  }
+
+  /** Remove a migrated flat destination, a single file or a directory of
+    * part files. A failed delete throws: a flat copy left behind would be
+    * read, and migrated again, by every later run. */
+  private def deleteFlat(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.delete(p, true))
+      throw new java.io.IOException(s"could not delete the migrated flat destination $path")
   }
 }

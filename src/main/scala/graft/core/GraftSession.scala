@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   *    replace any hand-tuned partition counts.
   *  - `shuffle.partitions` here is only the local-mode floor; on a real
-  *    cluster AQE's advisory size drives the effective number.
+  *    cluster AQE's advisory size drives the effective number. The
+  *    partition-discovery (listing) parallelism is pinned to the same
+  *    local core count.
   */
 object GraftSession {
 
@@ -63,6 +65,12 @@ object GraftSession {
         .master(s"local[$cores]")
         .appName("graft")
         .config("spark.sql.shuffle.partitions", cores.toString)
+        // a read of more than 32 partition dirs lists them in a Spark job
+        // with one task per dir (up to 10,000) by default; one per core
+        // costs the same listing for a fraction of the task launches. Set
+        // here, not in `tune`: a cluster session may report a low
+        // parallelism before its executors register.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cores.toString)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

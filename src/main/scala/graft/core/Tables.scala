@@ -23,7 +23,8 @@ object Tables {
   // driver job per spark.read.parquet; a 40-query batch re-resolving the
   // same 10 tables pays it dozens of times. Safe for the immutable fixture
   // dirs this loads; a caller that mutates a cached dir (repair flows read
-  // dest paths via spark.read directly, not here) must invalidate() first.
+  // dest paths via spark.read directly, not here) must invalidate() first,
+  // as must one whose dir may change under it (GraftCopy's source).
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 

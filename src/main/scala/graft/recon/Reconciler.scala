@@ -113,7 +113,17 @@ object Reconciler {
     * overwrite* — only the partitions with verdict copy/delete_recopy are
     * rewritten from the (cast) source; untouched partitions' files are left
     * in place. This is atomic per partition directory and shuffles only the
-    * affected partitions' data.
+    * affected partitions' data. Dynamic mode is a per-write option; the
+    * caller's session conf is left as it was.
+    *
+    * Passes over the data: `verdictDf` is only filtered and collected
+    * here, so a caller that already collected its verdicts passes them
+    * as a local relation (`spark.createDataFrame(rows, schema)`, as
+    * `GraftCopy --sync` does) and this collect runs no Spark job; a sync
+    * is then one verdict pass over both sides plus one write of the
+    * dirty partitions (a source scan filtered to them; one per partition
+    * with `parallelism` > 1). Passed the lazy verdict plan instead, the
+    * collect scans and hashes both sides a second time.
     *
     * The reference treats `skip_delete` and `skip_reimport` independently
     * on a delete_recopy partition (`/root/reference/copy/copy.go:248-257`:
@@ -126,6 +136,8 @@ object Reconciler {
     *                     directory, leaving the partition empty
     *   - both set      → partition untouched
     *
+    * @param verdictDf     rows of [[verdicts]] (a local relation of the
+    *                      collected rows, or the lazy plan itself)
     * @param partKeyAlias  name of the partition column in the verdict DF /
     *                      the dest layout (dest is partitioned by it)
     * @param srcWithKey    source rows with the partition key materialised as
@@ -151,11 +163,11 @@ object Reconciler {
     val append = if (conf.skipDelete && !conf.skipReimport) recopyParts else Nil
     val deleteOnly = if (!conf.skipDelete && conf.skipReimport) recopyParts else Nil
 
-    def write(parts: Seq[Any], mode: String): Unit = if (parts.nonEmpty) {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    def write(parts: Seq[Any], mode: String): Unit = if (parts.nonEmpty)
       srcWithKey.filter(keyPred(partKeyAlias, parts))
-        .write.partitionBy(partKeyAlias).mode(mode).parquet(dstPath)
-    }
+        .write.partitionBy(partKeyAlias).mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(dstPath)
     def partDirName(v: Any): String = {
       val dir = if (v == null) "__HIVE_DEFAULT_PARTITION__"
       else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils

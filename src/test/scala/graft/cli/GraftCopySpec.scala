@@ -1,9 +1,41 @@
 package graft.cli
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 import graft.cli.GraftCopy._
 
 class GraftCopySpec extends SparkSpec {
+
+  private val Key = "date_format(l_shipdate, 'yyyyMM')"
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Run `f`, counting the file scans of every query it executes by the
+    * root path each scan reads (a path-only form, scheme dropped). */
+  private def scansByRoot[T](f: => T): (T, Map[String, Int]) = {
+    val counts = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Plans.collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .flatMap(_.relation.location.rootPaths)
+          .foreach(p => counts.synchronized(counts(p.toUri.getPath) += 1))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val result =
+      try { val r = f; ListenerBus.drain(spark.sparkContext); r }
+      finally spark.listenerManager.unregister(listener)
+    (result, counts.synchronized(counts.toMap))
+  }
+
+  private def partDirs(table: String): Seq[java.io.File] =
+    new java.io.File(table).listFiles().filter(_.getName.startsWith("__part=")).sortBy(_.getName).toSeq
 
   test("parseMode: exactly one mode flag (main.go:25-43)") {
     assert(parseMode(Seq("--info", "a", "b")) == Right(Info))
@@ -156,5 +188,96 @@ class GraftCopySpec extends SparkSpec {
     // 4. sync repairs, then clean again
     assert(reconcile(spark, sf001, dst, "lineitem", key, execute = true) == Status.Ok)
     assert(reconcile(spark, sf001, dst, "lineitem", key, execute = false) == Status.Ok)
+  }
+
+  test("sync reads each side once for its verdicts; repair reuses the collected rows") {
+    val dst = tmpDir("graftcopy-scans")
+    val srcRoot = s"$sf001/lineitem.parquet"
+    val dstRoot = s"$dst/lineitem"
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = true) == Status.Ok)
+    // damage: one partition missing, one with three extra rows
+    val Seq(missing, divergent) = partDirs(dstRoot).take(2)
+    missing.listFiles().foreach(_.delete()); missing.delete()
+    spark.read.parquet(srcRoot).filter(org.apache.spark.sql.functions.expr(Key) ===
+        divergent.getName.stripPrefix("__part=")).limit(3)
+      .write.mode("append").parquet(divergent.getPath)
+    def scans(execute: Boolean) =
+      scansByRoot(reconcile(spark, sf001, dst, "lineitem", Key, execute))
+    val (infoStatus, infoScans) = scans(execute = false)
+    assert(infoStatus == Status.HashFail)
+    assert(infoScans == Map(srcRoot -> 1, dstRoot -> 1), infoScans)
+    // sync: the verdict pass reads each side once, the write reads the source
+    val (syncStatus, syncScans) = scans(execute = true)
+    assert(syncStatus == Status.Ok)
+    assert(syncScans == Map(srcRoot -> 2, dstRoot -> 1), syncScans)
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = false) == Status.Ok)
+  }
+
+  test("GraftSession.local(n) lists partition dirs with at most n tasks") {
+    val n = 4 // SparkSpec.session is GraftSession.local(4)
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism") == n.toString)
+    val dir = s"${tmpDir("graftcopy-listing")}/t"
+    val parts = 40 // above the 32-path parallel-listing threshold
+    spark.range(parts).withColumn("p", org.apache.spark.sql.functions.col("id"))
+      .write.partitionBy("p").parquet(dir)
+    val listingTasks = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files")))
+          listingTasks.synchronized(listingTasks ++= j.stageInfos.map(_.numTasks))
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(spark.read.parquet(dir).count() == parts)
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(listingTasks.nonEmpty, "no parallel listing job")
+    assert(listingTasks.forall(_ <= n), listingTasks)
+  }
+
+  test("repair overwrites per write: the session conf stays static, skipped files stay put") {
+    val dst = tmpDir("graftcopy-static")
+    val dstRoot = s"$dst/lineitem"
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = true) == Status.Ok)
+    val victim +: rest = partDirs(dstRoot)
+    victim.listFiles().foreach(_.delete())
+    val untouched = rest.flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified()).toMap
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(mode)
+    spark.conf.set(mode, "static")
+    try {
+      assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = true) == Status.Ok)
+      assert(spark.conf.get(mode) == "static")
+    } finally spark.conf.set(mode, prev)
+    val after = rest.flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified()).toMap
+    assert(after == untouched, "a skipped partition's files were rewritten")
+    assert(victim.listFiles().exists(_.getName.endsWith(".parquet")), "victim partition repaired")
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = false) == Status.Ok)
+  }
+
+  test("directory-form flat destination: sync migrates it and removes the flat dir") {
+    val dst = tmpDir("graftcopy-flatdir")
+    // a stale flat copy: part files missing every seventh order
+    spark.read.parquet(s"$sf001/lineitem.parquet").filter("l_orderkey % 7 != 0").repartition(3)
+      .write.mode("overwrite").parquet(s"$dst/lineitem.parquet")
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = false) == Status.HashFail)
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = true) == Status.Ok)
+    assert(!new java.io.File(s"$dst/lineitem.parquet").exists, "flat copy left behind")
+    assert(new java.io.File(s"$dst/lineitem").isDirectory)
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = false) == Status.Ok)
+  }
+
+  test("the source is listed afresh on every reconcile") {
+    val src = tmpDir("graftcopy-grow-src")
+    val dst = tmpDir("graftcopy-grow-dst")
+    val li = spark.read.parquet(s"$sf001/lineitem.parquet")
+    li.repartition(2).write.parquet(s"$src/lineitem.parquet")
+    assert(reconcile(spark, src, dst, "lineitem", Key, execute = true) == Status.Ok)
+    assert(reconcile(spark, src, dst, "lineitem", Key, execute = false) == Status.Ok)
+    // the source grows by one part file within the same session
+    li.limit(5).write.mode("append").parquet(s"$src/lineitem.parquet")
+    assert(reconcile(spark, src, dst, "lineitem", Key, execute = false) == Status.HashFail)
   }
 }
