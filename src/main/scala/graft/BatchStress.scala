@@ -12,7 +12,7 @@ import graft.sim.Similarity
   * record covered BM25 only. This main runs BM25, IVF, and hybrid-RRF
   * batched probes at BOTH 10³ and 10⁴ queries in one dedicated JVM
   * (the full-catalog bench JVM cannot host the 10k aggregation state —
-  * see the q152 phased comment), with:
+  * see the comment on the q152 gate in PipelineQueries), with:
   *
   *  - the no-BNLJ / no-cartesian PLAN GUARD asserted on every probe's
   *    executed plan — the distributed equi-join assignment must survive

@@ -25,10 +25,4 @@ object SparkEntry {
     ReferenceQueries.oracles ++ PipelineQueries.oracles ++ ExtendedQueries.oracles ++
       CurationQueries.oracles ++ ScaleQueries.oracles ++ GraphQueries.oracles ++
       BehaviorQueries.oracles ++ RollupQueries.oracles
-
-  /** Per-phase timers (e.g. index build vs probe) for catalog queries
-    * whose single number hides which phase moved — [[Bench]] records
-    * these alongside the totals. */
-  def phased: Map[String, (SparkSession, String) => Map[String, Double]] =
-    PipelineQueries.phased
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{Span, Tables}
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.sim.Similarity
@@ -418,17 +418,19 @@ object PipelineQueries {
         .collect().map(_.getInt(0)).sorted.take(2) // ≤|labels| rows
       val idxDir = graft.core.Fs.scratchDir("graft_ivf_filtered")
       val viaIndex = try {
-        Similarity.buildIvfIndex(emb.filter(col("label") === sampled.head),
-          "vec_id", "embedding", idxDir.toString, nCentroids = 4,
-          shardId = s"label_${sampled.head}")
-        sampled.tail.foreach(l => Similarity.appendIvfIndex(
-          emb.filter(col("label") === l), "vec_id", "embedding",
-          idxDir.toString, s"label_$l"))
-        sampled.toSeq.map { l =>
+        Span("build") {
+          Similarity.buildIvfIndex(emb.filter(col("label") === sampled.head),
+            "vec_id", "embedding", idxDir.toString, nCentroids = 4,
+            shardId = s"label_${sampled.head}")
+          sampled.tail.foreach(l => Similarity.appendIvfIndex(
+            emb.filter(col("label") === l), "vec_id", "embedding",
+            idxDir.toString, s"label_$l"))
+        }
+        Span("probe")(sampled.toSeq.map { l =>
           Similarity.queryIvfIndex(s, idxDir.toString,
             q.filter(col("label") === l), "vec_id", "embedding",
             k = 10, nProbe = 4, shardFilter = Set(s"label_$l"))
-        }.reduce(_ unionAll _).localCheckpoint(true)
+        }.reduce(_ unionAll _).localCheckpoint(true))
       } finally graft.core.Fs.deleteRecursively(idxDir)
       val qLabels = q.select(col("vec_id").as("query_id"), col("label"))
       exact
@@ -458,11 +460,11 @@ object PipelineQueries {
       // — the q113 overlap, max not sum
       val (viaIndex, direct) = graft.core.Par.both(
         try {
-          Similarity.buildIvfIndex(emb, "vec_id", "embedding", idxDir.toString,
-            nCentroids = 16)
-          Similarity.queryIvfIndex(s, idxDir.toString, q,
+          Span("build")(Similarity.buildIvfIndex(emb, "vec_id", "embedding",
+            idxDir.toString, nCentroids = 16))
+          Span("probe")(Similarity.queryIvfIndex(s, idxDir.toString, q,
               "vec_id", "embedding", k = 10, nProbe = 4)
-            .localCheckpoint(true)
+            .localCheckpoint(true))
         } finally graft.core.Fs.deleteRecursively(idxDir),
         Similarity.ivfKnn(q, emb, "vec_id", "embedding",
             k = 10, nCentroids = 16, nProbe = 4)
@@ -529,11 +531,12 @@ object PipelineQueries {
         // buckets sized to the gate corpus (the 100 TB deployment knob is
         // vocabulary-hash fanout; 64 dirs for a <1 MB corpus is pure
         // small-file overhead — results are bucket-count-invariant, spec'd)
-        graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
-          idxDir.toString, buckets = 8)
-        graft.text.Retrieval.queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
+        Span("build")(graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
+          idxDir.toString, buckets = 8))
+        Span("probe")(graft.text.Retrieval
+          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
           .orderBy("query_id", "rank")
-          .localCheckpoint(true) // materialise before the index dir dies
+          .localCheckpoint(true)) // materialise before the index dir dies
       } finally graft.core.Fs.deleteRecursively(idxDir)
     }),
 
@@ -564,15 +567,16 @@ object PipelineQueries {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         try {
           graft.core.Par.both(
-            graft.text.Retrieval.buildBm25Index(shard(0), "text", "doc_id",
-              idxDir.toString, buckets = 8, shardId = "shard0"),
+            Span("build")(graft.text.Retrieval.buildBm25Index(shard(0), "text",
+              "doc_id", idxDir.toString, buckets = 8, shardId = "shard0")),
             tf1.count()) // materialise the persist ∥ the build
-          graft.text.Retrieval.appendBm25Index(shard(1), "text", "doc_id",
-            idxDir.toString, "shard1", preTf = tf1)
+          Span("append")(graft.text.Retrieval.appendBm25Index(shard(1), "text",
+            "doc_id", idxDir.toString, "shard1", preTf = tf1))
         } finally tf1.unpersist()
-        graft.text.Retrieval.queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
+        Span("probe")(graft.text.Retrieval
+          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
           .orderBy("query_id", "rank")
-          .localCheckpoint(true) // materialise before the index dir dies
+          .localCheckpoint(true)) // materialise before the index dir dies
       } finally graft.core.Fs.deleteRecursively(idxDir)
     }),
 
@@ -585,12 +589,12 @@ object PipelineQueries {
       val docs = Tables.load(s, dir, "documents")
       val idxDir = graft.core.Fs.scratchDir("graft_bm25_blockmax")
       try {
-        graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
-          idxDir.toString, buckets = 8)
-        graft.text.Retrieval.queryBm25Index(s, idxDir.toString, bm25QueryDf(s),
-            k = 5, blockMax = true)
+        Span("build")(graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
+          idxDir.toString, buckets = 8))
+        Span("probe")(graft.text.Retrieval
+          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5, blockMax = true)
           .orderBy("query_id", "rank")
-          .localCheckpoint(true) // materialise before the index dir dies
+          .localCheckpoint(true)) // materialise before the index dir dies
       } finally graft.core.Fs.deleteRecursively(idxDir)
     }),
 
@@ -669,10 +673,11 @@ object PipelineQueries {
       val q = emb.filter(col("vec_id") < 8)
       val shortlist = math.max(100L, emb.count() / 20).toInt
       // codebook training collects eagerly at construction; the exact
-      // baseline shares no state with it — overlapped, max not sum
+      // baseline shares no state with it — overlapped, max not sum. The
+      // probe itself is lazy and runs in the caller's action.
       val (approx, exact) = graft.core.Par.both(
-        Similarity.pqKnnRerank(q, emb, "vec_id", "embedding", k = 10,
-          shortlist = shortlist, m = 8, kCodes = 32, lloydIters = 1),
+        Span("train")(Similarity.pqKnnRerank(q, emb, "vec_id", "embedding",
+          k = 10, shortlist = shortlist, m = 8, kCodes = 32, lloydIters = 1)),
         Similarity.bruteForceKnn(q, emb, "vec_id", "embedding", 10)
           .localCheckpoint(true))
       recallInvariant(approx, exact, minHits = 6)
@@ -695,14 +700,14 @@ object PipelineQueries {
       val q = emb.filter(col("vec_id") < 8)
       val idxDir = graft.core.Fs.scratchDir("graft_pq_index")
       val (viaIndex, cb) = try {
-        Similarity.buildPqIndex(emb, "vec_id", "embedding", idxDir.toString,
-          m = 8, kCodes = 32, lloydIters = 1)
+        Span("build")(Similarity.buildPqIndex(emb, "vec_id", "embedding",
+          idxDir.toString, m = 8, kCodes = 32, lloydIters = 1))
         // probe and stored-codebook read are independent materialisations
         // of the committed index — overlapped, max not sum
         graft.core.Par.both(
-          Similarity
+          Span("probe")(Similarity
             .queryPqIndex(s, idxDir.toString, q, "vec_id", "embedding", k = 10)
-            .localCheckpoint(true), // materialise before the index dir dies
+            .localCheckpoint(true)), // materialise before the index dir dies
           s.read.parquet(s"$idxDir/codebooks").localCheckpoint(true))
       } finally graft.core.Fs.deleteRecursively(idxDir)
       val direct = Similarity.pqKnn(q, emb, "vec_id", "embedding",
@@ -736,9 +741,9 @@ object PipelineQueries {
       // centroid + codebook training collects eagerly at construction;
       // the exact baseline is independent — overlapped (q102 discipline)
       val (approx, exact) = graft.core.Par.both(
-        Similarity.ivfPqKnn(q, emb, "vec_id", "embedding", k = 10,
+        Span("train")(Similarity.ivfPqKnn(q, emb, "vec_id", "embedding", k = 10,
           nCentroids = 16, nProbe = 8, shortlist = shortlist,
-          m = 8, kCodes = 32, lloydIters = 1),
+          m = 8, kCodes = 32, lloydIters = 1)),
         Similarity.bruteForceKnn(q, emb, "vec_id", "embedding", 10)
           .localCheckpoint(true))
       recallInvariant(approx, exact, minHits = 2)
@@ -763,20 +768,22 @@ object PipelineQueries {
       def shard(i: Int) = emb.filter(pmod(col("vec_id"), lit(3)) === i)
       val idxDir = graft.core.Fs.scratchDir("graft_ivf_append")
       val (manyShards, cents) = try {
-        Similarity.buildIvfIndex(shard(0), "vec_id", "embedding",
-          idxDir.toString, nCentroids = 16)
-        Similarity.appendIvfIndex(shard(1), "vec_id", "embedding",
-          idxDir.toString, "s1")
-        Similarity.appendIvfIndex(shard(2), "vec_id", "embedding",
-          idxDir.toString, "s2")
+        Span("build")(Similarity.buildIvfIndex(shard(0), "vec_id", "embedding",
+          idxDir.toString, nCentroids = 16))
+        Span("append") {
+          Similarity.appendIvfIndex(shard(1), "vec_id", "embedding",
+            idxDir.toString, "s1")
+          Similarity.appendIvfIndex(shard(2), "vec_id", "embedding",
+            idxDir.toString, "s2")
+        }
         // probe and frozen-centroid read are independent materialisations
         // of the committed index (parquet floats round-trip bit-exactly,
         // so "same centroids" for the direct scan below is exact, not
         // approximate) — overlapped, max not sum
         graft.core.Par.both(
-          Similarity.queryIvfIndex(s, idxDir.toString, q,
+          Span("probe")(Similarity.queryIvfIndex(s, idxDir.toString, q,
               "vec_id", "embedding", k = 10, nProbe = 4)
-            .localCheckpoint(true), // materialise before the index dir dies
+            .localCheckpoint(true)), // materialise before the index dir dies
           s.read.parquet(s"$idxDir/centroids").localCheckpoint(true))
       } finally graft.core.Fs.deleteRecursively(idxDir)
       // independent verification path: an in-memory IVF scan of the FULL
@@ -821,17 +828,20 @@ object PipelineQueries {
       // construction — so the two legs overlap, max not sum
       val (viaRebalanced, direct) = graft.core.Par.both(
         try {
-          Similarity.buildIvfIndex(shard(0), "vec_id", "embedding",
-            idxDir.toString, nCentroids = 16)
-          // one append suffices here: the index must be MULTI-shard with
-          // centroids trained on a strict subset (shard 0) so the rebalance
-          // genuinely moves them; N-append decomposition is q101/QuantizedSpec
-          Similarity.appendIvfIndex(shard(1).unionByName(shard(2)),
-            "vec_id", "embedding", idxDir.toString, "rest")
-          Similarity.rebalanceIvfIndex(s, idxDir.toString, nCentroids = 16)
-          Similarity.queryIvfIndex(s, idxDir.toString, q,
+          Span("ingest") {
+            Similarity.buildIvfIndex(shard(0), "vec_id", "embedding",
+              idxDir.toString, nCentroids = 16)
+            // one append suffices here: the index must be MULTI-shard with
+            // centroids trained on a strict subset (shard 0) so the rebalance
+            // genuinely moves them; N-append decomposition is q101/QuantizedSpec
+            Similarity.appendIvfIndex(shard(1).unionByName(shard(2)),
+              "vec_id", "embedding", idxDir.toString, "rest")
+          }
+          Span("rebalance")(
+            Similarity.rebalanceIvfIndex(s, idxDir.toString, nCentroids = 16))
+          Span("probe")(Similarity.queryIvfIndex(s, idxDir.toString, q,
               "vec_id", "embedding", k = 10, nProbe = 4)
-            .localCheckpoint(true) // materialise before the index dir dies
+            .localCheckpoint(true)) // materialise before the index dir dies
         } finally graft.core.Fs.deleteRecursively(idxDir),
         Similarity.ivfKnn(q, emb, "vec_id", "embedding",
             k = 10, nCentroids = 16, nProbe = 4)
@@ -1048,16 +1058,28 @@ object PipelineQueries {
     // spectrum (rare 'dup' through ~80%-df stopword-likes), so the DuckDB
     // oracle reproduces the exact query set and gates all 1000 rankings
     // bit-for-bit — the same score algebra as q91/q95/q97/q112.
+    //
+    // The 10⁴-query point of the batch-scaling claim is recorded by a
+    // DEDICATED JVM (graft.BatchStress; the round-9 record `runMain
+    // graft.Bench q152` — 24.8 s at sf0.1/local[32] — is tracked in bench/,
+    // and SCALING.md "round-9 continued-2" has the profile). It
+    // deliberately does NOT run inside the full-catalog bench JVM: after
+    // 160 queries × 4 passes the 4 GiB heap cannot also host 32 concurrent
+    // ~2M-group aggregation tasks (UNABLE_TO_ACQUIRE_MEMORY even with the
+    // SQL cache cleared and persistent RDDs dropped) — and the host's
+    // >8 GiB-heap freeze pathology rules out just sizing the heap up. A
+    // deployment sizes the batch stage's executors; this JVM is sized for
+    // the gate.
     "q152_bm25_batch" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val idxDir = graft.core.Fs.scratchDir("graft_bm25_batch")
       try {
-        graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
-          idxDir.toString, buckets = 8)
-        graft.text.Retrieval.queryBm25IndexBatched(s, idxDir.toString,
-            batchQueryDf(s), k = 5)
+        Span("build")(graft.text.Retrieval.buildBm25Index(docs, "text", "doc_id",
+          idxDir.toString, buckets = 8))
+        Span("probe_1k_batch")(graft.text.Retrieval
+          .queryBm25IndexBatched(s, idxDir.toString, batchQueryDf(s), k = 5)
           .orderBy("query_id", "rank")
-          .localCheckpoint(true) // materialise before the index dir dies
+          .localCheckpoint(true)) // materialise before the index dir dies
       } finally graft.core.Fs.deleteRecursively(idxDir)
     }),
 
@@ -1133,258 +1155,6 @@ object PipelineQueries {
         .orderBy("query_id")
     })
   )
-
-  /** Phase-split timers for the persisted-index catalog queries, consumed
-    * by [[graft.Bench]] (round-5 verdict #8). The catalog entries time a
-    * full build+probe round trip — correct for the GATE (the whole index
-    * path stays oracle-checked), but it hides which phase moved when the
-    * total regresses, and the USER-facing per-query number is the probe
-    * alone (build amortises across query batches; that is the entire point
-    * of a persisted index). Each timer runs the same build and probe the
-    * catalog query runs, reporting seconds per phase. */
-  val phased: Map[String, (SparkSession, String) => Map[String, Double]] = Map(
-    // q129's single number folds the sampled index build into the gate;
-    // the split shows the user-facing filtered probe apart from it
-    "q129_filtered_knn" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val sampled = q.select("label").distinct()
-        .collect().map(_.getInt(0)).sorted.take(2)
-      val idxDir = graft.core.Fs.scratchDir("graft_filtered_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed {
-          Similarity.buildIvfIndex(emb.filter(col("label") === sampled.head),
-            "vec_id", "embedding", idxDir.toString, nCentroids = 4,
-            shardId = s"label_${sampled.head}")
-          sampled.tail.foreach(l => Similarity.appendIvfIndex(
-            emb.filter(col("label") === l), "vec_id", "embedding",
-            idxDir.toString, s"label_$l"))
-        }
-        val probe = timed(sampled.toSeq.map { l =>
-          Similarity.queryIvfIndex(s, idxDir.toString,
-            q.filter(col("label") === l), "vec_id", "embedding",
-            k = 10, nProbe = 4, shardFilter = Set(s"label_$l"))
-        }.reduce(_ unionAll _)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q112's gate total is dominated by the index build it shares with
-    // q95 — the split shows the BLOCK-MAX PROBE itself stays sub-second
-    "q112_bm25_blockmax" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val idxDir = graft.core.Fs.scratchDir("graft_blockmax_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(graft.text.Retrieval.buildBm25Index(
-          docs, "text", "doc_id", idxDir.toString))
-        val probe = timed(graft.text.Retrieval
-          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5,
-            blockMax = true)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q113's gate folds ingest + rebalance + probe + the direct-path
-    // parity comparator into one number — the split shows the REBALANCE
-    // maintenance cost apart from the ingest and the sub-second probe
-    "q113_ivf_rebalance" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val idxDir = graft.core.Fs.scratchDir("graft_rebalance_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def shard(i: Int) = emb.filter(pmod(col("vec_id"), lit(3)) === i)
-        val ingest = timed {
-          Similarity.buildIvfIndex(shard(0), "vec_id", "embedding",
-            idxDir.toString, nCentroids = 16)
-          Similarity.appendIvfIndex(shard(1), "vec_id", "embedding", idxDir.toString, "s1")
-          Similarity.appendIvfIndex(shard(2), "vec_id", "embedding", idxDir.toString, "s2")
-        }
-        val rebalance = timed(
-          Similarity.rebalanceIvfIndex(s, idxDir.toString, nCentroids = 16))
-        val probe = timed(Similarity
-          .queryIvfIndex(s, idxDir.toString, q, "vec_id", "embedding",
-            k = 10, nProbe = 4)
-          .write.format("noop").mode("overwrite").save())
-        Map("ingest" -> ingest, "rebalance" -> rebalance, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q152's gate total folds the index build in; the split isolates the
-    // user-facing number — the 1000-query BATCHED probe itself
-    "q152_bm25_batch" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val idxDir = graft.core.Fs.scratchDir("graft_bm25_batch_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(graft.text.Retrieval.buildBm25Index(
-          docs, "text", "doc_id", idxDir.toString, buckets = 8))
-        val probe = timed(graft.text.Retrieval
-          .queryBm25IndexBatched(s, idxDir.toString, batchQueryDf(s), k = 5)
-          .write.format("noop").mode("overwrite").save())
-        // The 10⁴-query point of the batch-scaling claim is recorded by a
-        // DEDICATED bench run (`runMain graft.Bench q152` — 24.8 s at
-        // sf0.1/local[32], tracked in bench/; SCALING.md "round-9
-        // continued-2" has the profile). It deliberately does NOT run
-        // inside the full-catalog bench JVM: after 160 queries × 4
-        // passes the 4 GiB heap cannot also host 32 concurrent
-        // ~2M-group aggregation tasks (UNABLE_TO_ACQUIRE_MEMORY even
-        // with the SQL cache cleared and persistent RDDs dropped) — and
-        // the host's >8 GiB-heap freeze pathology rules out just sizing
-        // the heap up. A deployment sizes the batch stage's executors;
-        // this JVM is sized for the gate.
-        Map("build" -> build, "probe_1k_batch" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    "q95_bm25_index" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val idxDir = graft.core.Fs.scratchDir("graft_bm25_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(graft.text.Retrieval.buildBm25Index(
-          docs, "text", "doc_id", idxDir.toString))
-        val probe = timed(graft.text.Retrieval
-          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    "q83_ivf_index" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val idxDir = graft.core.Fs.scratchDir("graft_ivf_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(Similarity.buildIvfIndex(
-          emb, "vec_id", "embedding", idxDir.toString, nCentroids = 16))
-        val probe = timed(Similarity
-          .queryIvfIndex(s, idxDir.toString, q, "vec_id", "embedding",
-            k = 10, nProbe = 4)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q97 times a build plus two appends plus the probe in its gate form
-    // (6.2 s at sf0.1, the catalog's most expensive entry) — the phased
-    // record shows which of the three maintenance costs moved
-    "q97_bm25_append" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      def shard(i: Int) = docs.filter(
-        col("doc_id").isNull && lit(i) === 0 || pmod(col("doc_id"), lit(2)) === i)
-      val idxDir = graft.core.Fs.scratchDir("graft_bm25_append_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(graft.text.Retrieval.buildBm25Index(
-          shard(0), "text", "doc_id", idxDir.toString, shardId = "shard0"))
-        val append = timed {
-          graft.text.Retrieval.appendBm25Index(shard(1), "text", "doc_id",
-            idxDir.toString, "shard1")
-        }
-        val probe = timed(graft.text.Retrieval
-          .queryBm25Index(s, idxDir.toString, bm25QueryDf(s), k = 5)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "append" -> append, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q105's gate runs the persisted path AND the direct path (sharing
-    // the index's codebooks) for the parity check; user-facing costs
-    // are one build and one ADC probe
-    "q105_pq_index" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val idxDir = graft.core.Fs.scratchDir("graft_pq_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(Similarity.buildPqIndex(
-          emb, "vec_id", "embedding", idxDir.toString,
-          m = 8, kCodes = 32, lloydIters = 1))
-        val probe = timed(Similarity
-          .queryPqIndex(s, idxDir.toString, q, "vec_id", "embedding", k = 10)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }),
-    // q102/q104 are train + encode + scan + rerank in one number; the
-    // split shows whether codebook TRAINING (amortisable across batches —
-    // pqKnn takes a precomputed codebook for exactly that) or the PROBE
-    // leg (encode + ADC scan + rerank, the per-batch cost) moved
-    "q102_pq_knn" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val shortlist = math.max(100L, emb.count() / 20).toInt
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      var cb: DataFrame = null
-      val train = timed {
-        cb = Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
-          m = 8, kCodes = 32, lloydIters = 1).localCheckpoint(true)
-      }
-      val probe = timed(Similarity.pqKnnRerank(q, emb, "vec_id", "embedding",
-          k = 10, shortlist = shortlist, m = 8, kCodes = 32,
-          codebooks = Some(cb))
-        .write.format("noop").mode("overwrite").save())
-      Map("train" -> train, "probe" -> probe)
-    }),
-    "q104_ivfpq_knn" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val shortlist = math.max(100L, emb.count() / 20).toInt
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      var cb: DataFrame = null
-      val train = timed {
-        cb = Similarity.trainPqCodebooks(emb, "vec_id", "embedding",
-          m = 8, kCodes = 32, lloydIters = 1).localCheckpoint(true)
-      }
-      val probe = timed(Similarity.ivfPqKnn(q, emb, "vec_id", "embedding",
-          k = 10, nCentroids = 16, nProbe = 8, shortlist = shortlist,
-          m = 8, kCodes = 32, codebooks = Some(cb))
-        .write.format("noop").mode("overwrite").save())
-      Map("train" -> train, "probe" -> probe)
-    }),
-    // q101's gate form runs one 3-shard ingest + probe plus the direct
-    // verification scan; the user-facing costs are one build, one
-    // O(shard) append, one probe
-    "q101_ivf_append" -> ((s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val idxDir = graft.core.Fs.scratchDir("graft_ivf_append_phase")
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val build = timed(Similarity.buildIvfIndex(
-          emb.filter(pmod(col("vec_id"), lit(3)) === 0),
-          "vec_id", "embedding", idxDir.toString, nCentroids = 16))
-        val append = timed(Similarity.appendIvfIndex(
-          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-          "vec_id", "embedding", idxDir.toString, "rest"))
-        val probe = timed(Similarity
-          .queryIvfIndex(s, idxDir.toString, q, "vec_id", "embedding",
-            k = 10, nProbe = 4)
-          .write.format("noop").mode("overwrite").save())
-        Map("build" -> build, "append" -> append, "probe" -> probe)
-      } finally graft.core.Fs.deleteRecursively(idxDir)
-    }))
 
   /** The q91 fixed query set — (query_id, term), mirrored verbatim by the
     * oracle's VALUES list. Terms must stay single whitespace-free tokens. */
