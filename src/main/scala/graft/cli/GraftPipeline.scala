@@ -146,7 +146,9 @@ import graft.text.TextAnalysis
   *  - `data_card` — post-write per-source corpus report (q107's shape:
   *    docs/chars/tokens, language spread, quality mass, Gopher keep-rate)
   *    written to `data_card.path` (default `<output.path>_card`) — the
-  *    documentation artifact shipped beside the shards
+  *    documentation artifact shipped beside the shards; re-derived only
+  *    when its recorded output fingerprint differs from the committed
+  *    output's
   *  - `sample` — deterministic hash sample (ClickHouse SAMPLE clause,
   *    q157's operator): keep rows whose `sample.key_column` (default
   *    doc_id) hashes into the `sample.fraction`-wide bucket window at
@@ -718,7 +720,9 @@ object GraftPipeline {
     // incremental NEAR-dup dedup (the q100 primitive): drop docs with a
     // verified shingle-Jaccard >= neardup_min_jaccard near-dup among the
     // docs of prior shards. Store update is post-write in run(), same
-    // at-least-once protocol as dedup_seen.
+    // at-least-once protocol as dedup_seen; run() composes this step
+    // through filterNewWithSigs instead, so the fold reuses the probe's
+    // signatures (planWithProbe).
     "dedup_neardup" -> ((c, df) =>
       graft.dedup.NearDupStore.filterNew(df.sparkSession, c.nearDupStorePath,
         df, "text", "doc_id", c.nearDupMinJaccard)),
@@ -1032,9 +1036,22 @@ object GraftPipeline {
 
   /** Compose the configured steps over the input table (lazy — one plan). */
   def plan(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    cfg.steps.foldLeft(graft.core.Tables.load(spark, cfg.inputDir, cfg.table)) {
-      (df, s) => Steps(s)(cfg, df)
+    planWithProbe(spark, cfg)._1
+
+  /** [[plan]] plus the batch signatures the `dedup_neardup` probe computed
+    * ([[graft.dedup.NearDupStore.filterNewWithSigs]]), for the post-write
+    * fold to reuse. None without the step. */
+  private def planWithProbe(spark: SparkSession,
+      cfg: PipelineConfig): (DataFrame, Option[DataFrame]) = {
+    val in = graft.core.Tables.load(spark, cfg.inputDir, cfg.table)
+    cfg.steps.foldLeft((in, Option.empty[DataFrame])) {
+      case ((df, _), "dedup_neardup") =>
+        val (kept, sigs) = graft.dedup.NearDupStore.filterNewWithSigs(spark,
+          cfg.nearDupStorePath, df, "text", "doc_id", cfg.nearDupMinJaccard)
+        (kept, Some(sigs))
+      case ((df, sigs), s) => (Steps(s)(cfg, df), sigs)
     }
+  }
 
   /** Run the pipeline and write split-partitioned shards. Returns
     * (rows in, rows out).
@@ -1051,7 +1068,14 @@ object GraftPipeline {
     *     recomputes the identical output and the fingerprint fold skips;
     *     a crash after it short-circuits at step 1. Either way the stores
     *     never record rows the output does not hold, and no committed
-    *     output is ever destroyed. */
+    *     output is ever destroyed.
+    *  3. The short-circuit still runs every post-write step against the
+    *     committed output ([[postWrite]]): each store fold is a no-op
+    *     where its shard id is recorded, and the data card is re-derived
+    *     only when its recorded output fingerprint differs from the
+    *     committed output's ([[writeDataCard]]) — so a replay of a
+    *     completed shard reads no document text, and a crash between any
+    *     two post-write steps heals. */
   def run(spark: SparkSession, cfg: PipelineConfig): (Long, Long) = {
     val in = graft.core.Tables.load(spark, cfg.inputDir, cfg.table).count()
     // a shard recorded in ANY incremental store must not re-filter: its
@@ -1063,9 +1087,10 @@ object GraftPipeline {
     val seenRecorded = cfg.steps.contains("dedup_seen") &&
       graft.dedup.SeenStore.processedShards(spark, cfg.seenStorePath)
         .contains(cfg.shardId)
-    val nearRecorded = cfg.steps.contains("dedup_neardup") &&
-      graft.dedup.NearDupStore.processedShards(spark, cfg.nearDupStorePath)
-        .contains(cfg.shardId)
+    val nearShards =
+      if (!cfg.steps.contains("dedup_neardup")) Set.empty[String]
+      else graft.dedup.NearDupStore.processedShards(spark, cfg.nearDupStorePath)
+    val nearRecorded = nearShards.contains(cfg.shardId)
     if (seenRecorded || nearRecorded) {
       // the short-circuit reports the COMMITTED output's row count; if the
       // output was relocated/cleaned (or the caller pointed a replay at a
@@ -1085,10 +1110,14 @@ object GraftPipeline {
       // would otherwise leave the shard permanently missing from the
       // indexes/fingerprints/card — the appends' own shard-id guards make
       // healed-already cases a no-op, so replaying them here is free.
-      postWrite(spark, cfg, committed)
+      postWrite(spark, cfg, committed, probeSigs = None)
       return (in, committed.count())
     }
-    val out = plan(spark, cfg)
+    val (out, sigs) = planWithProbe(spark, cfg)
+    // the probe checkpointed its signatures only when the store held
+    // shards; an empty store's are lazy over the upstream chain, which
+    // the seen-store fold would change before the near-dup fold reads it
+    val probeSigs = sigs.filter(_ => nearShards.nonEmpty)
     if (cfg.bucketBy.isEmpty) {
       val writer = out.write.mode("overwrite")
       (if (cfg.steps.contains("split")) writer.partitionBy("split") else writer)
@@ -1114,7 +1143,7 @@ object GraftPipeline {
         .saveAsTable(cfg.tableName)
     }
     val written = readCommitted(spark, cfg)
-    postWrite(spark, cfg, written)
+    postWrite(spark, cfg, written, probeSigs)
     (in, written.count())
   }
 
@@ -1132,9 +1161,13 @@ object GraftPipeline {
   /** Every post-write maintenance step, each idempotent per shard id (or
     * a pure function of the committed output), so [[run]] can execute the
     * same sequence on the first pass AND on a replay short-circuit — a
-    * crash between any two of these heals on the next run. */
+    * crash between any two of these heals on the next run. `probeSigs`:
+    * the near-dup probe's checkpointed batch signatures when this run
+    * probed, so the near-dup fold semi-joins them instead of recomputing
+    * signatures from the written text; None (the short-circuit, or an
+    * empty store) folds from the text. */
   private def postWrite(spark: SparkSession, cfg: PipelineConfig,
-      written: DataFrame): Unit = {
+      written: DataFrame, probeSigs: Option[DataFrame]): Unit = {
     if (cfg.steps.contains("fingerprint_store")) {
       graft.fp.FingerprintStore.fold(spark, cfg.fingerprintStorePath,
         cfg.shardId, written, Seq("source" -> col("source")),
@@ -1179,9 +1212,15 @@ object GraftPipeline {
     }
     if (cfg.steps.contains("dedup_seen"))
       graft.dedup.SeenStore.update(spark, cfg.seenStorePath, written, "text", cfg.shardId)
-    if (cfg.steps.contains("dedup_neardup"))
-      graft.dedup.NearDupStore.update(spark, cfg.nearDupStorePath,
-        written, "text", "doc_id", cfg.shardId)
+    if (cfg.steps.contains("dedup_neardup")) probeSigs match {
+      case Some(sigs) =>
+        graft.dedup.NearDupStore.updateFromSigs(spark, cfg.nearDupStorePath,
+          graft.dedup.NearDupStore.acceptedSigs(sigs, written, "text", "doc_id"),
+          cfg.shardId)
+      case None =>
+        graft.dedup.NearDupStore.update(spark, cfg.nearDupStorePath,
+          written, "text", "doc_id", cfg.shardId)
+    }
     if (cfg.steps.contains("ann_index")) {
       val hasIndex = graft.sim.Similarity.indexExists(spark, cfg.annIndexPath)
       if (cfg.annMode != "overwrite" && hasIndex) {
@@ -1226,25 +1265,8 @@ object GraftPipeline {
         graft.text.Retrieval.buildBm25Index(written, "text", "doc_id",
           cfg.bm25IndexPath, shardId = cfg.shardId)
     }
-    if (cfg.steps.contains("data_card")) {
-      val card = written
-        .select(col("source"), col("lang"), col("n_chars"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("nt"),
-          round(TextAnalysis.qualityScore(col("text")) * 10).cast("long").as("q10"),
-          TextAnalysis.gopherRules(col("text")).getField("keep").as("gk"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("n_chars_total"),
-          sum("nt").as("n_tokens_total"),
-          countDistinct("lang").as("n_langs"),
-          sum("q10").as("quality_decisum"),
-          sum(when(col("gk"), 1L).otherwise(0L)).as("n_gopher_keep"))
-        .coalesce(1) // per-source rows: tiny by construction
-      // atomic replace (round-6 advice #5): a crash mid-write must never
-      // leave a torn card, and — the card being a pure function of the
-      // committed output — the replay short-circuit re-derives it here
-      graft.core.AtomicStore.replace(spark, cfg.cardPath, card)
-    }
+    if (cfg.steps.contains("data_card"))
+      writeDataCard(spark, cfg.cardPath, written)
     if (cfg.steps.contains("compact")) {
       if (cfg.seenStorePath.nonEmpty)
         graft.dedup.SeenStore.compact(spark, cfg.seenStorePath)
@@ -1263,6 +1285,62 @@ object GraftPipeline {
       if (cfg.rollupStorePath.nonEmpty)
         graft.agg.AggStore.compact(spark, cfg.rollupStorePath)
     }
+  }
+
+  /** The per-source corpus report of a committed output (q107's shape). */
+  private[cli] def dataCard(written: DataFrame): DataFrame =
+    written
+      .select(col("source"), col("lang"), col("n_chars"),
+        TextAnalysis.tokenCount(col("text")).cast("long").as("nt"),
+        round(TextAnalysis.qualityScore(col("text")) * 10).cast("long").as("q10"),
+        TextAnalysis.gopherRules(col("text")).getField("keep").as("gk"))
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("n_chars").as("n_chars_total"),
+        sum("nt").as("n_tokens_total"),
+        countDistinct("lang").as("n_langs"),
+        sum("q10").as("quality_decisum"),
+        sum(when(col("gk"), 1L).otherwise(0L)).as("n_gopher_keep"))
+
+  /** Bump when [[dataCard]]'s definition changes: a card recorded under
+    * another tag is rebuilt once. */
+  private val CardFormat = "data_card/1"
+
+  /** The card's hidden record (Spark reads skip `_` files): the
+    * [[CardFormat]] tag and the listing fingerprint of the committed
+    * output the card was derived from. */
+  private[cli] val CardRecord = "_graft_card.json"
+
+  /** Write the data card of `written` to `path` unless the card there was
+    * derived from this very output. The card is a pure function of the
+    * committed output, so a card whose record carries the current
+    * [[CardFormat]] and the output's listing fingerprint
+    * ([[graft.core.FileListing]], taken from `written`'s own file index,
+    * so no extra listing runs) is kept as it is, and a replay reads no
+    * document text. A missing or unparseable record, another tag or
+    * another fingerprint rebuilds the card. Card and record are written
+    * together into the tmp tree of one [[graft.core.AtomicStore.replaceVia]]
+    * swap (round-6 advice #5: a crash mid-write never leaves a torn card,
+    * or a record that describes another card). */
+  private def writeDataCard(spark: SparkSession, path: String,
+      written: DataFrame): Unit = {
+    val output = graft.core.FileListing.signature(written)
+    graft.core.AtomicStore.heal(spark, path)
+    val recorded = scala.util.Try(graft.core.AtomicStore.readMetaJson(spark,
+      s"$path/$CardRecord") { doc =>
+        (doc.required("format").asText(), doc.required("output").asText())
+      }).toOption.flatten
+    if (!output.exists(o => recorded.contains((CardFormat, o))))
+      graft.core.AtomicStore.replaceVia(spark, path) { tmp =>
+        dataCard(written)
+          .coalesce(1) // per-source rows: tiny by construction
+          .write.mode("overwrite").parquet(tmp)
+        output.foreach(o =>
+          graft.core.AtomicStore.writeMetaJson(spark, s"$tmp/$CardRecord") { r =>
+            r.put("format", CardFormat)
+            r.put("output", o)
+          })
+      }
   }
 
   def main(args: Array[String]): Unit = {

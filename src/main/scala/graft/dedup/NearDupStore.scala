@@ -53,12 +53,16 @@ object NearDupStore {
   def processedShards(spark: SparkSession, path: String): Set[String] =
     store.processedShards(spark, path)
 
+  /** Per doc `(id, sig, ts, text_hash)`: the stored columns plus the
+    * hash of the text they were derived from, which [[acceptedSigs]] keys
+    * on (the store's own write drops it). */
   private def signatures(docs: DataFrame, textCol: String, idCol: String,
       k: Int, shingleN: Int): DataFrame =
     docs.select(col(idCol).cast("long").as("id"),
       graft.functions.expressions.TextHashExpressions
         .minhashShingled(col(textCol), shingleN, k).as("sig"),
-      array_distinct(Dedup.wordShingles(col(textCol), shingleN)).as("ts"))
+      array_distinct(Dedup.wordShingles(col(textCol), shingleN)).as("ts"),
+      xxhash64(col(textCol)).as("text_hash"))
 
   /** Rows of `incoming` with NO verified near-dup (exact shingle-Jaccard
     * >= `minJaccard`) among the store's accepted docs; identity when the
@@ -74,16 +78,19 @@ object NearDupStore {
     filterNewWithSigs(spark, path, incoming, textCol, idCol, minJaccard,
       k, bands, shingleN, maxBucket)._1
 
-  /** [[filterNew]] plus the BATCH signature relation `(id, sig, ts)` the
-    * probe computed (every incoming doc, not just survivors). The probe
-    * already pays k x |shingles| minhashes per doc to generate candidates;
-    * a caller that folds the survivors next ([[updateFromSigs]]) can
-    * semi-join this relation on the survivor ids instead of recomputing
-    * the signatures from raw text — one minhash pass per batch instead of
-    * two. The signature expression is deterministic over the text, so the
-    * folded bytes are identical either way. When the store is empty the
-    * signatures are returned LAZY (nothing was probed, so nothing was
-    * materialised — the fold's write evaluates them once). */
+  /** [[filterNew]] plus the BATCH signature relation `(id, sig, ts,
+    * text_hash)` the probe computed (every incoming doc, not just
+    * survivors). The probe already pays k x |shingles| minhashes per doc
+    * to generate candidates; a caller that folds the survivors next
+    * ([[updateFromSigs]]) can semi-join this relation on the survivors
+    * ([[acceptedSigs]]) instead of recomputing the signatures from raw
+    * text — one minhash pass per batch instead of two. The signature
+    * expression is deterministic over the text, so the folded bytes are
+    * identical either way. When the store is empty the signatures are
+    * returned LAZY over `incoming` (nothing was probed, so nothing was
+    * materialised — the fold's write evaluates them once); a caller whose
+    * `incoming` would read differently by fold time must then fold from
+    * the text ([[update]]) instead. */
   def filterNewWithSigs(spark: SparkSession, path: String, incoming: DataFrame,
       textCol: String, idCol: String, minJaccard: Double,
       k: Int = 32, bands: Int = 8, shingleN: Int = 3,
@@ -129,6 +136,22 @@ object NearDupStore {
           newSigs)
     }
 
+  /** The rows of a [[filterNewWithSigs]] signature relation whose doc
+    * reached `accepted` (the committed survivors, after any later step
+    * dropped more), keyed on the id AND the hash of the text: when an id
+    * occurs twice with different texts and only one copy survives, only
+    * that copy's signature is kept. Ids match null-safely, as
+    * [[update]] folds null-id docs too. A survivor whose text was
+    * rewritten after the probe matches nothing, so callers run no
+    * text-mutating step between the probe and the fold. */
+  def acceptedSigs(sigs: DataFrame, accepted: DataFrame, textCol: String,
+      idCol: String): DataFrame = {
+    val keys = accepted.select(col(idCol).cast("long").as("__id"),
+      xxhash64(col(textCol)).as("__text_hash"))
+    sigs.join(keys, sigs("id") <=> keys("__id") &&
+      sigs("text_hash") === keys("__text_hash"), "left_semi")
+  }
+
   /** Fold a committed shard's accepted docs into the store — O(shard):
     * signatures + shingle sets land as the shard's own subtree, then the
     * meta commit makes them visible. Idempotent per shard id. */
@@ -141,10 +164,10 @@ object NearDupStore {
   /** [[update]] from an already-computed signature relation `(id, sig,
     * ts)` — the fold half of the probe-then-fold loop when the probe ran
     * through [[filterNewWithSigs]]: semi-join its returned signatures on
-    * the survivor ids and hand them here, and the batch pays ONE minhash
-    * pass instead of two. The caller owns the contract that `sigs` holds
-    * exactly the accepted docs' signatures with the store's `k`/
-    * `shingleN`; the append itself is [[update]]'s. */
+    * the survivors ([[acceptedSigs]]) and hand them here, and the batch
+    * pays ONE minhash pass instead of two. The caller owns the contract
+    * that `sigs` holds exactly the accepted docs' signatures with the
+    * store's `k`/`shingleN`; the append itself is [[update]]'s. */
   def updateFromSigs(spark: SparkSession, path: String, sigs: DataFrame,
       shardId: String): Unit =
     store.append(spark, path, sigs, shardId)

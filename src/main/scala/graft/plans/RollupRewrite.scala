@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, count_distinct, expr, lit, max, min, sum, when}
 import org.apache.spark.sql.types.DoubleType
 
@@ -214,7 +214,7 @@ object MaterializedRollups {
             "matching would be ambiguous")
         val sigs = fixedSigs.getOrElse(
           leaves.map(l => normPath(RollupRewrite.singleScanPath(l).get) ->
-            RollupRewrite.fileSignature(l)).toMap)
+            graft.core.FileListing.signature(l)).toMap)
         val gen = fixedGeneration.getOrElse(
           try graft.agg.AggStore.generation(spark, storePath)
           catch { case NonFatal(_) => 0L })
@@ -240,13 +240,13 @@ object MaterializedRollups {
         // PERSISTED listing (see TailRecipe doc)
         val currentSigs = leaves.map(l =>
           normPath(RollupRewrite.singleScanPath(l).get) ->
-            RollupRewrite.fileSignature(l)).toMap
+            graft.core.FileListing.signature(l)).toMap
         val tailRecipe =
           if (leaves.size == 1 && sigs == currentSigs &&
               leaves.head.relation.asInstanceOf[HadoopFsRelation]
                 .partitionSchema.isEmpty)
             Some(TailRecipe(
-              RollupRewrite.fileEntries(leaves.head).toMap,
+              graft.core.FileListing.entries(leaves.head).toMap,
               leaves.head.relation.asInstanceOf[HadoopFsRelation]
                 .dataSchema.json,
               keySqls, measureSqls, filterSqls, distinctSql, quantileSql,
@@ -548,41 +548,6 @@ object RollupRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
 
-  /** A scan's CURRENT per-file listing: file path → "len:mtime" (falls
-    * back to path-only metadata for exotic indexes). Feeds both the
-    * freshness fingerprint and the realtime-tail file diff. */
-  private[plans] def fileEntries(rel: LogicalRelation): Seq[(String, String)] =
-    rel.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case p: PartitioningAwareFileIndex =>
-          p.allFiles().map(f =>
-            f.getPath.toUri.getPath -> s"${f.getLen}:${f.getModificationTime}")
-        case other =>
-          other.inputFiles.toSeq.map(new org.apache.hadoop.fs.Path(_)
-            .toUri.getPath -> s"bytes=${other.sizeInBytes}")
-      }
-      case _ => Nil
-    }
-
-  /** Fingerprint of a scan's CURRENT file listing — paths, sizes, and
-    * modification times when the index exposes them (appends, rewrites,
-    * and in-place overwrites all change it). The raw-freshness guard:
-    * states reflect the files that existed at registration; a query over
-    * a grown raw table must fall back (or, when the change is PURE
-    * GROWTH and the registration carries a tail recipe, serve states ⊎
-    * an on-the-fly fold of just the new files), never silently lose
-    * rows. */
-  private[plans] def fileSignature(rel: LogicalRelation): String = {
-    val entries = fileEntries(rel)
-    if (entries.isEmpty) ""
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      entries.map { case (p, m) => s"$p:$m" }.sorted
-        .foreach(e => md.update(e.getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    }
-  }
-
   /** Walk a Project/Filter/inner-Join tree down to its LogicalRelations,
     * building the substitution that rewrites tree-level attributes into
     * base-relation expressions, and collecting filter conjuncts (already
@@ -742,13 +707,13 @@ object RollupRewrite extends Rule[LogicalPlan] with PredicateHelper {
     // the realtime (lambda) read, served automatically (q184)
     val sigOk = leaves.forall { l =>
       val p = MaterializedRollups.normPath(singleScanPath(l).get)
-      reg.leafSigs.get(p).contains(fileSignature(l))
+      reg.leafSigs.get(p).contains(graft.core.FileListing.signature(l))
     }
     val tailFiles: Seq[String] =
       if (sigOk) Nil
       else (reg.tailRecipe, leaves) match {
         case (Some(rec), Seq(leaf)) =>
-          val current = fileEntries(leaf).toMap
+          val current = graft.core.FileListing.entries(leaf).toMap
           val changedOrRemoved = rec.fileEntries.exists { case (p, m) =>
             !current.get(p).contains(m) }
           val added = (current.keySet -- rec.fileEntries.keySet).toSeq.sorted

@@ -384,19 +384,13 @@ object Similarity {
     val (centArr, nCents) = centArrLiteralN(
       if (centroids != null) centroids
       else rows.sparkSession.read.parquet(s"$path/centroids"))
-    // cluster rows by centroid before the partitioned write (the BM25
-    // postings lesson, measured there at 2.5x build cost): without the
-    // repartition every shuffle task writes a sliver into every centroid
-    // directory — tasks × centroids small files, the metadata bomb at
-    // cluster scale. One file per centroid per shard instead — the
-    // explicit count PINS the writer-task count regardless of AQE and
-    // shuffle.partitions (a count-less repartition(col) carries the
-    // REPARTITION_BY_COL shuffle origin, which AQE's coalescing MAY
-    // resize).
-    assignProbes(
-        rows.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), centArr, "cv", 1)
-      .withColumn("shard", lit(shardId))
-      .repartition(math.max(nCents, 1), col("centroid_id"))
+    // cluster rows by centroid before the partitioned write: one writer
+    // task per core, one file per (shard, centroid) directory
+    graft.core.ClusteredWrite(
+        assignProbes(rows.select(col(idCol).as("neighbor_id"),
+            col(vecCol).as("cv")), centArr, "cv", 1)
+          .withColumn("shard", lit(shardId)),
+        nCents, col("centroid_id"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard", "centroid_id")

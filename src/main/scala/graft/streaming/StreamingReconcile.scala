@@ -407,8 +407,8 @@ object StreamingReconcile {
             val shard = s"batch_$id"
             if (!graft.dedup.NearDupStore.processedShards(bs, store).contains(shard)) {
               // probe-then-fold pays ONE minhash pass: the fold semi-joins
-              // the probe's checkpointed batch signatures on the survivor
-              // ids instead of recomputing them from raw text (bit-equal —
+              // the probe's checkpointed batch signatures on the survivors
+              // instead of recomputing them from raw text (bit-equal —
               // the signature expression is deterministic over the text)
               val (filtered, batchSigs) = graft.dedup.NearDupStore
                 .filterNewWithSigs(bs, store, b,
@@ -419,8 +419,8 @@ object StreamingReconcile {
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch").parquet(sink)
               graft.dedup.NearDupStore.updateFromSigs(bs, store,
-                batchSigs.join(survivors.select(col("doc_id").cast("long").as("id")),
-                  Seq("id"), "left_semi"), shard)
+                graft.dedup.NearDupStore.acceptedSigs(batchSigs, survivors,
+                  "text", "doc_id"), shard)
             }
           }
           .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()

@@ -127,8 +127,9 @@ object Retrieval {
     * pattern — which is why a probe after N appends is bit-identical to a
     * probe of a single full rebuild, spec'd and oracle-gated by q97).
     * Returns false (no-op) when `shardId` is already folded — the replay
-    * guard. See [[buildBm25Index]] for the crash-safety protocol. */
-  /** `preTf` (optional): the shard's [[shardTermFrequencies]] relation,
+    * guard. See [[buildBm25Index]] for the crash-safety protocol.
+    *
+    * `preTf` (optional): the shard's [[shardTermFrequencies]] relation,
     * precomputed (and typically persisted) by the caller — the
     * ingest-pipelining overlap: shard k+1 tokenizes while shard k's
     * build/append commits. MUST be exactly
@@ -226,44 +227,6 @@ object Retrieval {
     * ceilings). */
   private[text] val PostingBlocks = 16
 
-  /** One shard's postings, clustered by bucket before the partitioned
-    * write (without the repartition every shuffle task writes a sliver
-    * into every bucket directory — tasks × buckets small files, measured
-    * 2.5x the build cost at sf0.1; at cluster scale it is also the
-    * metadata bomb). Dynamic partition overwrite: only THIS shard's
-    * (shard, bucket) partitions are replaced, so a replayed torn write
-    * self-heals and other shards are never touched.
-    *
-    * Beside the postings, an `impacts/` relation lands per shard: per
-    * (tok, block) the max tf and min dl — the block-max metadata
-    * ([[queryBm25Index]]'s `blockMax` pruning derives exact per-block
-    * score CEILINGS from it at query time, since scoreU is monotone up
-    * in tf and down in dl and df/N/avgdl are per-term constants). Shard
-    * merge is a query-time max/min — appends stay O(shard). */
-  /** Write one shard's postings + impacts trees.
-    *
-    * Tokenise ONCE into a materialised array column, then explode the
-    * ATTRIBUTE: spelling `size(tokens(text))` beside
-    * `explode(tokens(text))` lets Catalyst collapse the projections so
-    * the sibling column's regex split re-runs per EXPLODED row — 12x
-    * measured at sf0.1 (2.3 s vs 0.2 s for the explode stage; the split
-    * runs |tokens| times per doc instead of once). */
-  /** Write one shard's postings + impacts and return the PERSISTED
-    * (doc_id, tok, dl, tf, bucket, block, shard) relation both were
-    * written from: one tokenize+aggregate pass serves the postings write,
-    * the impacts derivation, and sum_dl — the old shape paid a second
-    * full regex pass (stats) plus a disk re-read with a footer-inference
-    * job (impacts). The shard's df derives from the written impacts tree
-    * ([[shardDfOf]] — round-11: reading the vocabulary×blocks-bounded
-    * subtree replaces a postings→vocabulary shuffle per shard).
-    *
-    * Materialisation is a MEMORY_AND_DISK_SER persist, not a
-    * localCheckpoint: a localCheckpoint truncates lineage, making an
-    * executor loss mid-build unrecoverable. Persist keeps the
-    * (deterministic: tokenize → hash-aggregate) lineage, so a lost block
-    * recomputes, and every consumer is an order-free aggregate (write /
-    * max / min / count / sum), so recomputation cannot change any derived
-    * value. CALLERS must unpersist after the meta commit. */
   /** The shard's (doc_id, tok, dl, tf) term-frequency relation — the
     * expensive tokenize+aggregate pass of an ingest, WITHOUT the
     * index-layout columns (bucket/block/shard are cheap projections the
@@ -273,7 +236,14 @@ object Retrieval {
     * result to [[appendBm25Index]]'s `preTf` — the append then skips its
     * own tokenize pass. The relation is a deterministic pure function of
     * the shard (tokenize → hash-aggregate), so a precomputed instance is
-    * bit-identical to the one the append would derive (spec'd). */
+    * bit-identical to the one the append would derive (spec'd).
+    *
+    * The tokenizer runs ONCE into a materialised array column, and the
+    * explode reads that ATTRIBUTE: spelling `size(tokens(text))` beside
+    * `explode(tokens(text))` lets Catalyst collapse the projections so
+    * the sibling column's regex split re-runs per EXPLODED row — 12x
+    * measured at sf0.1 (2.3 s vs 0.2 s for the explode stage; the split
+    * runs |tokens| times per doc instead of once). */
   def shardTermFrequencies(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
     val toks = docs
@@ -285,6 +255,35 @@ object Retrieval {
     toks.groupBy("doc_id", "tok", "dl").agg(count(lit(1)).as("tf"))
   }
 
+  /** Write one shard's postings + impacts trees and return the PERSISTED
+    * (doc_id, tok, dl, tf, bucket, block, shard) relation both were
+    * written from: one tokenize+aggregate pass serves the postings write,
+    * the impacts derivation, and sum_dl — the old shape paid a second
+    * full regex pass (stats) plus a disk re-read with a footer-inference
+    * job (impacts). The shard's df derives from the written impacts tree
+    * ([[shardDfOf]] — round-11: reading the vocabulary×blocks-bounded
+    * subtree replaces a postings→vocabulary shuffle per shard).
+    *
+    * Both trees are clustered by bucket before the partitioned write
+    * ([[graft.core.ClusteredWrite]]: one writer task per core, one file
+    * per (shard, bucket) directory). Dynamic partition overwrite: only
+    * THIS shard's (shard, bucket) partitions are replaced, so a replayed
+    * torn write self-heals and other shards are never touched.
+    *
+    * Beside the postings, an `impacts/` relation lands per shard: per
+    * (tok, block) the max tf and min dl — the block-max metadata
+    * ([[queryBm25Index]]'s `blockMax` pruning derives exact per-block
+    * score CEILINGS from it at query time, since scoreU is monotone up
+    * in tf and down in dl and df/N/avgdl are per-term constants). Shard
+    * merge is a query-time max/min — appends stay O(shard).
+    *
+    * Materialisation is a MEMORY_AND_DISK_SER persist, not a
+    * localCheckpoint: a localCheckpoint truncates lineage, making an
+    * executor loss mid-build unrecoverable. Persist keeps the
+    * (deterministic: tokenize → hash-aggregate) lineage, so a lost block
+    * recomputes, and every consumer is an order-free aggregate (write /
+    * max / min / count / sum), so recomputation cannot change any derived
+    * value. CALLERS must unpersist after the meta commit. */
   private[text] def writeShardPostings(
       docs: DataFrame, textCol: String, idCol: String, path: String,
       buckets: Int, shardId: String, preTf: DataFrame = null): DataFrame = {
@@ -301,17 +300,12 @@ object Retrieval {
       .withColumn("block", pmod(xxhash64(col("doc_id")), lit(PostingBlocks)))
       .withColumn("shard", lit(shardId))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // one writer task per bucket (the explicit count PINS the writer-task
-    // count regardless of AQE and shuffle.partitions; a count-less
-    // repartition(col) carries the REPARTITION_BY_COL shuffle origin,
-    // which AQE's coalescing MAY resize): one file per (shard, bucket),
-    // never tasks × buckets slivers
     // the two writes are INDEPENDENT actions over the same persisted tf
     // (disjoint trees; block-manager locks dedup a racing tf partition
     // materialisation) — overlapped, the pair costs max not sum
     // (guide: "overlap independent jobs")
     graft.core.Par.both(
-      tf.repartition(math.max(buckets, 1), col("bucket"))
+      graft.core.ClusteredWrite(tf, buckets, col("bucket"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard", "bucket")
@@ -319,12 +313,13 @@ object Retrieval {
       // impacts: vocabulary × PostingBlocks rows, bucket-partitioned so a
       // probe prunes them exactly like postings; `n` (postings rows per
       // block) keeps the shard's df derivable from this far smaller tree
-      tf.groupBy("tok", "block")
-        .agg(max("tf").as("max_tf"), min("dl").as("min_dl"),
-          count(lit(1)).as("n"))
-        .withColumn("bucket", pmod(xxhash64(col("tok")), lit(buckets)))
-        .withColumn("shard", lit(shardId))
-        .repartition(math.max(buckets, 1), col("bucket"))
+      graft.core.ClusteredWrite(
+        tf.groupBy("tok", "block")
+          .agg(max("tf").as("max_tf"), min("dl").as("min_dl"),
+            count(lit(1)).as("n"))
+          .withColumn("bucket", pmod(xxhash64(col("tok")), lit(buckets)))
+          .withColumn("shard", lit(shardId)),
+        buckets, col("bucket"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard", "bucket")
@@ -447,8 +442,9 @@ object Retrieval {
     * driver-side to build LITERAL bucket/term filters — bounded by the
     * query's own size (a handful of terms, never corpus data), and the
     * literal predicate is what lets Spark prune non-probed bucket
-    * directories at the scan. */
-  /** `blockMax = true` enables EXACT block-max pruning (round-7 task #6
+    * directories at the scan.
+    *
+    * `blockMax = true` enables EXACT block-max pruning (round-7 task #6
     * — the general-top-k complement of the df-ceiling): without it every
     * posting of every query term is scored; with it the probe
     *

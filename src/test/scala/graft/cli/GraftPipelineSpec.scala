@@ -1,8 +1,14 @@
 package graft.cli
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+
+import scala.jdk.CollectionConverters._
 
 class GraftPipelineSpec extends SparkSpec {
 
@@ -1470,5 +1476,155 @@ class GraftPipelineSpec extends SparkSpec {
       "steps" -> "rollup", "rollup_store.path" -> "c",
       "rollup.keys" -> "uniq_upto_3_sk", "rollup.uniq_upto" -> "source:3"))
       .swap.exists(_.contains("collide")))
+  }
+
+  /** Run `f`, returning the (output path, query plan) of every file write
+    * it executes. */
+  private def fileWrites[T](f: => T): (T, Seq[(String, String)]) = {
+    val writes = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collect { case c: InsertIntoHadoopFsRelationCommand => c }
+          .foreach(c => writes.synchronized(
+            writes += (c.outputPath.toUri.getPath -> c.query.toString)))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val result =
+      try { val r = f; ListenerBus.drain(spark.sparkContext); r }
+      finally spark.listenerManager.unregister(listener)
+    (result, writes.synchronized(writes.toSeq))
+  }
+
+  /** Every file under `dir`: relative path -> (bytes, mtime). */
+  private def fileStamps(dir: String): Map[String, (Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val it = java.nio.file.Files.walk(root)
+    try it.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        ((p.toFile.length(), p.toFile.lastModified()))).toMap
+    finally it.close()
+  }
+
+  private def cardRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("data_card: a replay of a completed run keeps the card — no file rewritten, no card write") {
+    val root = tmpDir("pipe_card_keep")
+    val cfg = GraftPipeline.PipelineConfig(
+      inputDir = sf001, table = "documents", outputDir = s"$root/shards",
+      steps = Seq("dedup_seen", "data_card"),
+      qualityMin = 0.0, minhashThreshold = 0.7, packBudget = 512, testPct = 1,
+      seenStorePath = s"$root/seen", dataCardPath = s"$root/card",
+      shardIdOverride = "s0")
+    val first = GraftPipeline.run(spark, cfg)
+    val before = fileStamps(s"$root/card")
+    assert(before.contains(GraftPipeline.CardRecord))
+    val (again, writes) = fileWrites(GraftPipeline.run(spark, cfg))
+    assert(again == first)
+    assert(fileStamps(s"$root/card") == before)
+    assert(!writes.exists(_._1.startsWith(s"$root/card")), writes.map(_._1))
+    assert(cardRows(spark.read.parquet(s"$root/card")) ==
+      cardRows(GraftPipeline.dataCard(spark.read.parquet(s"$root/shards"))))
+  }
+
+  test("data_card: rebuilt when the output changed under it, or its record is missing or unparseable") {
+    val root = tmpDir("pipe_card_rebuild")
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$root/a/documents.parquet")
+    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$root/b/documents.parquet")
+    def cfg(in: String, steps: String*) = GraftPipeline.PipelineConfig(
+      inputDir = s"$root/$in", table = "documents", outputDir = s"$root/shards",
+      steps = steps, qualityMin = 0.0, minhashThreshold = 0.7, packBudget = 512,
+      testPct = 1, seenStorePath = s"$root/seen", dataCardPath = s"$root/card",
+      shardIdOverride = in)
+    def card() = cardRows(spark.read.parquet(s"$root/card"))
+    def fresh() = cardRows(GraftPipeline.dataCard(spark.read.parquet(s"$root/shards")))
+    def parts() = fileStamps(s"$root/card").keySet.filter(_.endsWith(".parquet"))
+    GraftPipeline.run(spark, cfg("a", "dedup_seen", "data_card"))
+    // shard b rewrites the output at the same paths and the run stops
+    // before the card: the card still describes shard a's output
+    GraftPipeline.run(spark, cfg("b", "dedup_seen"))
+    assert(card() != fresh())
+    // the replay short-circuits on the seen store and re-derives the card
+    GraftPipeline.run(spark, cfg("b", "dedup_seen", "data_card"))
+    assert(card() == fresh())
+    val record = java.nio.file.Paths.get(s"$root/card/${GraftPipeline.CardRecord}")
+    val recordCrc = java.nio.file.Paths.get(s"$root/card/.${GraftPipeline.CardRecord}.crc")
+    for (damage <- Seq[() => Unit](
+        // a card without a record, as written before cards carried one
+        () => java.nio.file.Files.delete(record),
+        () => java.nio.file.Files.write(record, "{\"format\": ".getBytes("UTF-8")))) {
+      val stale = parts()
+      damage()
+      java.nio.file.Files.deleteIfExists(recordCrc)
+      GraftPipeline.run(spark, cfg("b", "dedup_seen", "data_card"))
+      assert(parts() != stale, "card not rebuilt")
+      assert(card() == fresh())
+      assert(java.nio.file.Files.exists(record))
+    }
+    // and the rebuilt record is kept by the next replay
+    val kept = fileStamps(s"$root/card")
+    GraftPipeline.run(spark, cfg("b", "dedup_seen", "data_card"))
+    assert(fileStamps(s"$root/card") == kept)
+  }
+
+  test("dedup_neardup: the fold reuses the probe's signatures and equals the text-recomputed fold") {
+    val root = tmpDir("pipe_nd_sigs")
+    val store = s"$root/neardup"
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .filter(col("doc_id").isNotNull)
+    docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$root/in1/documents.parquet")
+    // shard 2: the odd docs, near copies of three even docs (one appended
+    // token) under new ids, and a second, low-quality copy of one odd id
+    val good = docs.filter(graft.text.TextAnalysis.qualityScore(col("text")) >= 0.5 &&
+      length(col("text")) > 200)
+    val dupId = good.filter(col("doc_id") % 2 === 1).agg(min("doc_id")).head().getLong(0)
+    val near = good.filter(col("doc_id") % 2 === 0).orderBy("doc_id").limit(3)
+      .withColumn("doc_id", col("doc_id") + 900000L)
+      .withColumn("text", concat(col("text"), lit(" zzqx")))
+    val lowQuality = docs.filter(col("doc_id") === dupId)
+      .withColumn("text", lit("?? !! ##"))
+    docs.filter(col("doc_id") % 2 === 1).unionByName(near).unionByName(lowQuality)
+      .write.parquet(s"$root/in2/documents.parquet")
+    def cfg(k: Int, steps: String*) = GraftPipeline.PipelineConfig(
+      inputDir = s"$root/in$k", table = "documents", outputDir = s"$root/out$k",
+      steps = steps, qualityMin = 0.3, minhashThreshold = 0.7, packBudget = 512,
+      testPct = 1, seenStorePath = s"$root/seen", nearDupStorePath = store,
+      shardIdOverride = s"n$k")
+    val steps = Seq("dedup_neardup", "quality_filter")
+    GraftPipeline.run(spark, cfg(1, steps: _*))
+    val (_, writes) = fileWrites(GraftPipeline.run(spark, cfg(2, steps: _*)))
+    val out2 = spark.read.parquet(s"$root/out2")
+    assert(out2.filter(col("doc_id") >= 900000L).count() == 0, "planted near copies kept")
+    assert(out2.filter(col("doc_id") === dupId).count() == 1)
+    // shard 2 probed a non-empty store: its fold read the probe's
+    // signatures, no minhash ran on the written text
+    val folds = writes.filter(_._1 == s"$store/sigs")
+    assert(folds.size == 1 && !folds.head._2.contains("minhash_shingled"), folds)
+    // heal path: shard 3 recorded in the seen store only; the replay
+    // short-circuits and folds it from the committed text
+    docs.filter(col("doc_id") % 2 === 1).limit(5)
+      .withColumn("doc_id", col("doc_id") + 800000L)
+      .withColumn("text", concat(lit("fresh prefix words here "), col("text")))
+      .write.parquet(s"$root/in3/documents.parquet")
+    GraftPipeline.run(spark, cfg(3, "dedup_seen"))
+    val (_, healWrites) = fileWrites(
+      GraftPipeline.run(spark, cfg(3, "dedup_seen", "dedup_neardup")))
+    val heal = healWrites.filter(_._1 == s"$store/sigs")
+    assert(heal.size == 1 && heal.head._2.contains("minhash_shingled"), heal)
+    // canonical store rows equal a fold recomputed from each committed
+    // output's text, shard by shard
+    val ref = s"$root/ref"
+    for (k <- 1 to 3)
+      graft.dedup.NearDupStore.update(spark, ref,
+        spark.read.parquet(s"$root/out$k"), "text", "doc_id", s"n$k")
+    def rows(p: String) = graft.dedup.NearDupStore.read(spark, p).get
+      .select(col("id"), col("sig"), array_sort(col("ts")).as("ts"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows(store) == rows(ref))
+    assert(graft.dedup.NearDupStore.read(spark, store).get
+      .filter(col("id") === dupId).count() == 1)
   }
 }
