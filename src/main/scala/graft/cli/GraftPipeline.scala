@@ -719,13 +719,11 @@ object GraftPipeline {
       graft.dedup.SeenStore.filter(df.sparkSession, c.seenStorePath, df, "text")),
     // incremental NEAR-dup dedup (the q100 primitive): drop docs with a
     // verified shingle-Jaccard >= neardup_min_jaccard near-dup among the
-    // docs of prior shards. Store update is post-write in run(), same
-    // at-least-once protocol as dedup_seen; run() composes this step
-    // through filterNewWithSigs instead, so the fold reuses the probe's
-    // signatures (planWithProbe).
-    "dedup_neardup" -> ((c, df) =>
-      graft.dedup.NearDupStore.filterNew(df.sparkSession, c.nearDupStorePath,
-        df, "text", "doc_id", c.nearDupMinJaccard)),
+    // docs of prior shards. plan() composes the probe itself
+    // (NearDupStore.filterNewWithSigs), so the post-write fold in run()
+    // reuses its signatures; same at-least-once protocol as dedup_seen.
+    // No-op here.
+    "dedup_neardup" -> ((_, df) => df),
     // per-source fingerprint-store maintenance: no transform at plan time —
     // run() folds byPartition(output) into fingerprint_store.path after the
     // write, giving downstream reconciles an O(delta) per-source (rows, fp)
@@ -1034,21 +1032,17 @@ object GraftPipeline {
         "source", "doc_id", "__n_tokens", c.packBudget)
         .drop("__n_tokens")))
 
-  /** Compose the configured steps over the input table (lazy — one plan). */
-  def plan(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    planWithProbe(spark, cfg)._1
-
-  /** [[plan]] plus the batch signatures the `dedup_neardup` probe computed
-    * ([[graft.dedup.NearDupStore.filterNewWithSigs]]), for the post-write
-    * fold to reuse. None without the step. */
-  private def planWithProbe(spark: SparkSession,
+  /** Compose the configured steps over the input table (lazy — one plan),
+    * plus the batch signatures the `dedup_neardup` probe materialised
+    * ([[graft.dedup.NearDupStore.filterNewWithSigs]]) for the post-write
+    * fold to reuse; None without the step or against an empty store. */
+  def plan(spark: SparkSession,
       cfg: PipelineConfig): (DataFrame, Option[DataFrame]) = {
     val in = graft.core.Tables.load(spark, cfg.inputDir, cfg.table)
     cfg.steps.foldLeft((in, Option.empty[DataFrame])) {
       case ((df, _), "dedup_neardup") =>
-        val (kept, sigs) = graft.dedup.NearDupStore.filterNewWithSigs(spark,
+        graft.dedup.NearDupStore.filterNewWithSigs(spark,
           cfg.nearDupStorePath, df, "text", "doc_id", cfg.nearDupMinJaccard)
-        (kept, Some(sigs))
       case ((df, sigs), s) => (Steps(s)(cfg, df), sigs)
     }
   }
@@ -1087,10 +1081,9 @@ object GraftPipeline {
     val seenRecorded = cfg.steps.contains("dedup_seen") &&
       graft.dedup.SeenStore.processedShards(spark, cfg.seenStorePath)
         .contains(cfg.shardId)
-    val nearShards =
-      if (!cfg.steps.contains("dedup_neardup")) Set.empty[String]
-      else graft.dedup.NearDupStore.processedShards(spark, cfg.nearDupStorePath)
-    val nearRecorded = nearShards.contains(cfg.shardId)
+    val nearRecorded = cfg.steps.contains("dedup_neardup") &&
+      graft.dedup.NearDupStore.processedShards(spark, cfg.nearDupStorePath)
+        .contains(cfg.shardId)
     if (seenRecorded || nearRecorded) {
       // the short-circuit reports the COMMITTED output's row count; if the
       // output was relocated/cleaned (or the caller pointed a replay at a
@@ -1113,11 +1106,7 @@ object GraftPipeline {
       postWrite(spark, cfg, committed, probeSigs = None)
       return (in, committed.count())
     }
-    val (out, sigs) = planWithProbe(spark, cfg)
-    // the probe checkpointed its signatures only when the store held
-    // shards; an empty store's are lazy over the upstream chain, which
-    // the seen-store fold would change before the near-dup fold reads it
-    val probeSigs = sigs.filter(_ => nearShards.nonEmpty)
+    val (out, probeSigs) = plan(spark, cfg)
     if (cfg.bucketBy.isEmpty) {
       val writer = out.write.mode("overwrite")
       (if (cfg.steps.contains("split")) writer.partitionBy("split") else writer)
@@ -1162,10 +1151,10 @@ object GraftPipeline {
     * a pure function of the committed output), so [[run]] can execute the
     * same sequence on the first pass AND on a replay short-circuit — a
     * crash between any two of these heals on the next run. `probeSigs`:
-    * the near-dup probe's checkpointed batch signatures when this run
-    * probed, so the near-dup fold semi-joins them instead of recomputing
-    * signatures from the written text; None (the short-circuit, or an
-    * empty store) folds from the text. */
+    * the near-dup probe's materialised batch signatures when this run
+    * probed ([[plan]]), so the near-dup fold semi-joins them instead of
+    * recomputing signatures from the written text; None (the
+    * short-circuit, or an empty store) folds from the text. */
   private def postWrite(spark: SparkSession, cfg: PipelineConfig,
       written: DataFrame, probeSigs: Option[DataFrame]): Unit = {
     if (cfg.steps.contains("fingerprint_store")) {

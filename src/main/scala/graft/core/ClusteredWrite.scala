@@ -18,9 +18,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * core, never more tasks than directories. Tasks beyond the core count
   * only queue, and each pays its launch plus a writer open and commit for
   * one small file; a task that holds several directories writes them in
-  * turn, one file each. On a cluster with at least `partitions` cores the
-  * layout is one task per directory, as before. The explicit count pins
-  * the task count whatever AQE and `spark.sql.shuffle.partitions` say (a
+  * turn, one file each. `defaultParallelism` is read when the write is
+  * planned: in local mode and under static allocation that is the core
+  * count the write runs on, and with at least `partitions` cores the
+  * layout is one task per directory, as before. Under dynamic allocation
+  * it is the cores registered at that moment, so a write planned while
+  * few executors are up keeps that few tasks as more arrive; only
+  * `local[n]` sessions have been measured. The explicit count pins the
+  * task count whatever AQE and `spark.sql.shuffle.partitions` say (a
   * count-less `repartition(col)` carries the REPARTITION_BY_COL origin,
   * which AQE's coalescing may resize).
   */

@@ -86,17 +86,16 @@ object NearDupStore {
     * ([[acceptedSigs]]) instead of recomputing the signatures from raw
     * text — one minhash pass per batch instead of two. The signature
     * expression is deterministic over the text, so the folded bytes are
-    * identical either way. When the store is empty the signatures are
-    * returned LAZY over `incoming` (nothing was probed, so nothing was
-    * materialised — the fold's write evaluates them once); a caller whose
-    * `incoming` would read differently by fold time must then fold from
-    * the text ([[update]]) instead. */
+    * identical either way. The relation is returned only when the probe
+    * materialised it (a checkpoint, so it no longer reads `incoming`);
+    * against an empty store nothing was probed and it is None, and the
+    * caller folds from the text ([[update]]). */
   def filterNewWithSigs(spark: SparkSession, path: String, incoming: DataFrame,
       textCol: String, idCol: String, minJaccard: Double,
       k: Int = 32, bands: Int = 8, shingleN: Int = 3,
-      maxBucket: Int = 500): (DataFrame, DataFrame) =
+      maxBucket: Int = 500): (DataFrame, Option[DataFrame]) =
     read(spark, path) match {
-      case None => (incoming, signatures(incoming, textCol, idCol, k, shingleN))
+      case None => (incoming, None)
       case Some(store) =>
         // batch-bounded materialisation: three consumers below (banding,
         // candidate payload join, and the caller's anti-join) would each
@@ -133,7 +132,7 @@ object NearDupStore {
           .select("new_id").distinct()
         (incoming.join(hit,
           incoming(idCol).cast("long") === hit("new_id"), "left_anti"),
-          newSigs)
+          Some(newSigs))
     }
 
   /** The rows of a [[filterNewWithSigs]] signature relation whose doc
@@ -143,7 +142,14 @@ object NearDupStore {
     * that copy's signature is kept. Ids match null-safely, as
     * [[update]] folds null-id docs too. A survivor whose text was
     * rewritten after the probe matches nothing, so callers run no
-    * text-mutating step between the probe and the fold. */
+    * text-mutating step between the probe and the fold.
+    *
+    * Multiplicity is the probe's, not `accepted`'s: an (id, text) pair
+    * the probe saw n times yields n rows if it survives at all, while
+    * [[update]] folds one row per accepted row. The two folds differ only
+    * when a later step repeats or collapses identical rows (`upsample`,
+    * `dedup_exact`), and only in how many identical rows the store holds;
+    * the probe's candidates and hits are distinct, so verdicts match. */
   def acceptedSigs(sigs: DataFrame, accepted: DataFrame, textCol: String,
       idCol: String): DataFrame = {
     val keys = accepted.select(col(idCol).cast("long").as("__id"),

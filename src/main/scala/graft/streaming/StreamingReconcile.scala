@@ -418,9 +418,15 @@ object StreamingReconcile {
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch").parquet(sink)
-              graft.dedup.NearDupStore.updateFromSigs(bs, store,
-                graft.dedup.NearDupStore.acceptedSigs(batchSigs, survivors,
-                  "text", "doc_id"), shard)
+              batchSigs match {
+                case Some(sigs) =>
+                  graft.dedup.NearDupStore.updateFromSigs(bs, store,
+                    graft.dedup.NearDupStore.acceptedSigs(sigs, survivors,
+                      "text", "doc_id"), shard)
+                case None => // empty store: nothing was probed
+                  graft.dedup.NearDupStore.update(bs, store, survivors,
+                    "text", "doc_id", shard)
+              }
             }
           }
           .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()

@@ -18,6 +18,22 @@ class NearDupStoreSpec extends SparkSpec {
       .count() == docs.count())
   }
 
+  test("filterNewWithSigs returns signatures only when it probed: None on an empty store") {
+    val store = tmpDir("neardup_sigs_opt")
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    assert(NearDupStore.filterNewWithSigs(
+      spark, store, batch, "text", "doc_id", 0.8)._2.isEmpty)
+    NearDupStore.update(spark, store, docs.filter(col("doc_id") % 2 === 0),
+      "text", "doc_id", "hist")
+    val sigs = NearDupStore.filterNewWithSigs(
+      spark, store, batch, "text", "doc_id", 0.8)._2
+    // materialised: one signature row per incoming doc, read from the
+    // checkpoint rather than from `batch`
+    assert(sigs.exists(_.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
+    assert(sigs.get.count() == batch.count())
+  }
+
   test("probe drops exact and near copies of history, keeps fresh docs") {
     val store = tmpDir("neardup_probe")
     NearDupStore.update(spark, store, docs, "text", "doc_id", "s0")
@@ -72,8 +88,9 @@ class NearDupStoreSpec extends SparkSpec {
           val (filtered, sigs) = NearDupStore.filterNewWithSigs(
             spark, store, batch, "text", "doc_id", 0.8, maxBucket = 0)
           val survivors = filtered.localCheckpoint(true)
+          // the store holds "history", so the probe materialised its sigs
           NearDupStore.updateFromSigs(spark, store,
-            sigs.join(survivors.select(col("doc_id").as("id")),
+            sigs.get.join(survivors.select(col("doc_id").as("id")),
               Seq("id"), "left_semi"), shard)
         } else {
           val survivors = NearDupStore.filterNew(
