@@ -86,7 +86,8 @@ object GraftCopy {
           System.err.println(s"$Name: --config needs a file path")
           return Status.UsageFail
         }
-        YamlConfig.check(YamlConfig.load(args(cfgIdx + 1))) match {
+        YamlConfig.loadWith(args(cfgIdx + 1))(t =>
+            YamlConfig.check(YamlConfig.fromText(t))) match {
           case Left(err) =>
             System.err.println(s"$Name: config: $err"); Status.UsageFail
           case Right(cfg) =>

@@ -9,29 +9,15 @@ import graft.queries.CurationQueries
 import graft.text.TextAnalysis
 
 /** Config-driven corpus-curation pipeline: the end-to-end form of the
-  * operators the query catalog exercises one at a time. A YAML file (same
-  * minimal two-level parser the reconciler CLI uses — [[YamlConfig.parse]])
-  * names an input documents table, an ordered step list, and an output
-  * root; the runner composes ONE lazy DataFrame chain and writes
-  * split-partitioned parquet shards — Catalyst sees the whole pipeline as
-  * a single plan, so column pruning / filter ordering apply across steps
-  * and nothing materialises between them.
-  *
-  * ```yaml
-  * input:
-  *   path: /data/corpus        # parquet root containing <table>.parquet
-  *   table: documents
-  * output:
-  *   path: /data/shards
-  *   bucket_by: doc_id          # optional: bucketed (CLUSTERED BY) layout
-  *   buckets: 8                 #   — downstream joins on the key plan
-  *   table: my_corpus           #   with zero Exchange on the corpus side
-  * steps: normalize,redact,dedup_exact,dedup_minhash,quality_filter,split,pack
-  * quality_min: 0.3            # quality_filter threshold
-  * minhash_threshold: 0.7      # dedup_minhash estimated-Jaccard cutoff
-  * pack_budget: 512            # pack: tokens per context window
-  * test_pct: 1                 # split: % to test (and to val)
-  * ```
+  * operators the query catalog exercises one at a time. A YAML file (read
+  * by [[YamlConfig.parse]] and decoded strictly, each key once, through
+  * the reconciler CLI's [[YamlConfig.Reader]]) names an input documents
+  * table, an ordered step list, and an output root; the runner composes
+  * ONE lazy DataFrame chain and writes split-partitioned parquet shards —
+  * Catalyst sees the whole pipeline as a single plan, so column pruning /
+  * filter ordering apply across steps and nothing materialises between
+  * them. A worked example, with comments on each key, is the test
+  * resource `graft/cli/pipeline-example.yaml`.
   *
   * Steps (any order, any subset):
   *  - `strip_html` — crude tag/script removal for web-crawl input
@@ -200,10 +186,10 @@ object GraftPipeline {
   val Name = "graft-pipeline"
 
   final case class PipelineConfig(
-      inputDir: String, table: String, outputDir: String,
+      inputDir: String, table: String = "documents", outputDir: String,
       steps: Seq[String],
-      qualityMin: Double, minhashThreshold: Double,
-      packBudget: Int, testPct: Int,
+      qualityMin: Double = 0.3, minhashThreshold: Double = 0.7,
+      packBudget: Int = 512, testPct: Int = 1,
       bigramMin: Double = 0.0,
       chunkOverlapMax: Double = 0.5,
       spanOverlapMax: Double = 0.5,
@@ -270,305 +256,256 @@ object GraftPipeline {
     Set("strip_html", "normalize", "redact", "strip_dup_spans",
       "strip_dup_lines", "c4_clean")
 
-  def fromKv(kv: Map[String, String]): Either[String, PipelineConfig] = {
-    val steps = kv.getOrElse("steps", "").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val unknown = steps.filterNot(Steps.contains)
-    def mutatorsAfter(step: String): Seq[String] =
-      if (!steps.contains(step)) Seq.empty
-      else steps.drop(steps.indexOf(step) + 1).filter(TextMutatingSteps)
-    val mutatorsAfterSeen = mutatorsAfter("dedup_seen")
-    val mutatorsAfterNear = mutatorsAfter("dedup_neardup")
-    // rollup config parsed ONCE; every malformed shape — unparseable
-    // entries/SQL, duplicate measure names, keys colliding with the state
-    // names the measures will generate — must fail HERE, before the shard
-    // output commits, not in the post-write fold where each replay
-    // re-fails and wedges the run mid-protocol. (Expressions are parsed
-    // with CatalystSqlParser explicitly: Spark 4's functions.expr defers
-    // parsing to analysis, so Try(expr(...)) alone accepts any garbage.)
-    val rollupKeysV = kv.getOrElse("rollup.keys", "source")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val rollupSumMapV = parseSumMap(kv.getOrElse("rollup.sum_map", ""))
-    val rollupUniqUpToV = parseUniqUpTo(kv.getOrElse("rollup.uniq_upto", ""))
-    val rollupTopKV = parseTopK(kv.getOrElse("rollup.top_k", ""))
-    val rollupMomentsV = kv.getOrElse("rollup.moments", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val rollupCoMomentsV = parseCoMoments(kv.getOrElse("rollup.co_moments", ""))
-    val rollupMeasureError: Option[String] =
-      parseMeasures(kv.getOrElse("rollup.measures", "")) match {
-        case Left(err) => Some(err)
-        case _ if rollupSumMapV.isLeft => rollupSumMapV.swap.toOption
-        case _ if rollupUniqUpToV.isLeft => rollupUniqUpToV.swap.toOption
-        case _ if rollupTopKV.isLeft => rollupTopKV.swap.toOption
-        case _ if rollupCoMomentsV.isLeft => rollupCoMomentsV.swap.toOption
-        case Right(ms) if rollupMomentsV.nonEmpty &&
-            !rollupMomentsV.forall(m => ms.exists(_._1 == m)) =>
-          Some("rollup.moments must name rollup.measures entries " +
-            s"(have ${ms.map(_._1).mkString(", ")})")
-        case Right(ms) if ms.isEmpty && rollupCoMomentsV.getOrElse(Nil).nonEmpty =>
-          // the single-measure append path has no co-moment arm — dropping
-          // the states silently would be worse than rejecting the config
-          Some("rollup.co_moments requires rollup.measures (multi-measure form)")
-        case Right(ms) =>
-          val dups = ms.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
-          val unparseable = ms.filter(m => !measureSqlParses(m._2))
-          // reserved names mirror partialStates' construction: only the
-          // states THIS config actually generates (a store keyed on a
-          // column literally named q_sketch is fine when no
-          // rollup.quantile_column is set — over-reserving rejected it)
-          val stateNames =
-            (if (ms.isEmpty) Seq("sum_micros", "min_v", "max_v", "cnt_v")
-             else ms.flatMap(m =>
-               Seq(s"${m._1}_sum_u", s"${m._1}_min", s"${m._1}_max",
-                 s"${m._1}_cnt"))) ++
-              rollupSumMapV.getOrElse(Nil).map(sm => s"${sm._1}_summap") ++
-              rollupUniqUpToV.toOption.flatten.map(u => s"uniq_upto_${u._2}_sk").toSeq ++
-              rollupTopKV.toOption.flatten.map(t => s"topk_${t._2}_sk").toSeq ++
-              rollupMomentsV.flatMap(m => Seq(s"${m}_sum2", s"${m}_var",
-                s"${m}_var_pop", s"${m}_std", s"${m}_std_pop")) ++
-              rollupCoMomentsV.getOrElse(Nil).flatMap { case (nm, _, _) =>
-                Seq(s"${nm}_pn", s"${nm}_sx", s"${nm}_sy", s"${nm}_sxx",
-                  s"${nm}_syy", s"${nm}_sxy", s"${nm}_corr", s"${nm}_cov",
-                  s"${nm}_cov_pop") } ++
-              (if (kv.getOrElse("rollup.distinct_column", "").nonEmpty)
-                Seq("n_distinct_sk") else Nil) ++
-              (if (kv.getOrElse("rollup.quantile_column", "").nonEmpty)
-                Seq("q_sketch") else Nil) ++
-              Seq("n")
-          val collide = rollupKeysV.intersect(stateNames)
-          if (dups.nonEmpty)
-            Some(s"rollup.measures: duplicate measure name(s): ${dups.mkString(", ")}")
-          else if (unparseable.nonEmpty)
-            Some("rollup.measures: unparseable expression in " +
-              unparseable.map(m => s"'${m._1}:${m._2}'").mkString(", "))
-          else if (collide.nonEmpty)
-            Some("rollup.keys collide with rollup state names: " +
-              collide.mkString(", "))
-          else None
-      }
-    if (kv.getOrElse("input.path", "").isEmpty) Left("input.path is required")
-    else if (kv.getOrElse("output.path", "").isEmpty) Left("output.path is required")
-    else if (steps.isEmpty) Left("steps is required (comma-separated)")
-    else if (unknown.nonEmpty)
-      Left(s"unknown steps: ${unknown.mkString(", ")} (known: ${Steps.keys.toSeq.sorted.mkString(", ")})")
-    else if (mutatorsAfterSeen.nonEmpty)
-      Left(s"text-mutating steps after dedup_seen (${mutatorsAfterSeen.mkString(", ")}) " +
-        "would store hashes of rewritten text that can never match a future " +
-        "shard's filter-time hashes — move them before dedup_seen")
-    else if (steps.exists(Set("contamination_filter", "bloom_decontaminate")) &&
-        kv.getOrElse("benchmark.path", "").isEmpty)
-      Left("contamination_filter / bloom_decontaminate require benchmark.path")
-    else if (steps.contains("dsir_filter") && kv.getOrElse("dsir.target_path", "").isEmpty)
-      Left("dsir_filter requires dsir.target_path")
-    else if (mutatorsAfterNear.nonEmpty)
-      Left(s"text-mutating steps after dedup_neardup (${mutatorsAfterNear.mkString(", ")}) " +
-        "would store shingles of rewritten text that can never match a future " +
-        "shard's filter-time shingles — move them before dedup_neardup")
-    else if (steps.contains("dedup_seen") && kv.getOrElse("seen_store.path", "").isEmpty)
-      Left("dedup_seen requires seen_store.path")
-    else if (steps.contains("dedup_neardup") && kv.getOrElse("neardup_store.path", "").isEmpty)
-      Left("dedup_neardup requires neardup_store.path")
-    else if (steps.contains("fingerprint_store") && kv.getOrElse("fingerprint_store.path", "").isEmpty)
-      Left("fingerprint_store requires fingerprint_store.path")
-    else if ((steps.contains("ann_index") || steps.contains("ann_query")) &&
-        kv.getOrElse("ann_index.path", "").isEmpty)
-      Left("ann_index / ann_query require ann_index.path")
-    else if ((steps.contains("bm25_index") || steps.contains("bm25_query")) &&
-        kv.getOrElse("bm25_index.path", "").isEmpty)
-      Left("bm25_index / bm25_query require bm25_index.path")
-    else if ((steps.contains("pq_index") || steps.contains("pq_query")) &&
-        kv.getOrElse("pq_index.path", "").isEmpty)
-      Left("pq_index / pq_query require pq_index.path")
-    else if (!Seq("overwrite", "append", "rebalance").contains(
-        kv.getOrElse("pq_index.mode", "overwrite")))
-      Left(s"pq_index.mode must be overwrite, append or rebalance, " +
-        s"got '${kv("pq_index.mode")}'")
-    else if (kv.getOrElse("pq_index.mode", "") == "rebalance" &&
-        kv.getOrElse("pq.rebalance_corpus.path", "").isEmpty)
-      Left("pq_index.mode: rebalance requires pq.rebalance_corpus.path " +
-        "(the index stores only codes — retraining needs the indexed vectors)")
-    else if (!Seq("overwrite", "append").contains(
-        kv.getOrElse("bm25_index.mode", "overwrite")))
-      Left(s"bm25_index.mode must be overwrite or append, " +
-        s"got '${kv("bm25_index.mode")}'")
-    else if (!Seq("overwrite", "append", "rebalance").contains(
-        kv.getOrElse("ann_index.mode", "overwrite")))
-      Left(s"ann_index.mode must be overwrite, append or rebalance, " +
-        s"got '${kv("ann_index.mode")}'")
-    else if (steps.contains("compact") && Seq("seen_store.path",
-        "neardup_store.path", "fingerprint_store.path", "ann_index.path",
-        "bm25_index.path", "pq_index.path", "rollup_store.path")
-        .forall(k => kv.getOrElse(k, "").isEmpty))
-      Left("compact requires at least one store path to compact " +
-        "(seen_store.path / neardup_store.path / fingerprint_store.path / " +
-        "ann_index.path / bm25_index.path / pq_index.path / rollup_store.path)")
-    else if (steps.contains("rollup") && kv.getOrElse("rollup_store.path", "").isEmpty)
-      Left("rollup requires rollup_store.path")
-    else if (steps.contains("rollup") && rollupMeasureError.nonEmpty)
-      Left(rollupMeasureError.get)
-    else if (steps.contains("rollup") && rollupKeysV.isEmpty)
-      Left("rollup.keys must name at least one grouping column")
-    else if (steps.contains("rollup") &&
-        kv.getOrElse("rollup.register_mv", "false").trim == "true" &&
-        (parseMeasures(kv.getOrElse("rollup.measures", ""))
-          .getOrElse(Nil).isEmpty ||
-          kv.getOrElse("rollup.mv_raw_path", "").isEmpty))
-      Left("rollup.register_mv requires rollup.measures (the rewrite reads " +
-        "the multi-measure state naming) and rollup.mv_raw_path (the corpus " +
-        "root the MV answers for)")
-    else if (steps.contains("sample") && !kv.get("sample.fraction")
-        .flatMap(_.toDoubleOption).exists(f => f > 0.0 && f <= 1.0))
-      Left("sample requires sample.fraction in (0, 1]")
-    else if (steps.contains("sample") && !kv.getOrElse("sample.offset", "0")
-        .toDoubleOption.exists(o => o >= 0.0 &&
-          o + kv.get("sample.fraction").flatMap(_.toDoubleOption).getOrElse(0.0) <= 1.0))
-      Left("sample.offset must be >= 0 with offset + fraction <= 1")
-    // an index build is POST-write while its probe executes in-plan
-    // (pre-write): one run holding both would probe a missing/stale index,
-    // and the post-write build would then run on the PROBE's output — which
-    // has no text/vector column — and throw after the shard committed.
-    // Two runs (build, then probe) is the supported shape.
-    else if (steps.contains("bm25_index") && steps.contains("bm25_query"))
-      Left("bm25_index (post-write build) and bm25_query (pre-write probe) " +
-        "cannot share a run — build in one pipeline run, probe in the next")
-    else if (steps.contains("ann_index") && steps.contains("ann_query"))
-      Left("ann_index (post-write build) and ann_query (pre-write probe) " +
-        "cannot share a run — build in one pipeline run, probe in the next")
-    else if (steps.contains("pq_index") && steps.contains("pq_query"))
-      Left("pq_index (post-write build) and pq_query (pre-write probe) " +
-        "cannot share a run — build in one pipeline run, probe in the next")
-    else if (steps.contains("bm25_query") && steps.last != "bm25_query")
-      Left("bm25_query replaces the relation with (query_id, doc_id, rank, " +
-        "score_u, n_hit_terms) — it must be the final step")
-    else if (steps.contains("pq_query") && steps.last != "pq_query")
-      Left("pq_query replaces the relation with (query_id, neighbor_id, cos, rank) " +
-        "— it must be the final step")
-    else if (steps.contains("ann_query") && steps.last != "ann_query")
-      Left("ann_query replaces the relation with (query_id, neighbor_id, cos, rank) " +
-        "and must be the final step")
-    // copies must not feed a dedup/pack/text step: a dedup would collapse
-    // them straight back, and pack's per-source running sum is only
-    // deterministic over unique ids — only `split` (map-side on doc_id,
-    // copies share their doc's label) may follow
-    else if (steps.contains("upsample") &&
-        steps.drop(steps.indexOf("upsample") + 1).exists(_ != "split"))
-      Left("only split may follow upsample (replicated ids break dedup " +
-        "and pack determinism) — move upsample to the end")
-    // unimax replicates ids exactly like upsample — same ordering rule
-    else if (steps.contains("unimax") &&
-        steps.drop(steps.indexOf("unimax") + 1).exists(_ != "split"))
-      Left("only split may follow unimax (replicated ids break dedup " +
-        "and pack determinism) — move unimax to the end")
-    else if (steps.contains("unimax") &&
-        !kv.get("unimax.budget_tokens").flatMap(_.toLongOption).exists(_ > 0))
-      Left("unimax requires unimax.budget_tokens (a positive long)")
-    else if (steps.contains("unimax") &&
-        !kv.get("unimax.epochs").flatMap(_.toLongOption).forall(_ >= 1))
-      Left("unimax.epochs must be a positive integer (whole epochs cap)")
-    else if (!kv.get("output.buckets").flatMap(_.toIntOption).forall(_ > 0))
-      Left("output.buckets must be a positive integer")
-    else if (kv.getOrElse("output.bucket_by", "").isEmpty &&
-        kv.contains("output.buckets"))
-      Left("output.buckets without output.bucket_by does nothing — set " +
-        "output.bucket_by (the join key, e.g. doc_id) or drop output.buckets")
-    else parseRates(kv.getOrElse("mix_rates", "")) match {
-      case Left(err) => Left(err)
-      case Right(rates) if steps.contains("mix") && rates.isEmpty =>
-        Left("mix requires mix_rates (source:rate, comma-separated)")
-      case Right(rates) =>
-        parseUpsampleRates(kv.getOrElse("upsample_rates", "")) match {
-          case Left(err) => Left(err)
-          case Right(uRates) if steps.contains("upsample") && uRates.isEmpty =>
-            Left("upsample requires upsample_rates (source:rate, comma-separated)")
-          case Right(uRates) => Right(buildConfig(kv, steps, rates, uRates))
-        }
-    }
+  /** Decode every key of `kv` once into a [[PipelineConfig]], then check
+    * the cross-field rules on the typed fields. A malformed value or an
+    * unknown key is a Left naming the key. */
+  def fromKv(kv: Map[String, String]): Either[String, PipelineConfig] =
+    try {
+      val c = YamlConfig.decode(kv)(read)
+      invalid(c, bucketsGiven = kv.contains("output.buckets")).toLeft(c)
+    } catch { case e: YamlConfig.ConfigError => Left(e.getMessage) }
+
+  private def read(r: YamlConfig.Reader): PipelineConfig = {
+    val d = PipelineConfig(inputDir = "", outputDir = "", steps = Nil) // the defaults
+    def list(key: String, dflt: Seq[String]): Seq[String] =
+      r.str(key, dflt.mkString(",")).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    // the entry-list values (`name:…,…`): absent is the empty list
+    def entries[A](key: String)(p: String => Either[String, A]): A =
+      p(r.str(key, "")).fold(e => throw new YamlConfig.ConfigError(e), identity)
+    PipelineConfig(
+      inputDir = r.str("input.path", d.inputDir),
+      table = r.str("input.table", d.table),
+      outputDir = r.str("output.path", d.outputDir),
+      steps = list("steps", d.steps),
+      qualityMin = r.double("quality_min", d.qualityMin),
+      minhashThreshold = r.double("minhash_threshold", d.minhashThreshold),
+      packBudget = r.int("pack_budget", d.packBudget),
+      testPct = r.int("test_pct", d.testPct),
+      bigramMin = r.double("bigram_min", d.bigramMin),
+      chunkOverlapMax = r.double("chunk_overlap_max", d.chunkOverlapMax),
+      spanOverlapMax = r.double("span_overlap_max", d.spanOverlapMax),
+      benchmarkDir = r.str("benchmark.path", d.benchmarkDir),
+      benchmarkTable = r.str("benchmark.table", d.benchmarkTable),
+      mixRates = entries("mix_rates")(parseRates),
+      seenStorePath = r.str("seen_store.path", d.seenStorePath),
+      nearDupStorePath = r.str("neardup_store.path", d.nearDupStorePath),
+      nearDupMinJaccard = r.double("neardup_min_jaccard", d.nearDupMinJaccard),
+      fingerprintStorePath = r.str("fingerprint_store.path", d.fingerprintStorePath),
+      shardIdOverride = r.str("shard_id", d.shardIdOverride),
+      annIndexPath = r.str("ann_index.path", d.annIndexPath),
+      annIdCol = r.str("ann.id_column", d.annIdCol),
+      annVecCol = r.str("ann.vec_column", d.annVecCol),
+      annCentroids = r.int("ann.centroids", d.annCentroids),
+      annK = r.int("ann.k", d.annK),
+      annProbe = r.int("ann.n_probe", d.annProbe),
+      annMode = r.str("ann_index.mode", d.annMode),
+      pqIndexPath = r.str("pq_index.path", d.pqIndexPath),
+      pqMode = r.str("pq_index.mode", d.pqMode),
+      pqM = r.int("pq.m", d.pqM),
+      pqKCodes = r.int("pq.k_codes", d.pqKCodes),
+      bm25IndexPath = r.str("bm25_index.path", d.bm25IndexPath),
+      bm25K = r.int("bm25.k", d.bm25K),
+      bm25Mode = r.str("bm25_index.mode", d.bm25Mode),
+      dataCardPath = r.str("data_card.path", d.dataCardPath),
+      dsirTargetDir = r.str("dsir.target_path", d.dsirTargetDir),
+      dsirTargetTable = r.str("dsir.target_table", d.dsirTargetTable),
+      dsirMinU = r.long("dsir.min_u", d.dsirMinU),
+      pqRebalanceCorpusDir = r.str("pq.rebalance_corpus.path", d.pqRebalanceCorpusDir),
+      pqRebalanceCorpusTable = r.str("pq.rebalance_corpus.table", d.pqRebalanceCorpusTable),
+      upsampleRatesU = entries("upsample_rates")(parseUpsampleRates),
+      unimaxBudget = r.long("unimax.budget_tokens", d.unimaxBudget),
+      unimaxEpochs = r.long("unimax.epochs", d.unimaxEpochs),
+      fuzzyPrefixLen = r.int("fuzzy_prefix_len", d.fuzzyPrefixLen),
+      bucketBy = r.str("output.bucket_by", d.bucketBy),
+      buckets = r.int("output.buckets", d.buckets),
+      outputTable = r.str("output.table", d.outputTable),
+      sampleKeyCol = r.str("sample.key_column", d.sampleKeyCol),
+      sampleFraction = r.double("sample.fraction", d.sampleFraction),
+      sampleOffset = r.double("sample.offset", d.sampleOffset),
+      rollupStorePath = r.str("rollup_store.path", d.rollupStorePath),
+      rollupKeys = list("rollup.keys", d.rollupKeys),
+      rollupValueCol = r.str("rollup.value_column", d.rollupValueCol),
+      rollupMeasures = entries("rollup.measures")(parseMeasures),
+      rollupDistinctCol = r.str("rollup.distinct_column", d.rollupDistinctCol),
+      rollupQuantileCol = r.str("rollup.quantile_column", d.rollupQuantileCol),
+      rollupSumMap = entries("rollup.sum_map")(
+        parseTriples(_, "rollup.sum_map", "name:key_column:value_column")),
+      rollupUniqUpTo = entries("rollup.uniq_upto")(parseColN(_, "rollup.uniq_upto")).orNull,
+      rollupRegisterMv = r.bool("rollup.register_mv", d.rollupRegisterMv),
+      rollupMvRawPath = r.str("rollup.mv_raw_path", d.rollupMvRawPath),
+      rollupTopK = entries("rollup.top_k")(parseColN(_, "rollup.top_k")).orNull,
+      rollupMoments = list("rollup.moments", d.rollupMoments),
+      rollupCoMoments = entries("rollup.co_moments")(
+        parseTriples(_, "rollup.co_moments", "name:x_column:y_column")))
   }
 
-  private def buildConfig(kv: Map[String, String], steps: Seq[String],
-      rates: Map[String, Double],
-      uRates: Map[String, Long] = Map.empty): PipelineConfig =
-    PipelineConfig(
-      inputDir = kv("input.path"),
-      table = kv.getOrElse("input.table", "documents"),
-      outputDir = kv("output.path"),
-      steps = steps,
-      qualityMin = kv.get("quality_min").flatMap(_.toDoubleOption).getOrElse(0.3),
-      bigramMin = kv.get("bigram_min").flatMap(_.toDoubleOption).getOrElse(0.0),
-      minhashThreshold = kv.get("minhash_threshold").flatMap(_.toDoubleOption).getOrElse(0.7),
-      fuzzyPrefixLen = kv.get("fuzzy_prefix_len").flatMap(_.toIntOption).getOrElse(30),
-      packBudget = kv.get("pack_budget").flatMap(_.toIntOption).getOrElse(512),
-      testPct = kv.get("test_pct").flatMap(_.toIntOption).getOrElse(1),
-      chunkOverlapMax = kv.get("chunk_overlap_max").flatMap(_.toDoubleOption).getOrElse(0.5),
-      spanOverlapMax = kv.get("span_overlap_max").flatMap(_.toDoubleOption).getOrElse(0.5),
-      benchmarkDir = kv.getOrElse("benchmark.path", ""),
-      benchmarkTable = kv.getOrElse("benchmark.table", "documents"),
-      mixRates = rates,
-      seenStorePath = kv.getOrElse("seen_store.path", ""),
-      nearDupStorePath = kv.getOrElse("neardup_store.path", ""),
-      nearDupMinJaccard = kv.get("neardup_min_jaccard")
-        .flatMap(_.toDoubleOption).getOrElse(0.8),
-      fingerprintStorePath = kv.getOrElse("fingerprint_store.path", ""),
-      shardIdOverride = kv.getOrElse("shard_id", ""),
-      annIndexPath = kv.getOrElse("ann_index.path", ""),
-      annIdCol = kv.getOrElse("ann.id_column", "vec_id"),
-      annVecCol = kv.getOrElse("ann.vec_column", "embedding"),
-      annCentroids = kv.get("ann.centroids").flatMap(_.toIntOption).getOrElse(16),
-      annMode = kv.getOrElse("ann_index.mode", "overwrite"),
-      pqIndexPath = kv.getOrElse("pq_index.path", ""),
-      pqMode = kv.getOrElse("pq_index.mode", "overwrite"),
-      pqM = kv.get("pq.m").flatMap(_.toIntOption).getOrElse(8),
-      pqKCodes = kv.get("pq.k_codes").flatMap(_.toIntOption).getOrElse(32),
-      annK = kv.get("ann.k").flatMap(_.toIntOption).getOrElse(10),
-      annProbe = kv.get("ann.n_probe").flatMap(_.toIntOption).getOrElse(4),
-      bm25IndexPath = kv.getOrElse("bm25_index.path", ""),
-      bm25K = kv.get("bm25.k").flatMap(_.toIntOption).getOrElse(5),
-      bm25Mode = kv.getOrElse("bm25_index.mode", "overwrite"),
-      dataCardPath = kv.getOrElse("data_card.path", ""),
-      dsirTargetDir = kv.getOrElse("dsir.target_path", ""),
-      dsirTargetTable = kv.getOrElse("dsir.target_table", "documents"),
-      dsirMinU = kv.get("dsir.min_u").flatMap(_.toLongOption).getOrElse(0L),
-      pqRebalanceCorpusDir = kv.getOrElse("pq.rebalance_corpus.path", ""),
-      pqRebalanceCorpusTable = kv.getOrElse("pq.rebalance_corpus.table", "embeddings"),
-      upsampleRatesU = uRates,
-      unimaxBudget = kv.get("unimax.budget_tokens").flatMap(_.toLongOption).getOrElse(0L),
-      unimaxEpochs = kv.get("unimax.epochs").flatMap(_.toLongOption).getOrElse(1L),
-      bucketBy = kv.getOrElse("output.bucket_by", ""),
-      buckets = kv.get("output.buckets").flatMap(_.toIntOption).getOrElse(8),
-      outputTable = kv.getOrElse("output.table", ""),
-      sampleKeyCol = kv.getOrElse("sample.key_column", "doc_id"),
-      sampleFraction = kv.get("sample.fraction").flatMap(_.toDoubleOption).getOrElse(0.0),
-      sampleOffset = kv.get("sample.offset").flatMap(_.toDoubleOption).getOrElse(0.0),
-      rollupStorePath = kv.getOrElse("rollup_store.path", ""),
-      rollupKeys = kv.getOrElse("rollup.keys", "source")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-      rollupValueCol = kv.getOrElse("rollup.value_column", "n_chars"),
-      rollupMeasures = parseMeasures(kv.getOrElse("rollup.measures", ""))
-        .getOrElse(Nil),
-      rollupDistinctCol = kv.getOrElse("rollup.distinct_column", ""),
-      rollupQuantileCol = kv.getOrElse("rollup.quantile_column", ""),
-      rollupSumMap = parseSumMap(kv.getOrElse("rollup.sum_map", ""))
-        .getOrElse(Nil),
-      rollupUniqUpTo = parseUniqUpTo(kv.getOrElse("rollup.uniq_upto", ""))
-        .toOption.flatten.orNull,
-      rollupRegisterMv = kv.getOrElse("rollup.register_mv", "false").trim == "true",
-      rollupMvRawPath = kv.getOrElse("rollup.mv_raw_path", ""),
-      rollupTopK = parseTopK(kv.getOrElse("rollup.top_k", ""))
-        .toOption.flatten.orNull,
-      rollupMoments = kv.getOrElse("rollup.moments", "")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-      rollupCoMoments = parseCoMoments(kv.getOrElse("rollup.co_moments", ""))
-        .getOrElse(Nil))
+  /** The first cross-field rule `c` breaks. `bucketsGiven`: the config
+    * sets `output.buckets` (its default of 8 would hide that). */
+  private def invalid(c: PipelineConfig, bucketsGiven: Boolean): Option[String] = {
+    val steps = c.steps
+    def has(names: String*) = names.exists(steps.contains)
+    def after(step: String) =
+      if (has(step)) steps.drop(steps.indexOf(step) + 1) else Nil
+    val unknown = steps.filterNot(Steps.contains)
+    val mutatorsAfterSeen = after("dedup_seen").filter(TextMutatingSteps)
+    val mutatorsAfterNear = after("dedup_neardup").filter(TextMutatingSteps)
+    val modes = Seq("overwrite", "append", "rebalance")
+    Seq(
+      c.inputDir.isEmpty -> "input.path is required",
+      c.outputDir.isEmpty -> "output.path is required",
+      steps.isEmpty -> "steps is required (comma-separated)",
+      unknown.nonEmpty -> (s"unknown steps: ${unknown.mkString(", ")} " +
+        s"(known: ${Steps.keys.toSeq.sorted.mkString(", ")})"),
+      mutatorsAfterSeen.nonEmpty -> (s"text-mutating steps after dedup_seen " +
+        s"(${mutatorsAfterSeen.mkString(", ")}) would store hashes of rewritten " +
+        "text that can never match a future shard's filter-time hashes — move " +
+        "them before dedup_seen"),
+      (has("contamination_filter", "bloom_decontaminate") && c.benchmarkDir.isEmpty) ->
+        "contamination_filter / bloom_decontaminate require benchmark.path",
+      (has("dsir_filter") && c.dsirTargetDir.isEmpty) -> "dsir_filter requires dsir.target_path",
+      mutatorsAfterNear.nonEmpty -> (s"text-mutating steps after dedup_neardup " +
+        s"(${mutatorsAfterNear.mkString(", ")}) would store shingles of rewritten " +
+        "text that can never match a future shard's filter-time shingles — move " +
+        "them before dedup_neardup"),
+      (has("dedup_seen") && c.seenStorePath.isEmpty) -> "dedup_seen requires seen_store.path",
+      (has("dedup_neardup") && c.nearDupStorePath.isEmpty) ->
+        "dedup_neardup requires neardup_store.path",
+      (has("fingerprint_store") && c.fingerprintStorePath.isEmpty) ->
+        "fingerprint_store requires fingerprint_store.path",
+      (has("ann_index", "ann_query") && c.annIndexPath.isEmpty) ->
+        "ann_index / ann_query require ann_index.path",
+      (has("bm25_index", "bm25_query") && c.bm25IndexPath.isEmpty) ->
+        "bm25_index / bm25_query require bm25_index.path",
+      (has("pq_index", "pq_query") && c.pqIndexPath.isEmpty) ->
+        "pq_index / pq_query require pq_index.path",
+      !modes.contains(c.pqMode) ->
+        s"pq_index.mode must be overwrite, append or rebalance, got '${c.pqMode}'",
+      (c.pqMode == "rebalance" && c.pqRebalanceCorpusDir.isEmpty) ->
+        ("pq_index.mode: rebalance requires pq.rebalance_corpus.path " +
+          "(the index stores only codes — retraining needs the indexed vectors)"),
+      !Seq("overwrite", "append").contains(c.bm25Mode) ->
+        s"bm25_index.mode must be overwrite or append, got '${c.bm25Mode}'",
+      !modes.contains(c.annMode) ->
+        s"ann_index.mode must be overwrite, append or rebalance, got '${c.annMode}'",
+      (has("compact") && Seq(c.seenStorePath, c.nearDupStorePath,
+        c.fingerprintStorePath, c.annIndexPath, c.bm25IndexPath, c.pqIndexPath,
+        c.rollupStorePath).forall(_.isEmpty)) ->
+        ("compact requires at least one store path to compact " +
+          "(seen_store.path / neardup_store.path / fingerprint_store.path / " +
+          "ann_index.path / bm25_index.path / pq_index.path / rollup_store.path)"),
+      (has("rollup") && c.rollupStorePath.isEmpty) -> "rollup requires rollup_store.path",
+      (has("sample") && !(c.sampleFraction > 0.0 && c.sampleFraction <= 1.0)) ->
+        "sample requires sample.fraction in (0, 1]",
+      (has("sample") && !(c.sampleOffset >= 0.0 && c.sampleOffset + c.sampleFraction <= 1.0)) ->
+        "sample.offset must be >= 0 with offset + fraction <= 1",
+      // an index build is POST-write while its probe executes in-plan
+      // (pre-write): one run holding both would probe a missing/stale
+      // index, and the post-write build would then run on the PROBE's
+      // output — which has no text/vector column — and throw after the
+      // shard committed. Two runs (build, then probe) is the supported shape.
+      (has("bm25_index") && has("bm25_query")) ->
+        ("bm25_index (post-write build) and bm25_query (pre-write probe) " +
+          "cannot share a run — build in one pipeline run, probe in the next"),
+      (has("ann_index") && has("ann_query")) ->
+        ("ann_index (post-write build) and ann_query (pre-write probe) " +
+          "cannot share a run — build in one pipeline run, probe in the next"),
+      (has("pq_index") && has("pq_query")) ->
+        ("pq_index (post-write build) and pq_query (pre-write probe) " +
+          "cannot share a run — build in one pipeline run, probe in the next"),
+      (has("bm25_query") && steps.last != "bm25_query") ->
+        ("bm25_query replaces the relation with (query_id, doc_id, rank, " +
+          "score_u, n_hit_terms) — it must be the final step"),
+      (has("pq_query") && steps.last != "pq_query") ->
+        ("pq_query replaces the relation with (query_id, neighbor_id, cos, rank) " +
+          "— it must be the final step"),
+      (has("ann_query") && steps.last != "ann_query") ->
+        ("ann_query replaces the relation with (query_id, neighbor_id, cos, rank) " +
+          "and must be the final step"),
+      // copies must not feed a dedup/pack/text step: a dedup would collapse
+      // them straight back, and pack's per-source running sum is only
+      // deterministic over unique ids — only `split` (map-side on doc_id,
+      // copies share their doc's label) may follow. unimax replicates ids
+      // exactly like upsample.
+      after("upsample").exists(_ != "split") ->
+        ("only split may follow upsample (replicated ids break dedup " +
+          "and pack determinism) — move upsample to the end"),
+      after("unimax").exists(_ != "split") ->
+        ("only split may follow unimax (replicated ids break dedup " +
+          "and pack determinism) — move unimax to the end"),
+      (has("unimax") && c.unimaxBudget <= 0) ->
+        "unimax requires unimax.budget_tokens (a positive long)",
+      (has("unimax") && c.unimaxEpochs < 1) ->
+        "unimax.epochs must be a positive integer (whole epochs cap)",
+      (c.buckets <= 0) -> "output.buckets must be a positive integer",
+      (bucketsGiven && c.bucketBy.isEmpty) ->
+        ("output.buckets without output.bucket_by does nothing — set " +
+          "output.bucket_by (the join key, e.g. doc_id) or drop output.buckets"),
+      (has("mix") && c.mixRates.isEmpty) ->
+        "mix requires mix_rates (source:rate, comma-separated)",
+      (has("upsample") && c.upsampleRatesU.isEmpty) ->
+        "upsample requires upsample_rates (source:rate, comma-separated)"
+    ).collectFirst { case (true, err) => err }
+      .orElse(if (has("rollup")) rollupInvalid(c) else None)
+  }
 
-  /** `user_id:1000` → Right(Some((user_id, 1000))): the
-    * `rollup.uniq_upto` entry — distinct column and cap. Strict. */
-  private[cli] def parseUniqUpTo(s: String): Either[String, Option[(String, Int)]] =
-    parseColN(s, "rollup.uniq_upto")
+  /** The rollup rules. Every malformed shape — unparseable SQL, duplicate
+    * measure names, keys colliding with the state names the measures will
+    * generate — must fail HERE, before the shard output commits, not in
+    * the post-write fold where each replay re-fails and wedges the run
+    * mid-protocol. (Expressions are parsed with CatalystSqlParser
+    * explicitly: Spark 4's functions.expr defers parsing to analysis, so
+    * Try(expr(...)) alone accepts any garbage.) */
+  private def rollupInvalid(c: PipelineConfig): Option[String] = {
+    val ms = c.rollupMeasures
+    val dups = ms.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
+    val unparseable = ms.filter(m => !measureSqlParses(m._2))
+    // reserved names mirror partialStates' construction: only the states
+    // THIS config actually generates (a store keyed on a column literally
+    // named q_sketch is fine when no rollup.quantile_column is set —
+    // over-reserving rejected it)
+    val stateNames =
+      (if (ms.isEmpty) Seq("sum_micros", "min_v", "max_v", "cnt_v")
+       else ms.flatMap(m => Seq(s"${m._1}_sum_u", s"${m._1}_min", s"${m._1}_max",
+         s"${m._1}_cnt"))) ++
+        c.rollupSumMap.map(sm => s"${sm._1}_summap") ++
+        Option(c.rollupUniqUpTo).map(u => s"uniq_upto_${u._2}_sk") ++
+        Option(c.rollupTopK).map(t => s"topk_${t._2}_sk") ++
+        c.rollupMoments.flatMap(m => Seq(s"${m}_sum2", s"${m}_var",
+          s"${m}_var_pop", s"${m}_std", s"${m}_std_pop")) ++
+        c.rollupCoMoments.flatMap { case (nm, _, _) =>
+          Seq(s"${nm}_pn", s"${nm}_sx", s"${nm}_sy", s"${nm}_sxx",
+            s"${nm}_syy", s"${nm}_sxy", s"${nm}_corr", s"${nm}_cov",
+            s"${nm}_cov_pop") } ++
+        Option.when(c.rollupDistinctCol.nonEmpty)("n_distinct_sk") ++
+        Option.when(c.rollupQuantileCol.nonEmpty)("q_sketch") ++
+        Seq("n")
+    val collide = c.rollupKeys.intersect(stateNames)
+    if (c.rollupMoments.exists(m => !ms.exists(_._1 == m)))
+      Some("rollup.moments must name rollup.measures entries " +
+        s"(have ${ms.map(_._1).mkString(", ")})")
+    // the single-measure append path has no co-moment arm — dropping the
+    // states silently would be worse than rejecting the config
+    else if (ms.isEmpty && c.rollupCoMoments.nonEmpty)
+      Some("rollup.co_moments requires rollup.measures (multi-measure form)")
+    else if (dups.nonEmpty)
+      Some(s"rollup.measures: duplicate measure name(s): ${dups.mkString(", ")}")
+    else if (unparseable.nonEmpty)
+      Some("rollup.measures: unparseable expression in " +
+        unparseable.map(m => s"'${m._1}:${m._2}'").mkString(", "))
+    else if (collide.nonEmpty)
+      Some(s"rollup.keys collide with rollup state names: ${collide.mkString(", ")}")
+    else if (c.rollupKeys.isEmpty)
+      Some("rollup.keys must name at least one grouping column")
+    else if (c.rollupRegisterMv && (ms.isEmpty || c.rollupMvRawPath.isEmpty))
+      Some("rollup.register_mv requires rollup.measures (the rewrite reads " +
+        "the multi-measure state naming) and rollup.mv_raw_path (the corpus " +
+        "root the MV answers for)")
+    else None
+  }
 
-  /** `event_type:8` → Right(Some((event_type, 8))): the `rollup.top_k`
-    * entry — tracked item column and MG capacity. Strict. */
-  private[cli] def parseTopK(s: String): Either[String, Option[(String, Int)]] =
-    parseColN(s, "rollup.top_k")
-
+  /** `user_id:1000` → Right(Some((user_id, 1000))): a `column:N` entry —
+    * `rollup.uniq_upto` (distinct column and cap) or `rollup.top_k`
+    * (tracked item column and MG capacity). Strict. */
   private def parseColN(s: String,
       key: String): Either[String, Option[(String, Int)]] = {
     if (s.trim.isEmpty) return Right(None)
@@ -580,45 +517,21 @@ object GraftPipeline {
   }
 
   /** `by_lang:lang:n_chars,…` → Right(Seq((by_lang, lang, n_chars), …)):
-    * the `rollup.sum_map` entries — map-state name, map key column, and
-    * summed value column. Strict: a malformed entry fails the config. */
-  private[cli] def parseSumMap(s: String): Either[String, Seq[(String, String, String)]] = {
-    if (s.trim.isEmpty) return Right(Nil)
-    val entries = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val parsed = entries.map { e => (e, e.split(":").map(_.trim).toSeq) }
+    * the `name:a:b` entries of `key` — `rollup.sum_map` (map-state name,
+    * map key column, summed value column) or `rollup.co_moments`
+    * (pair-state name, x column, y column). Strict: a malformed entry or
+    * a repeated name fails the config. */
+  private def parseTriples(s: String, key: String,
+      shape: String): Either[String, Seq[(String, String, String)]] = {
+    val parsed = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      .map(e => (e, e.split(":").map(_.trim).toSeq))
     parsed.collectFirst {
       case (e, parts) if parts.length != 3 || parts.exists(_.isEmpty) =>
-        s"rollup.sum_map: entry '$e' must be name:key_column:value_column"
-    } match {
-      case Some(err) => Left(err)
-      case None =>
-        val names = parsed.map(_._2.head)
-        val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
-        if (dups.nonEmpty)
-          Left(s"rollup.sum_map: duplicate map name(s): ${dups.mkString(", ")}")
-        else Right(parsed.map(p => (p._2(0), p._2(1), p._2(2))))
-    }
-  }
-
-  /** `qp:n_tokens:n_chars,…` → Right(Seq((qp, n_tokens, n_chars), …)):
-    * the `rollup.co_moments` entries — pair-state name, x column, y
-    * column. Strict like [[parseSumMap]]. */
-  private[cli] def parseCoMoments(s: String): Either[String, Seq[(String, String, String)]] = {
-    if (s.trim.isEmpty) return Right(Nil)
-    val entries = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val parsed = entries.map { e => (e, e.split(":").map(_.trim).toSeq) }
-    parsed.collectFirst {
-      case (e, parts) if parts.length != 3 || parts.exists(_.isEmpty) =>
-        s"rollup.co_moments: entry '$e' must be name:x_column:y_column"
-    } match {
-      case Some(err) => Left(err)
-      case None =>
-        val names = parsed.map(_._2.head)
-        val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
-        if (dups.nonEmpty)
-          Left(s"rollup.co_moments: duplicate pair name(s): ${dups.mkString(", ")}")
-        else Right(parsed.map(p => (p._2(0), p._2(1), p._2(2))))
-    }
+        s"$key: entry '$e' must be $shape"
+    }.orElse {
+      val dups = parsed.map(_._2.head).groupBy(identity).collect { case (n, g) if g.size > 1 => n }
+      Option.when(dups.nonEmpty)(s"$key: duplicate name(s): ${dups.mkString(", ")}")
+    }.toLeft(parsed.map { case (_, p) => (p(0), p(1), p(2)) })
   }
 
   private def measureSqlParses(e: String): Boolean =
@@ -657,21 +570,11 @@ object GraftPipeline {
   /** `web:0.25,news:1.0` → Right(Map(web -> 0.25, …)). Strict: a malformed
     * entry or a rate outside [0, 1] fails the whole config — silently
     * dropping `web:0.2five` would leave the dominant source unsampled. */
-  private[cli] def parseRates(s: String): Either[String, Map[String, Double]] = {
-    val entries = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val parsed = entries.map { e =>
-      e.split(":", 2) match {
-        case Array(k, v) => v.trim.toDoubleOption match {
-          case Some(r) if r >= 0.0 && r <= 1.0 => Right(k.trim -> r)
-          case Some(r) => Left(s"mix_rates: rate out of [0,1] for '$k': $r")
-          case None => Left(s"mix_rates: unparseable rate in '$e'")
-        }
-        case _ => Left(s"mix_rates: expected source:rate, got '$e'")
-      }
+  private[cli] def parseRates(s: String): Either[String, Map[String, Double]] =
+    parseSourceRates(s, "mix_rates") { (k, r) =>
+      if (r >= 0.0 && r <= 1.0) Right(r)
+      else Left(s"mix_rates: rate out of [0,1] for '$k': $r")
     }
-    parsed.collectFirst { case Left(err) => err }
-      .toLeft(parsed.collect { case Right(kv) => kv }.toMap)
-  }
 
   /** `books:2.5,crawl:0.8` → Right(Map(books -> 2500000, …)) in exact
     * MICRO-UNITS (the [[graft.queries.CurationQueries.epochUpsample]]
@@ -679,21 +582,25 @@ object GraftPipeline {
     * replication is the whole point — but a rate that would round to a
     * different micro-value than the user wrote (more than 6 decimals)
     * fails loudly rather than silently mis-replicating. */
-  private[cli] def parseUpsampleRates(s: String): Either[String, Map[String, Long]] = {
-    val entries = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val parsed = entries.map { e =>
+  private[cli] def parseUpsampleRates(s: String): Either[String, Map[String, Long]] =
+    parseSourceRates(s, "upsample_rates") { (k, r) =>
+      val u = math.round(r * 1e6)
+      if (r < 0.0) Left(s"upsample_rates: negative rate for '$k': $r")
+      else if (math.abs(u - r * 1e6) > 1e-3)
+        Left(s"upsample_rates: '$k' rate $r has sub-micro precision (max 6 decimals)")
+      else Right(u)
+    }
+
+  /** The `source:rate` entries of `key`, each rate checked by `rate`;
+    * the first malformed entry fails them all. */
+  private def parseSourceRates[V](s: String, key: String)(
+      rate: (String, Double) => Either[String, V]): Either[String, Map[String, V]] = {
+    val parsed = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { e =>
       e.split(":", 2) match {
-        case Array(k, v) => v.trim.toDoubleOption match {
-          case Some(r) if r >= 0.0 =>
-            val u = math.round(r * 1e6)
-            if (math.abs(u - r * 1e6) > 1e-3)
-              Left(s"upsample_rates: '$k' rate $r has sub-micro precision " +
-                "(max 6 decimals)")
-            else Right(k.trim -> u)
-          case Some(r) => Left(s"upsample_rates: negative rate for '$k': $r")
-          case None => Left(s"upsample_rates: unparseable rate in '$e'")
-        }
-        case _ => Left(s"upsample_rates: expected source:rate, got '$e'")
+        case Array(k, v) => v.trim.toDoubleOption
+          .toRight(s"$key: unparseable rate in '$e'")
+          .flatMap(rate(k.trim, _)).map(k.trim -> _)
+        case _ => Left(s"$key: expected source:rate, got '$e'")
       }
     }
     parsed.collectFirst { case Left(err) => err }
@@ -1338,10 +1245,7 @@ object GraftPipeline {
       System.err.println(s"$Name: usage: --config <pipeline.yaml>")
       sys.exit(2)
     }
-    val text = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(cfgIdx + 1))),
-      java.nio.charset.StandardCharsets.UTF_8)
-    fromKv(YamlConfig.parse(text)) match {
+    YamlConfig.loadWith(args(cfgIdx + 1))(t => fromKv(YamlConfig.parse(t))) match {
       case Left(err) =>
         System.err.println(s"$Name: $err"); sys.exit(2)
       case Right(cfg) =>

@@ -1,15 +1,21 @@
 package graft.cli
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.yaml.snakeyaml.Yaml
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.nodes.{MappingNode, Node, ScalarNode}
 
 /** Config-file support — the reference's primary UX
-  * (`/root/reference/config/config.go:29-66` + `config.yaml`): a YAML file
+  * (reference `config/config.go:29-66` + `config.yaml`): a YAML file
   * with `source`/`destination` connection blocks and the copy flags.
   *
-  * The environment pins the dependency set (no YAML library), so this is a
-  * minimal parser for exactly the reference file's shape: two levels of
-  * `key: value`, full-line comments, quoted or bare scalars. It flattens to
-  * dotted keys (`source.table`, `worker_pool.num_workers`, `check_hashes`).
+  * One decode path serves both CLIs: [[parse]] reads the YAML with
+  * snakeyaml (on the Spark classpath) into dotted keys (`source.table`,
+  * `worker_pool.num_workers`, `check_hashes`), and a [[Reader]] decodes
+  * each key once into a typed field. A malformed value, an unknown key or
+  * a duplicate key fails with a [[ConfigError]] that names the key.
   *
   * File-backed endpoints use `path:` (parquet root dir) where a ClickHouse
   * endpoint uses host/database; both vocabularies are accepted so the
@@ -42,9 +48,12 @@ object YamlConfig {
     * in the reference, its README marks it broken) is WIRED here: >1 runs
     * repairs as that many concurrent per-partition Spark jobs
     * ([[graft.recon.Reconciler.Config.parallelism]]); default 0 keeps the
-    * fused single-job repair. `worker_pool.num_retry`/`chan_len`
-    * (config.go:23-27) dissolve into Spark's `spark.task.maxFailures` and
-    * scheduler queueing — there is no client-side channel to size. */
+    * fused single-job repair. `worker_pool.num_retry`/`chan_len` are
+    * declared in the reference (config.go:23-27) but never referenced
+    * there; here they dissolve into Spark's `spark.task.maxFailures` and
+    * scheduler queueing — there is no client-side channel to size. The
+    * loader accepts them (the reference's own file sets them) and ignores
+    * their values. */
   final case class GraftConfig(
       source: Endpoint = Endpoint(),
       destination: Endpoint = Endpoint(),
@@ -56,71 +65,135 @@ object YamlConfig {
       debug: Boolean = false,
       numWorkers: Int = 0)
 
-  private def stripQuotes(s: String): String =
-    if (s.length >= 2 && ((s.head == '"' && s.last == '"') || (s.head == '\'' && s.last == '\'')))
-      s.substring(1, s.length - 1)
-    else s
+  /** A config that cannot be read or decoded; the message names the key
+    * (or the file). */
+  final class ConfigError(msg: String) extends IllegalArgumentException(msg)
 
-  /** Flatten the two-level YAML subset to dotted keys. Unknown keys are
-    * kept (callers ignore them), malformed lines skipped. */
+  private def fail(msg: String): Nothing = throw new ConfigError(msg)
+
+  /** YAML `text` → dotted keys. Nested mappings flatten
+    * (`pq.rebalance_corpus:` / `path:` → `pq.rebalance_corpus.path`), and
+    * each value is its scalar's source text, not a type-resolved value:
+    * `shard_id: 007` stays `007`, and a trailing `# comment` is not part of
+    * it. Malformed YAML, a duplicate key (within one mapping, or after
+    * flattening), a sequence and an anchor or alias fail with a
+    * [[ConfigError]]. */
   def parse(text: String): Map[String, String] = {
     val out = mutable.LinkedHashMap.empty[String, String]
-    var section = ""
-    text.linesIterator.foreach { raw =>
-      val trimmed = raw.trim
-      if (trimmed.nonEmpty && !trimmed.startsWith("#")) {
-        val indented = raw.startsWith(" ") || raw.startsWith("\t")
-        trimmed.split(":", 2) match {
-          case Array(k, v) =>
-            val key = k.trim
-            val value = stripQuotes(v.trim)
-            if (!indented) {
-              if (value.isEmpty) section = key
-              else { section = ""; out(key) = value }
-            } else if (section.nonEmpty) out(s"$section.$key") = value
-            else out(key) = value
-          case _ => ()
+    def flatten(key: String, node: Node): Unit = node match {
+      case _ if node.getAnchor != null => fail(s"$key: anchors and aliases are not supported")
+      case s: ScalarNode =>
+        if (out.contains(key)) fail(s"duplicate config key: $key")
+        out(key) = s.getValue
+      case m: MappingNode =>
+        val names = mutable.Set.empty[String] // a repeated block is a duplicate too
+        m.getValue.asScala.foreach { t =>
+          t.getKeyNode match {
+            case k: ScalarNode =>
+              val full = if (key.isEmpty) k.getValue else s"$key.${k.getValue}"
+              if (!names.add(k.getValue)) fail(s"duplicate config key: $full")
+              flatten(full, t.getValueNode)
+            case _ => fail(s"${if (key.isEmpty) "top level" else key}: keys must be plain scalars")
+          }
         }
-      }
+      case _ => fail(s"$key: sequences are not supported")
+    }
+    val root =
+      try new Yaml().compose(new java.io.StringReader(text))
+      catch { case e: YAMLException => fail(s"malformed YAML: ${e.getMessage}") }
+    root match {
+      case null => () // an empty file or only comments
+      case m: MappingNode => flatten("", m)
+      case _ => fail("a config file must be a mapping of keys to values")
     }
     out.toMap
   }
 
+  /** Strict typed reads over [[parse]]'s keys. Each read takes its default
+    * from the config case class, records its key, and throws a
+    * [[ConfigError]] naming the key when the value does not decode. */
+  final class Reader private[YamlConfig] (kv: Map[String, String]) {
+    private val seen = mutable.Set.empty[String]
+
+    private def read[A](key: String, dflt: A, shape: String)(f: String => Option[A]): A = {
+      seen += key
+      kv.get(key).fold(dflt)(v =>
+        f(v).getOrElse(fail(s"$key: expected $shape, got '$v'")))
+    }
+
+    def str(key: String, dflt: String): String = read(key, dflt, "a string")(Some(_))
+    def int(key: String, dflt: Int): Int = read(key, dflt, "an integer")(_.toIntOption)
+    def long(key: String, dflt: Long): Long = read(key, dflt, "an integer")(_.toLongOption)
+    def double(key: String, dflt: Double): Double =
+      read(key, dflt, "a number")(v => Option.when(Decimal.matches(v))(v.toDouble))
+    def bool(key: String, dflt: Boolean): Boolean =
+      read(key, dflt, "true or false")(Map("true" -> true, "false" -> false).get)
+
+    /** Accept `keys` without decoding them. */
+    def ignore(keys: String*): Unit = seen ++= keys
+
+    private[YamlConfig] def unread: Set[String] = kv.keySet -- seen
+  }
+
+  private val Decimal = """[-+]?(\d+\.?\d*|\.\d+)([eE][-+]?\d+)?""".r
+
+  /** Decode `kv` with `f`, then fail on any key `f` did not read. */
+  def decode[A](kv: Map[String, String])(f: Reader => A): A = {
+    val r = new Reader(kv)
+    val a = f(r)
+    if (r.unread.nonEmpty)
+      fail(s"unknown config key(s): ${r.unread.toSeq.sorted.mkString(", ")}")
+    a
+  }
+
   // lenient like the reference's own config.yaml (which contains `fasle`):
   // anything but the literal true is false
-  private def bool(kv: Map[String, String], key: String, dflt: Boolean): Boolean =
-    kv.get(key).map(_ == "true").getOrElse(dflt)
+  private def flag(r: Reader, key: String, dflt: Boolean): Boolean =
+    r.str(key, dflt.toString) == "true"
 
-  private def endpoint(kv: Map[String, String], prefix: String): Endpoint =
+  private def endpoint(r: Reader, side: String): Endpoint = {
+    val d = Endpoint()
     Endpoint(
-      path = kv.getOrElse(s"$prefix.path", ""),
-      table = kv.getOrElse(s"$prefix.table", ""),
-      host = kv.getOrElse(s"$prefix.host", ""),
-      port = kv.get(s"$prefix.port").flatMap(_.toIntOption).getOrElse(9000),
-      user = kv.getOrElse(s"$prefix.user", "default"),
-      password = kv.getOrElse(s"$prefix.password", ""),
-      database = kv.getOrElse(s"$prefix.database", ""),
-      secure = bool(kv, s"$prefix.secure", dflt = false),
-      skipVerify = bool(kv, s"$prefix.skip_verify", dflt = false),
-      keyFilename = kv.getOrElse(s"$prefix.key_filename", ""))
+      path = r.str(s"$side.path", d.path),
+      table = r.str(s"$side.table", d.table),
+      host = r.str(s"$side.host", d.host),
+      port = r.int(s"$side.port", d.port),
+      user = r.str(s"$side.user", d.user),
+      password = r.str(s"$side.password", d.password),
+      database = r.str(s"$side.database", d.database),
+      secure = flag(r, s"$side.secure", d.secure),
+      skipVerify = flag(r, s"$side.skip_verify", d.skipVerify),
+      keyFilename = r.str(s"$side.key_filename", d.keyFilename))
+  }
 
-  def fromText(text: String): GraftConfig = {
-    val kv = parse(text)
+  def fromText(text: String): GraftConfig = decode(parse(text)) { r =>
+    val d = GraftConfig()
+    r.ignore("worker_pool.num_retry", "worker_pool.chan_len")
     GraftConfig(
-      source = endpoint(kv, "source"),
-      destination = endpoint(kv, "destination"),
-      partitionKey = kv.getOrElse("partition_key", ""),
-      checkHashes = bool(kv, "check_hashes", dflt = true),
-      skipDelete = bool(kv, "skip_delete", dflt = false),
-      skipReimport = bool(kv, "skip_reimport", dflt = false),
-      useVirtualColumn = bool(kv, "use_virtual_column", dflt = false),
-      debug = bool(kv, "debug", dflt = false),
-      numWorkers = kv.get("worker_pool.num_workers").flatMap(_.toIntOption).getOrElse(0))
+      source = endpoint(r, "source"),
+      destination = endpoint(r, "destination"),
+      partitionKey = r.str("partition_key", d.partitionKey),
+      checkHashes = flag(r, "check_hashes", d.checkHashes),
+      skipDelete = flag(r, "skip_delete", d.skipDelete),
+      skipReimport = flag(r, "skip_reimport", d.skipReimport),
+      useVirtualColumn = flag(r, "use_virtual_column", d.useVirtualColumn),
+      debug = flag(r, "debug", d.debug),
+      numWorkers = r.int("worker_pool.num_workers", d.numWorkers))
   }
 
   def load(path: String): GraftConfig =
-    fromText(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
+    loadWith(path)(t => Right(fromText(t))).fold(fail, identity)
+
+  /** `f` over the text of config file `path`. An unreadable file, malformed
+    * YAML, a value that does not decode and a Left of `f` all come back as
+    * a Left that names the file. */
+  def loadWith[A](path: String)(f: String => Either[String, A]): Either[String, A] =
+    (try f(readFile(path)) catch { case e: ConfigError => Left(e.getMessage) })
+      .left.map(err => s"$path: $err")
+
+  private def readFile(path: String): String =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+    catch { case e: java.io.IOException => fail(s"cannot read the file (${e.getClass.getSimpleName})") }
 
   /** `config.Check()` (`/root/reference/config/config.go:66-71`): both
     * endpoints must name a table and a location. */

@@ -61,6 +61,12 @@ class GraftCopySpec extends SparkSpec {
 
   test("usage errors return the usage status") {
     assert(GraftCopy.run(Seq("--info", "onlyonearg")) == Status.UsageFail)
+    // an unreadable or undecodable config file is a usage error, not a throw
+    val dir = tmpDir("graftcfg-bad")
+    assert(GraftCopy.run(Seq("--info", "--config", s"$dir/missing.yaml")) == Status.UsageFail)
+    val bad = java.nio.file.Paths.get(s"$dir/bad.yaml")
+    java.nio.file.Files.writeString(bad, "source:\n  port: 90o0\n")
+    assert(GraftCopy.run(Seq("--info", "--config", bad.toString)) == Status.UsageFail)
   }
 
   test("flat single-file destination: info compares; sync migrates to partitioned layout") {
