@@ -16,8 +16,10 @@ import graft.text.TextAnalysis
   * ONE lazy DataFrame chain and writes split-partitioned parquet shards —
   * Catalyst sees the whole pipeline as a single plan, so column pruning /
   * filter ordering apply across steps and nothing materialises between
-  * them. A worked example, with comments on each key, is the test
-  * resource `graft/cli/pipeline-example.yaml`.
+  * them, except where a step reads its input twice (`pack`) or probes a
+  * store (`dedup_neardup`): that input is materialised once. A worked
+  * example, with comments on each key, is the test resource
+  * `graft/cli/pipeline-example.yaml`.
   *
   * Steps (any order, any subset):
   *  - `strip_html` — crude tag/script removal for web-crawl input
@@ -445,7 +447,42 @@ object GraftPipeline {
       (has("upsample") && c.upsampleRatesU.isEmpty) ->
         "upsample requires upsample_rates (source:rate, comma-separated)"
     ).collectFirst { case (true, err) => err }
+      .orElse(overlappingStores(c))
       .orElse(if (has("rollup")) rollupInvalid(c) else None)
+  }
+
+  /** The post-write folds run concurrently ([[postWrite]]), each in its
+    * own store tree, so two configured store paths must not be equal or
+    * nested; nor may a store lie on or inside `output.path` (the write
+    * overwrites it) or `rollup.mv_raw_path` (the corpus root the MV
+    * answers for would read the store as corpus files). `output.path`
+    * inside `rollup.mv_raw_path` is the intended layout and is not
+    * checked. Names both keys of the first clash. */
+  private def overlappingStores(c: PipelineConfig): Option[String] = {
+    val stores = Seq(
+      "seen_store.path" -> c.seenStorePath,
+      "neardup_store.path" -> c.nearDupStorePath,
+      "fingerprint_store.path" -> c.fingerprintStorePath,
+      "rollup_store.path" -> c.rollupStorePath,
+      "ann_index.path" -> c.annIndexPath,
+      "pq_index.path" -> c.pqIndexPath,
+      "bm25_index.path" -> c.bm25IndexPath) ++
+      Option.when(c.steps.contains("data_card"))(
+        (if (c.dataCardPath.nonEmpty) "data_card.path" else "data_card.path (default)") ->
+          c.cardPath)
+    val roots = Seq("output.path" -> c.outputDir, "rollup.mv_raw_path" -> c.rollupMvRawPath)
+    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.normalize().toString
+    def overlap(a: String, b: String) = {
+      val (x, y) = (norm(a), norm(b))
+      x == y || x.startsWith(y.stripSuffix("/") + "/") || y.startsWith(x.stripSuffix("/") + "/")
+    }
+    val set = stores.filter(_._2.nonEmpty)
+    val pairs = set.combinations(2).map { case Seq(a, b) => (a, b) } ++
+      (for (s <- set; r <- roots if r._2.nonEmpty) yield (s, r))
+    pairs.collectFirst { case ((ka, a), (kb, b)) if overlap(a, b) =>
+      s"$ka ($a) and $kb ($b) overlap — each post-write store needs its own " +
+        "tree, apart from the output and the MV corpus root"
+    }
   }
 
   /** The rollup rules. Every malformed shape — unparseable SQL, duplicate
@@ -932,17 +969,24 @@ object GraftPipeline {
           .otherwise("train")
       })),
     // two-level (source, shard) offsets — one giant source cannot become
-    // a single-task sort (CurationQueries.packIds, q58's shape)
+    // a single-task sort (CurationQueries.packIds, q58's shape). packIds
+    // reads its input twice (the per-shard bases and the row window), and
+    // here that input is the whole upstream chain (normalize → … → the
+    // dedup probes), so it is materialised once (executor-local, eager)
+    // and both branches read the blocks
     "pack" -> ((c, df) =>
       CurationQueries.packIds(
-        df.withColumn("__n_tokens", TextAnalysis.tokenCount(col("text")).cast("long")),
+        df.withColumn("__n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
+          .localCheckpoint(eager = true),
         "source", "doc_id", "__n_tokens", c.packBudget)
         .drop("__n_tokens")))
 
-  /** Compose the configured steps over the input table (lazy — one plan),
-    * plus the batch signatures the `dedup_neardup` probe materialised
-    * ([[graft.dedup.NearDupStore.filterNewWithSigs]]) for the post-write
-    * fold to reuse; None without the step or against an empty store. */
+  /** Compose the configured steps over the input table (lazy — one plan,
+    * except the materialised inputs of `dedup_neardup`'s probe and of
+    * `pack`), plus the batch signatures the `dedup_neardup` probe
+    * materialised ([[graft.dedup.NearDupStore.filterNewWithSigs]]) for the
+    * post-write fold to reuse; None without the step or against an empty
+    * store. */
   def plan(spark: SparkSession,
       cfg: PipelineConfig): (DataFrame, Option[DataFrame]) = {
     val in = graft.core.Tables.load(spark, cfg.inputDir, cfg.table)
@@ -962,21 +1006,30 @@ object GraftPipeline {
     *  1. A shard already recorded in the SEEN store short-circuits the
     *     WHOLE run — its hashes are all "seen", so re-filtering would emit
     *     an empty relation and clobber the shard's committed output.
-    *  2. Otherwise: write output, THEN fold fingerprints (in-store
-    *     shard-id guard makes it idempotent), THEN update the seen store
-    *     (which also records the shard id). A crash before the seen
-    *     update replays with the seen store unchanged, so the re-run
-    *     recomputes the identical output and the fingerprint fold skips;
-    *     a crash after it short-circuits at step 1. Either way the stores
-    *     never record rows the output does not hold, and no committed
-    *     output is ever destroyed.
+    *  2. Otherwise: write the output, and only after it commits run the
+    *     post-write folds ([[postWrite]]) as concurrent legs — seen,
+    *     near-dup, fingerprint, rollup (+ `register_mv`), IVF/PQ (+ its
+    *     rebalance), BM25, data card — then `compact` once every leg has
+    *     finished. The orderings that remain carry the contract: write
+    *     before any fold (no store records a row the output does not
+    *     hold), `register_mv` after its rollup fold and each rebalance
+    *     after its own append (same leg), compaction after the join. No
+    *     other order is needed: each leg writes its own store tree
+    *     ([[invalid]] rejects overlapping store paths) and commits through
+    *     its own shard-id guard, so at any crash point each store holds
+    *     either its pre-fold or its post-fold state, independently of the
+    *     others. If neither dedup store recorded the shard, the replay
+    *     recomputes the identical output (both stores still lack the
+    *     shard, so the filters see what the first run saw) and every fold
+    *     that already landed skips on its guard; otherwise the replay
+    *     takes step 1. Either way no committed output is ever destroyed.
     *  3. The short-circuit still runs every post-write step against the
     *     committed output ([[postWrite]]): each store fold is a no-op
     *     where its shard id is recorded, and the data card is re-derived
     *     only when its recorded output fingerprint differs from the
     *     committed output's ([[writeDataCard]]) — so a replay of a
-    *     completed shard reads no document text, and a crash between any
-    *     two post-write steps heals. */
+    *     completed shard reads no document text, and a crash in any
+    *     post-write leg heals. */
   def run(spark: SparkSession, cfg: PipelineConfig): (Long, Long) = {
     val in = graft.core.Tables.load(spark, cfg.inputDir, cfg.table).count()
     // a shard recorded in ANY incremental store must not re-filter: its
@@ -1056,20 +1109,49 @@ object GraftPipeline {
 
   /** Every post-write maintenance step, each idempotent per shard id (or
     * a pure function of the committed output), so [[run]] can execute the
-    * same sequence on the first pass AND on a replay short-circuit — a
-    * crash between any two of these heals on the next run. `probeSigs`:
-    * the near-dup probe's materialised batch signatures when this run
-    * probed ([[plan]]), so the near-dup fold semi-joins them instead of
-    * recomputing signatures from the written text; None (the
-    * short-circuit, or an empty store) folds from the text. */
-  private def postWrite(spark: SparkSession, cfg: PipelineConfig,
+    * same set on the first pass AND on a replay short-circuit — a crash
+    * in any of them heals on the next run. The folds run as concurrent
+    * [[graft.core.Par.all]] legs ([[postWriteLegs]]: each writes its own
+    * store tree); `compact` runs after every leg has finished. */
+  private[cli] def postWrite(spark: SparkSession, cfg: PipelineConfig,
       written: DataFrame, probeSigs: Option[DataFrame]): Unit = {
-    if (cfg.steps.contains("fingerprint_store")) {
+    graft.core.Par.all(postWriteLegs(spark, cfg, written, probeSigs).map(_._2))
+    if (cfg.steps.contains("compact")) {
+      if (cfg.seenStorePath.nonEmpty)
+        graft.dedup.SeenStore.compact(spark, cfg.seenStorePath)
+      if (cfg.nearDupStorePath.nonEmpty)
+        graft.dedup.NearDupStore.compact(spark, cfg.nearDupStorePath)
+      if (cfg.fingerprintStorePath.nonEmpty)
+        graft.core.AtomicStore.compact(spark, cfg.fingerprintStorePath)
+      if (cfg.annIndexPath.nonEmpty && graft.core.Fs.exists(spark, cfg.annIndexPath))
+        graft.sim.Similarity.compactIvfIndex(spark, cfg.annIndexPath)
+      if (cfg.pqIndexPath.nonEmpty &&
+          graft.sim.Similarity.indexExists(spark, cfg.pqIndexPath))
+        graft.sim.Similarity.compactPqIndex(spark, cfg.pqIndexPath)
+      if (cfg.bm25IndexPath.nonEmpty &&
+          graft.core.Fs.exists(spark, s"${cfg.bm25IndexPath}/meta"))
+        graft.text.Retrieval.compactBm25Index(spark, cfg.bm25IndexPath)
+      if (cfg.rollupStorePath.nonEmpty)
+        graft.agg.AggStore.compact(spark, cfg.rollupStorePath)
+    }
+  }
+
+  /** The configured post-write folds, one leg per step, named by it. Each
+    * leg writes only its own store tree ([[invalid]] rejects overlapping
+    * store paths), so the legs carry no ordering contract between them;
+    * the orderings that do carry one stay inside a leg: `register_mv`
+    * after the rollup fold, each IVF/PQ rebalance after its own append.
+    * `probeSigs`: the near-dup probe's materialised batch signatures when
+    * this run probed ([[plan]]), so the near-dup fold semi-joins them
+    * instead of recomputing signatures from the written text; None (the
+    * short-circuit, or an empty store) folds from the text. */
+  private[cli] def postWriteLegs(spark: SparkSession, cfg: PipelineConfig,
+      written: DataFrame, probeSigs: Option[DataFrame]): Seq[(String, () => Unit)] = {
+    def fingerprint(): Unit =
       graft.fp.FingerprintStore.fold(spark, cfg.fingerprintStorePath,
         cfg.shardId, written, Seq("source" -> col("source")),
         Seq(col("doc_id"), col("text"), col("source")))
-    }
-    if (cfg.steps.contains("rollup")) {
+    def rollup(): Unit = {
       // partial states of the COMMITTED output (pure function of it, like
       // the card) — shard-id-guarded in-store, so the replay
       // short-circuit heals a crash between the write and this fold
@@ -1106,9 +1188,9 @@ object GraftPipeline {
           moments = cfg.rollupMoments, coMoments = cm)
       }
     }
-    if (cfg.steps.contains("dedup_seen"))
+    def seen(): Unit =
       graft.dedup.SeenStore.update(spark, cfg.seenStorePath, written, "text", cfg.shardId)
-    if (cfg.steps.contains("dedup_neardup")) probeSigs match {
+    def nearDup(): Unit = probeSigs match {
       case Some(sigs) =>
         graft.dedup.NearDupStore.updateFromSigs(spark, cfg.nearDupStorePath,
           graft.dedup.NearDupStore.acceptedSigs(sigs, written, "text", "doc_id"),
@@ -1117,7 +1199,7 @@ object GraftPipeline {
         graft.dedup.NearDupStore.update(spark, cfg.nearDupStorePath,
           written, "text", "doc_id", cfg.shardId)
     }
-    if (cfg.steps.contains("ann_index")) {
+    def ann(): Unit = {
       val hasIndex = graft.sim.Similarity.indexExists(spark, cfg.annIndexPath)
       if (cfg.annMode != "overwrite" && hasIndex) {
         graft.sim.Similarity.appendIvfIndex(written, cfg.annIdCol,
@@ -1132,7 +1214,7 @@ object GraftPipeline {
         graft.sim.Similarity.buildIvfIndex(written, cfg.annIdCol, cfg.annVecCol,
           cfg.annIndexPath, cfg.annCentroids, shardId = cfg.shardId)
     }
-    if (cfg.steps.contains("pq_index")) {
+    def pq(): Unit = {
       val hasPq = graft.sim.Similarity.indexExists(spark, cfg.pqIndexPath)
       if (cfg.pqMode != "overwrite" && hasPq) {
         graft.sim.Similarity.appendPqIndex(written, cfg.annIdCol,
@@ -1152,7 +1234,7 @@ object GraftPipeline {
           cfg.annVecCol, cfg.pqIndexPath, cfg.pqM, cfg.pqKCodes,
           lloydIters = 1, shardId = cfg.shardId)
     }
-    if (cfg.steps.contains("bm25_index")) {
+    def bm25(): Unit =
       if (cfg.bm25Mode == "append" &&
           graft.core.Fs.exists(spark, s"${cfg.bm25IndexPath}/meta"))
         graft.text.Retrieval.appendBm25Index(written, "text", "doc_id",
@@ -1160,27 +1242,13 @@ object GraftPipeline {
       else // overwrite, or append's very first shard (nothing to fold into)
         graft.text.Retrieval.buildBm25Index(written, "text", "doc_id",
           cfg.bm25IndexPath, shardId = cfg.shardId)
-    }
-    if (cfg.steps.contains("data_card"))
-      writeDataCard(spark, cfg.cardPath, written)
-    if (cfg.steps.contains("compact")) {
-      if (cfg.seenStorePath.nonEmpty)
-        graft.dedup.SeenStore.compact(spark, cfg.seenStorePath)
-      if (cfg.nearDupStorePath.nonEmpty)
-        graft.dedup.NearDupStore.compact(spark, cfg.nearDupStorePath)
-      if (cfg.fingerprintStorePath.nonEmpty)
-        graft.core.AtomicStore.compact(spark, cfg.fingerprintStorePath)
-      if (cfg.annIndexPath.nonEmpty && graft.core.Fs.exists(spark, cfg.annIndexPath))
-        graft.sim.Similarity.compactIvfIndex(spark, cfg.annIndexPath)
-      if (cfg.pqIndexPath.nonEmpty &&
-          graft.sim.Similarity.indexExists(spark, cfg.pqIndexPath))
-        graft.sim.Similarity.compactPqIndex(spark, cfg.pqIndexPath)
-      if (cfg.bm25IndexPath.nonEmpty &&
-          graft.core.Fs.exists(spark, s"${cfg.bm25IndexPath}/meta"))
-        graft.text.Retrieval.compactBm25Index(spark, cfg.bm25IndexPath)
-      if (cfg.rollupStorePath.nonEmpty)
-        graft.agg.AggStore.compact(spark, cfg.rollupStorePath)
-    }
+    Seq[(String, () => Unit)](
+      "fingerprint_store" -> (() => fingerprint()), "rollup" -> (() => rollup()),
+      "dedup_seen" -> (() => seen()), "dedup_neardup" -> (() => nearDup()),
+      "ann_index" -> (() => ann()), "pq_index" -> (() => pq()),
+      "bm25_index" -> (() => bm25()),
+      "data_card" -> (() => writeDataCard(spark, cfg.cardPath, written))
+    ).filter { case (step, _) => cfg.steps.contains(step) }
   }
 
   /** The per-source corpus report of a committed output (q107's shape). */

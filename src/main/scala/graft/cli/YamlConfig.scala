@@ -127,13 +127,18 @@ object YamlConfig {
     def double(key: String, dflt: Double): Double =
       read(key, dflt, "a number")(v => Option.when(Decimal.matches(v))(v.toDouble))
     def bool(key: String, dflt: Boolean): Boolean =
-      read(key, dflt, "true or false")(Map("true" -> true, "false" -> false).get)
+      read(key, dflt, "true or false")(Bools.get)
+    /** [[bool]] that also reads the reference config's `fasle` as false. */
+    private[YamlConfig] def flag(key: String, dflt: Boolean): Boolean =
+      read(key, dflt, "true or false")((Bools + ("fasle" -> false)).get)
 
     /** Accept `keys` without decoding them. */
     def ignore(keys: String*): Unit = seen ++= keys
 
     private[YamlConfig] def unread: Set[String] = kv.keySet -- seen
   }
+
+  private val Bools = Map("true" -> true, "false" -> false)
 
   private val Decimal = """[-+]?(\d+\.?\d*|\.\d+)([eE][-+]?\d+)?""".r
 
@@ -146,11 +151,6 @@ object YamlConfig {
     a
   }
 
-  // lenient like the reference's own config.yaml (which contains `fasle`):
-  // anything but the literal true is false
-  private def flag(r: Reader, key: String, dflt: Boolean): Boolean =
-    r.str(key, dflt.toString) == "true"
-
   private def endpoint(r: Reader, side: String): Endpoint = {
     val d = Endpoint()
     Endpoint(
@@ -161,8 +161,8 @@ object YamlConfig {
       user = r.str(s"$side.user", d.user),
       password = r.str(s"$side.password", d.password),
       database = r.str(s"$side.database", d.database),
-      secure = flag(r, s"$side.secure", d.secure),
-      skipVerify = flag(r, s"$side.skip_verify", d.skipVerify),
+      secure = r.flag(s"$side.secure", d.secure),
+      skipVerify = r.flag(s"$side.skip_verify", d.skipVerify),
       keyFilename = r.str(s"$side.key_filename", d.keyFilename))
   }
 
@@ -173,11 +173,11 @@ object YamlConfig {
       source = endpoint(r, "source"),
       destination = endpoint(r, "destination"),
       partitionKey = r.str("partition_key", d.partitionKey),
-      checkHashes = flag(r, "check_hashes", d.checkHashes),
-      skipDelete = flag(r, "skip_delete", d.skipDelete),
-      skipReimport = flag(r, "skip_reimport", d.skipReimport),
-      useVirtualColumn = flag(r, "use_virtual_column", d.useVirtualColumn),
-      debug = flag(r, "debug", d.debug),
+      checkHashes = r.flag("check_hashes", d.checkHashes),
+      skipDelete = r.flag("skip_delete", d.skipDelete),
+      skipReimport = r.flag("skip_reimport", d.skipReimport),
+      useVirtualColumn = r.flag("use_virtual_column", d.useVirtualColumn),
+      debug = r.flag("debug", d.debug),
       numWorkers = r.int("worker_pool.num_workers", d.numWorkers))
   }
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 /** Named wall-clock phases: `Span("build") { … }` runs the block and adds
   * its wall seconds to the sum kept under "build". The sums are process-
-  * wide and thread-safe, so a span opened on the thread [[Par.both]]
+  * wide and thread-safe, so a span opened on a thread [[Par.all]]
   * starts records like one on the caller's; spans of the same name add
   * up, so memory is bounded by the number of distinct names. A block that
   * throws is still recorded, then rethrows.

@@ -398,21 +398,30 @@ object MaterializedRollups {
   /** Auto-load the durable catalog once per session (cheap volatile check
     * afterwards). A registration whose store GENERATION has moved since
     * it was persisted is dropped here — serving it would answer
-    * original-grain queries from coarsened/reshaped history. */
+    * original-grain queries from coarsened/reshaped history.
+    * `loadedCatalog` is published only AFTER the load completes, so a
+    * thread that arrives mid-load waits on the monitor instead of
+    * planning without the registrations (and silently falling back). */
   private[plans] def ensureLoaded(spark: SparkSession): Unit = {
     val cat = catalogDir(spark).orNull
-    if (cat == null || cat == loadedCatalog) return
+    if (cat == null || cat == loadedCatalog || loadingHere.get) return
     synchronized {
       if (cat == loadedCatalog) return
-      // mark BEFORE loading: the load itself runs optimizer passes (its
-      // parquet reads and registerInternal's defining-plan optimization),
-      // which re-enter RollupRewrite.apply → ensureLoaded — the mark makes
-      // that re-entry a no-op instead of an infinite recursion
-      loadedCatalog = cat
+      // the load itself runs optimizer passes (its parquet reads and
+      // registerInternal's defining-plan optimization), which re-enter
+      // RollupRewrite.apply → ensureLoaded on THIS thread — the
+      // thread-local mark makes that re-entry a no-op instead of an
+      // infinite recursion, without telling other threads it is done
+      loadingHere.set(true)
       try loadCatalog(spark, cat) catch { case NonFatal(e) =>
         logWarn(s"mv catalog load from $cat failed: ${e.getMessage}") }
+      finally loadingHere.set(false)
+      loadedCatalog = cat
     }
   }
+
+  /** Set on the thread running [[loadCatalog]] for the load's duration. */
+  private val loadingHere = ThreadLocal.withInitial[Boolean](() => false)
 
   private def logWarn(msg: String): Unit =
     System.err.println(s"[graft.mv] $msg")

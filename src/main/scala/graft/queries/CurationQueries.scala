@@ -164,6 +164,10 @@ object CurationQueries {
     * The bases join-back is explicitly broadcast: its row count is
     * bounded by sources × corpus/shardSize by construction (the
     * stated-bound exception to the corpus-broadcast demotion rule).
+    * `df` is read twice, once per branch (column pruning gives the two
+    * branches different exchanges, so exchange reuse cannot merge them):
+    * a caller whose `df` is costly to recompute materialises it first,
+    * as `GraftPipeline`'s `pack` step does.
     * Adds `pack_id`; input columns pass through. */
   private[graft] def packIds(df: DataFrame, sourceCol: String, idCol: String,
       tokensCol: String, budget: Int,

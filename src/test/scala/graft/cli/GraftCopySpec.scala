@@ -69,6 +69,24 @@ class GraftCopySpec extends SparkSpec {
     assert(GraftCopy.run(Seq("--info", "--config", bad.toString)) == Status.UsageFail)
   }
 
+  test("copy-config booleans: true/false (and the reference's 'fasle') decode, anything else fails by key") {
+    def cfg(yaml: String) = YamlConfig.fromText(yaml)
+    assert(cfg("check_hashes: true\n").checkHashes)
+    assert(!cfg("check_hashes: false\n").checkHashes)
+    assert(!cfg("check_hashes: fasle\n").checkHashes)
+    assert(cfg("source:\n  secure: true\n").source.secure)
+    val dir = tmpDir("graftcfg-bool")
+    for ((key, yaml) <- Seq("source.secure" -> "source:\n  secure: True\n",
+        "destination.skip_verify" -> "destination:\n  skip_verify: yes\n",
+        "skip_delete" -> "skip_delete: ture\n")) {
+      val err = intercept[YamlConfig.ConfigError](cfg(yaml)).getMessage
+      assert(err.contains(key), err)
+      val f = java.nio.file.Paths.get(s"$dir/${key.replace('.', '_')}.yaml")
+      java.nio.file.Files.writeString(f, yaml)
+      assert(GraftCopy.run(Seq("--info", "--config", f.toString)) == Status.UsageFail, key)
+    }
+  }
+
   test("flat single-file destination: info compares; sync migrates to partitioned layout") {
     val dst = tmpDir("graftcopy-flat")
     val key = "date_format(l_shipdate, 'yyyyMM')"

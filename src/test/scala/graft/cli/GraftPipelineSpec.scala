@@ -12,6 +12,8 @@ import scala.jdk.CollectionConverters._
 
 class GraftPipelineSpec extends SparkSpec {
 
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def cfgText(out: String) =
     s"""# pipeline fixture
        |input:
@@ -1626,5 +1628,69 @@ class GraftPipelineSpec extends SparkSpec {
     assert(rows(store) == rows(ref))
     assert(graft.dedup.NearDupStore.read(spark, store).get
       .filter(col("id") === dupId).count() == 1)
+  }
+
+  test("pack: pack_id equals the flat per-source running sum, and the output write scans no input") {
+    val out = tmpDir("pipe_pack_flat")
+    val cfg = GraftPipeline.fromKv(Map("input.path" -> sf001, "output.path" -> out,
+      "steps" -> "normalize,redact,quality_filter,split,pack", "pack_budget" -> "16"))
+      .toOption.get
+    // file scans under the output write: before the pack input was
+    // materialised, its bases and row branches each scanned the input
+    val scans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[InsertIntoHadoopFsRelationCommand])
+          Plans.collect(qe.executedPlan) {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+          }.foreach(f => scans.synchronized(
+            scans ++= f.relation.location.rootPaths.map(_.toUri.getPath)))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val (_, nOut) =
+      try { val r = GraftPipeline.run(spark, cfg); ListenerBus.drain(spark.sparkContext); r }
+      finally spark.listenerManager.unregister(listener)
+    assert(scans.isEmpty, scans)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("source").orderBy("doc_id")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val got = spark.read.parquet(out).select("doc_id", "pack_id")
+    val want = spark.read.parquet(out)
+      .withColumn("nt", graft.text.TextAnalysis.tokenCount(col("text")).cast("long"))
+      .select(col("doc_id"),
+        floor(coalesce(sum("nt").over(w), lit(0L)) / 16).cast("long").as("pack_id"))
+    assert(got.count() == nOut && got.select("pack_id").distinct().count() > 10)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
+  test("config: overlapping post-write store paths fail naming both keys") {
+    def cfg(extra: (String, String)*) = GraftPipeline.fromKv(Map(
+      "input.path" -> "/in", "output.path" -> "/w/corpus/shard=1",
+      "steps" -> "dedup_seen,dedup_neardup,fingerprint_store,rollup,bm25_index,data_card",
+      "seen_store.path" -> "/w/seen", "neardup_store.path" -> "/w/neardup",
+      "fingerprint_store.path" -> "/w/fp", "rollup_store.path" -> "/w/rollup",
+      "rollup.measures" -> "chars:n_chars", "rollup.register_mv" -> "true",
+      "rollup.mv_raw_path" -> "/w/corpus", "bm25_index.path" -> "/w/bm25",
+      "data_card.path" -> "/w/cards/shard_1") ++ extra)
+    // the benchmark layout: output inside the MV corpus root, stores apart
+    assert(cfg().isRight, cfg())
+    def clash(keys: String*)(extra: (String, String)*) = {
+      val err = cfg(extra: _*).swap.getOrElse(fail(s"accepted $extra"))
+      keys.foreach(k => assert(err.contains(k), err))
+    }
+    clash("seen_store.path", "neardup_store.path")("neardup_store.path" -> "/w/seen")
+    clash("seen_store.path", "fingerprint_store.path")("fingerprint_store.path" -> "/w/seen/fp")
+    clash("rollup_store.path", "bm25_index.path")("rollup_store.path" -> "/w/bm25/")
+    clash("ann_index.path", "pq_index.path")(
+      "ann_index.path" -> "/w/idx", "pq_index.path" -> "/w/idx/pq")
+    clash("bm25_index.path", "output.path")("bm25_index.path" -> "/w/corpus/shard=1/bm25")
+    clash("fingerprint_store.path", "output.path")("output.path" -> "/w/fp/out")
+    clash("seen_store.path", "rollup.mv_raw_path")("seen_store.path" -> "/w/corpus/seen")
+    clash("data_card.path", "rollup.mv_raw_path")("data_card.path" -> "/w/corpus/card")
+    // the default card path sits beside the output, so inside the MV root
+    clash("data_card.path (default)", "rollup.mv_raw_path")("data_card.path" -> "")
+    // a prefix that is not a parent is no overlap
+    assert(cfg("neardup_store.path" -> "/w/seen2").isRight)
   }
 }

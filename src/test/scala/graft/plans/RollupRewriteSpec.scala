@@ -551,6 +551,34 @@ class RollupRewriteSpec extends SparkSpec {
     } finally MaterializedRollups.clear()
   }
 
+  test("durable catalog load: a second thread arriving mid-load waits for the registrations") {
+    graft.core.FaultFs.install(spark)
+    val catalog = graft.core.FaultFs.uri(tmpDir("rollup_rw_catalog_race"))
+    spark.conf.set("spark.graft.mv.catalog", catalog)
+    try withStore { store =>
+      MaterializedRollups.register(events, store, keyExprs, measureExprs)
+      MaterializedRollups.clear() // a new session: the load is still to come
+      val entered = graft.core.FaultFs.holdListing(
+        new org.apache.hadoop.fs.Path(catalog).toUri.getPath)
+      @volatile var seenByB: Option[Boolean] = None
+      val a = new Thread(() => MaterializedRollups.ensureLoaded(spark))
+      val b = new Thread(() => {
+        MaterializedRollups.ensureLoaded(spark)
+        seenByB = Some(!MaterializedRollups.isEmpty)
+      })
+      try {
+        a.start()
+        assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS), "the load never listed")
+        b.start()
+        b.join(500) // thread A is frozen mid-load: B must not be done yet
+        assert(seenByB.isEmpty, "returned before the load finished, registrations seen: " + seenByB)
+      } finally graft.core.FaultFs.unhold()
+      a.join(); b.join()
+      assert(seenByB.contains(true))
+      assert(!scansRaw(rawAgg))
+    } finally spark.conf.unset("spark.graft.mv.catalog")
+  }
+
   test("durable registration survives a session boundary and generation-checks at load") {
     val catalog = tmpDir("rollup_rw_catalog")
     spark.conf.set("spark.graft.mv.catalog", catalog)
