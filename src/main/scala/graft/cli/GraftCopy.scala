@@ -2,8 +2,8 @@ package graft.cli
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables}
-import graft.recon.Reconciler
+import graft.core.{Fs, GraftSession, Tables}
+import graft.recon.{Reconciler, VerdictLedger}
 import graft.schema.SchemaReconciler
 
 /** CLI driver — the reference's `main.go` re-expressed over the engine:
@@ -33,6 +33,21 @@ import graft.schema.SchemaReconciler
   * `_metadata.file_path` pseudo-column, so each source parquet file maps to
   * one dest partition directory and repair touches only the files that
   * changed.
+  *
+  * Verdict ledger: every verdict pass hashes each side as per-file
+  * partials ([[VerdictLedger]]). `--sync` commits them, right after its
+  * pass, as `<dstPath>.__graft_verdicts.json` (format `verdict_ledger/1`,
+  * beside the table like a writer lease's lock), and any later pass
+  * reuses the partials of each file whose path, length and mtime are
+  * unchanged, hashing only the others. A re-verify after a sync thus
+  * reads only the files the repair wrote. The ledger holds Σ files ×
+  * partition keys per file entries over both sides. Trust limit: a rewrite
+  * that keeps a file's path, length and mtime goes unseen (the limit the
+  * MV freshness guard accepts); delete the ledger file to force a full
+  * pass. `--info` reads the ledger and never writes it. Each pass prints
+  * one JSON `verdict_pass` record on stdout: per side the files listed,
+  * hashed and reused and the rows hashed, and the ledger status (`used`,
+  * `none`, `corrupt: <file>`, `plan changed`).
   */
 object GraftCopy {
 
@@ -148,7 +163,8 @@ object GraftCopy {
     val src = Tables.load(spark, srcDir, table)
     def srcKeyed = if (byFile) src.withColumn("__part", fileKey)
                    else src.withColumn("__part", expr(partKey))
-    if (!Tables.exists(dstDir, dTable) && !new java.io.File(s"$dstDir/$dTable").exists()) {
+    val flatLayout = Tables.exists(spark, dstDir, dTable)
+    if (!flatLayout && !Fs.exists(spark, s"$dstDir/$dTable")) {
       // dest absent entirely -> full copy in sync mode (the degenerate
       // "every partition is missing" case)
       if (execute) {
@@ -161,7 +177,6 @@ object GraftCopy {
         return Status.DataFail
       }
     }
-    val flatLayout = Tables.exists(dstDir, dTable)
     val dstPath = if (flatLayout) s"$dstDir/$dTable.parquet" else s"$dstDir/$dTable"
     val dst = spark.read.parquet(dstPath)
 
@@ -179,18 +194,30 @@ object GraftCopy {
       }
     }
 
-    // schema reconciliation: intersected columns, casts planned once
-    val plan = SchemaReconciler.castPlan(src.schema, dst.schema)
-    val commonCols = plan.map(_._1)
-    val srcCast = plan.map(_._2) // B18: source side hashes cast expressions
-    val dstCols = commonCols.map(col)
-
-    val srcK = srcKeyed
-    val dstK = if (byFile) dst else dst.withColumn("__part", expr(partKey))
-    val verdicts = Reconciler.verdicts(
-      srcK, dstK, Seq("__part" -> col("__part")), srcCast, dstCols, conf)
-
-    val rows = verdicts.orderBy("__part").collect()
+    val (srcSide, dstSide) = sides(src, dst, partKey, byFile)
+    val ledgerPath = VerdictLedger.path(dstPath)
+    val pass = VerdictLedger.pass(spark, Seq("__part"), srcSide, dstSide, conf,
+      ledgerPath, readOnly = !execute)
+    val (verdicts, rows) = pass match {
+      case Some(p) =>
+        println(passRecord(execute, p.status, p.src, p.dst))
+        (p.verdicts, p.rows)
+      case None =>
+        // a key type without a ledger form: the lazy full pass
+        val lazyPlan = Reconciler.verdicts(srcSide.df.withColumn("__part", srcSide.keys.head),
+          dstSide.df.withColumn("__part", dstSide.keys.head), Seq("__part" -> col("__part")),
+          srcSide.cols, dstSide.cols, conf)
+        val rows = lazyPlan.orderBy("__part").collect().toSeq
+        def all(df: org.apache.spark.sql.DataFrame, rowsCol: String) = {
+          val n = graft.core.FileListing.files(df).fold(0)(_.size)
+          VerdictLedger.SideStats(n, n, 0, rows.map(_.getAs[Long](rowsCol)).sum)
+        }
+        println(passRecord(execute, "unsupported key type", all(src, "src_rows"), all(dst, "dst_rows")))
+        // the verdict rows are already collected: hand repair a local
+        // relation of them, so its filter + collect runs no Spark job
+        // (the lazy plan would scan and hash both sides again)
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), lazyPlan.schema), rows)
+    }
     // pre-flight (copy.go:35-41,162-168) — totals derived from the verdict
     // aggregates already on the driver, not two extra full scans
     val (srcTotal, dstTotal) =
@@ -208,9 +235,12 @@ object GraftCopy {
       val v = r.getAs[String]("verdict")
       v != Reconciler.Verdict.Skip && v != Reconciler.Verdict.DestOnly
     }
+    // the ledger of this pass, unless the destination moves away from
+    // dstPath (a dirty flat destination is migrated below)
+    if (execute && !(flatLayout && dirty)) pass.foreach(p => VerdictLedger.write(spark, ledgerPath, p.ledger))
 
     if (execute && dirty) {
-      val srcForWrite = srcK.select((srcCast :+ col("__part")): _*)
+      val srcForWrite = srcKeyed.select((srcSide.cols :+ col("__part")): _*)
       if (flatLayout) {
         // A single-file destination can't be partition-overwritten in
         // place; migrate it to the partitioned directory layout, then the
@@ -221,17 +251,49 @@ object GraftCopy {
         println(s"[$Name] migrated flat destination to partitioned layout at $newPath")
         Status.Ok
       } else {
-        // the verdict rows are already collected: hand repair a local
-        // relation of them, so its filter + collect runs no Spark job
-        // (the lazy `verdicts` plan would scan and hash both sides again)
-        val collected = spark.createDataFrame(java.util.Arrays.asList(rows: _*), verdicts.schema)
-        val repaired = Reconciler.repair(spark, collected, srcForWrite, "__part", dstPath, conf)
+        // the verdict rows are a local relation: repair's filter + collect
+        // runs no Spark job
+        val repaired = Reconciler.repair(spark, verdicts, srcForWrite, "__part", dstPath, conf)
         println(s"[$Name] repaired partitions: ${repaired.mkString(", ")}")
         Status.Ok
       }
     } else if (dirty) Status.HashFail
     else Status.Ok
   }
+
+  /** The two sides of a reconcile's verdict pass over the source `src`
+    * and the destination `dst`: the key (`partKey` on both sides, or with
+    * `use_virtual_column` the source file's name against the stored
+    * `__part`), the source's cast columns and the destination's plain
+    * ones (B18), intersected by [[SchemaReconciler.castPlan]]. */
+  private[cli] def sides(src: org.apache.spark.sql.DataFrame, dst: org.apache.spark.sql.DataFrame,
+      partKey: String, byFile: Boolean): (VerdictLedger.Side, VerdictLedger.Side) = {
+    val plan = SchemaReconciler.castPlan(src.schema, dst.schema)
+    (VerdictLedger.Side(src, Seq(if (byFile) fileKey else expr(partKey)), plan.map(_._2)),
+      VerdictLedger.Side(dst, Seq(if (byFile) col("__part") else expr(partKey)), plan.map(p => col(p._1))))
+  }
+
+  /** The structured record of one verdict pass: per side, the files
+    * listed, hashed and reused from the ledger and the rows hashed, and
+    * the ledger status (`used`, `none`, `corrupt: <file>`, `plan changed`,
+    * or `unsupported key type` when the pass cannot keep a ledger). */
+  private def passRecord(execute: Boolean, status: String,
+      src: VerdictLedger.SideStats, dst: VerdictLedger.SideStats): String = {
+    val root = Json.createObjectNode()
+    root.put("event", "verdict_pass")
+    root.put("mode", if (execute) "sync" else "info")
+    root.put("ledger", status)
+    for ((name, s) <- Seq("src" -> src, "dst" -> dst)) {
+      val o = root.putObject(name)
+      o.put("files_listed", s.listed)
+      o.put("files_hashed", s.hashed)
+      o.put("files_reused", s.reused)
+      o.put("rows_hashed", s.rowsHashed)
+    }
+    Json.writeValueAsString(root)
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Remove a migrated flat destination, a single file or a directory of
     * part files. A failed delete throws: a flat copy left behind would be
@@ -241,5 +303,6 @@ object GraftCopy {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.delete(p, true))
       throw new java.io.IOException(s"could not delete the migrated flat destination $path")
+    fs.delete(new org.apache.hadoop.fs.Path(VerdictLedger.path(path)), false)
   }
 }

@@ -157,12 +157,15 @@ object AtomicStore {
     * Recovery: [[writeMetaJson]] closes the tmp BEFORE it deletes the old
     * file, so a tmp with no file is either complete (a crash between the
     * delete and the rename — adopted) or torn by a crash inside the FIRST
-    * commit, when no file existed yet (deleted: the store has no meta). */
-  def readMetaJson[T](spark: SparkSession, path: String)(decode: JsonNode => T): Option[T] = {
+    * commit, when no file existed yet (deleted: the store has no meta).
+    * A read-only caller passes `recover = false`: it mutates nothing and
+    * reads a tmp-only state as no meta. */
+  def readMetaJson[T](spark: SparkSession, path: String, recover: Boolean = true)(
+      decode: JsonNode => T): Option[T] = {
     val file = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val fs = fsFor(spark, file)
-    if (!fs.exists(file) && fs.exists(tmp)) {
+    if (recover && !fs.exists(file) && fs.exists(tmp)) {
       if (parseJson(fs, tmp).isDefined) fs.rename(tmp, file) else fs.delete(tmp, false)
     }
     if (!fs.exists(file)) None

@@ -78,8 +78,14 @@ object Tables {
     if (cols.isEmpty) df else df.select(cols.map(col): _*)
   }
 
-  def exists(dir: String, name: String): Boolean =
-    new java.io.File(s"$dir/$name.parquet").exists()
+  /** Does the table's `<name>.parquet` exist under `dir`? Asked through
+    * the path's Hadoop FileSystem, so an `hdfs:` or `s3a:` dir answers
+    * truly (a `java.io.File` probe reads false for every non-local path). */
+  def exists(spark: SparkSession, dir: String, name: String): Boolean =
+    Fs.exists(spark, s"$dir/$name.parquet")
+
+  /** [[exists]] through the active session's Hadoop configuration. */
+  def exists(dir: String, name: String): Boolean = exists(SparkSession.active, dir, name)
 
   /** Register the fixture table as a REAL session-catalog table — an
     * EXTERNAL parquet table pointing at the fixture file (no copy; DROP
@@ -138,7 +144,7 @@ final case class TableHandle(
 
   def df: DataFrame = Tables.load(spark, dir, name)
   def schema: StructType = df.schema
-  def exists: Boolean = Tables.exists(dir, name)
+  def exists: Boolean = Tables.exists(spark, dir, name)
   def totalRows: Long = df.count()
   def partitionKeyCols: Seq[Column] = partitionKey.map(expr)
 }

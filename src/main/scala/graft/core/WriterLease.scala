@@ -25,6 +25,18 @@ import org.apache.spark.sql.SparkSession
   * a per-acquire fencing token. A crashed writer's stale lock is broken
   * by TTL (default 1 h): acquire steals a lock whose modification time is
   * older than the TTL, so a crash never wedges the store permanently.
+  * A lock whose holder is provably dead is broken at once, in two cases:
+  *
+  *  - its host and pid are this JVM's and its token belongs to no
+  *    unreleased [[Lease]] here (the JVM keeps the set of live tokens; a
+  *    release drops its token even when deleting the lock fails, as it
+  *    does when the writer was killed mid-operation);
+  *  - its host is this host and no process has its pid
+  *    (`ProcessHandle.of(pid)` is empty).
+  *
+  * The dead-pid rule trusts the hostname: two machines with the same
+  * hostname sharing one store could break each other's live lock. Every
+  * other lock keeps the TTL rule.
   *
   * Two hazards of the round-10 TTL design are closed here:
   *
@@ -69,6 +81,9 @@ object WriterLease {
     t
   }
 
+  /** Tokens of this JVM's unreleased leases. */
+  private val liveTokens = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Leases held by the CURRENT THREAD, innermost first — the ownership
     * context [[validateForCommit]] resolves against (thread-scoped, not
     * path-global, so a same-JVM stealer validates against ITS lease, and
@@ -88,6 +103,7 @@ object WriterLease {
 
     def release(): Unit = if (!released) {
       released = true
+      liveTokens.remove(token)
       if (beat != null) beat.cancel(false)
       // fencing half of release: only delete a lock that still carries
       // OUR token — a TTL-stolen lock belongs to the stealer now, and
@@ -154,6 +170,17 @@ object WriterLease {
     if (root.getParent != null) fs.mkdirs(root.getParent) // first append
     else fs.mkdirs(root)
     val token = s"${holderId()}#${java.util.UUID.randomUUID()}"
+    // live before any lock carries it: a same-JVM acquirer must never
+    // judge the lock being created dead
+    liveTokens.add(token)
+    try held(fs, lock, token, storePath, ttlMs)
+    catch { case e: Throwable => liveTokens.remove(token); throw e }
+  }
+
+  /** [[acquire]]'s body once `token` is live: create the lock, or break a
+    * stale or dead holder's lock once and create it, or throw. */
+  private def held(fs: org.apache.hadoop.fs.FileSystem, lock: org.apache.hadoop.fs.Path,
+      token: String, storePath: String, ttlMs: Long): Lease = {
     def tryCreate(): Boolean =
       try {
         val out = fs.create(lock, /* overwrite = */ false)
@@ -186,16 +213,12 @@ object WriterLease {
     val status = try Some(fs.getFileStatus(lock)) catch {
       case _: java.io.FileNotFoundException => None // released between calls
     }
+    val text = try readLock(fs, lock) catch { case _: java.io.IOException => None }
     val stale = status.exists(s =>
-      System.currentTimeMillis() - s.getModificationTime > ttlMs)
+      System.currentTimeMillis() - s.getModificationTime > ttlMs) || text.exists(deadHolder)
     if (stale) { fs.delete(lock, false); if (tryCreate()) return lease() }
     else if (status.isEmpty && tryCreate()) return lease()
-    val holder = try {
-      val in = fs.open(lock)
-      val bytes = new Array[Byte](512)
-      val n = in.read(bytes); in.close()
-      if (n > 0) new String(bytes, 0, n, "UTF-8") else "unknown"
-    } catch { case _: java.io.IOException => "unknown" }
+    val holder = text.getOrElse("unknown")
     throw new ConcurrentWriterException(
       s"store at $storePath already has a live writer ($holder) — " +
         "concurrent writes would interleave dynamic overwrites and corrupt " +
@@ -203,23 +226,44 @@ object WriterLease {
         s"${ttlMs / 1000} s without a heartbeat)")
   }
 
-  /** The token recorded in the lock file, if the file exists and parses. */
-  private def readToken(fs: org.apache.hadoop.fs.FileSystem,
+  /** The lock file's text, if the file exists and is not empty. */
+  private def readLock(fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[String] =
     try {
       val in = fs.open(lock)
       val bytes = new Array[Byte](512)
       val n = in.read(bytes); in.close()
-      if (n <= 0) None
-      else """"token":"([^"]+)"""".r
-        .findFirstMatchIn(new String(bytes, 0, n, "UTF-8")).map(_.group(1))
+      if (n <= 0) None else Some(new String(bytes, 0, n, "UTF-8"))
     } catch { case _: java.io.FileNotFoundException => None }
+
+  private def field(lockText: String, name: String): Option[String] =
+    s""""$name":"([^"]+)"""".r.findFirstMatchIn(lockText).map(_.group(1))
+
+  /** The token recorded in the lock file, if the file exists and parses. */
+  private def readToken(fs: org.apache.hadoop.fs.FileSystem,
+      lock: org.apache.hadoop.fs.Path): Option[String] =
+    readLock(fs, lock).flatMap(field(_, "token"))
+
+  /** Is the lock's holder provably dead: this JVM with the lease released
+    * (or never recorded), or a process of this host that no longer runs? */
+  private def deadHolder(lockText: String): Boolean = {
+    val me = ProcessHandle.current().pid()
+    field(lockText, "holder").map(_.split(":")).exists { h =>
+      val pid = scala.util.Try(h(h.length - 2).toLong).toOption
+      h.length >= 3 && h.dropRight(2).mkString(":") == hostName && pid.exists { p =>
+        if (p == me) !field(lockText, "token").exists(liveTokens.contains)
+        else ProcessHandle.of(p).isEmpty
+      }
+    }
+  }
 
   private def normKey(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
+  private def hostName: String = java.net.InetAddress.getLocalHost.getHostName
+
   private def holderId(): String =
-    s"${java.net.InetAddress.getLocalHost.getHostName}:" +
+    s"$hostName:" +
       s"${java.lang.ProcessHandle.current().pid()}:" +
       s"${Thread.currentThread().getId}"
 }

@@ -139,6 +139,22 @@ object Fingerprint {
     df.groupBy(partKeys.map { case (n, c) => c.as(n) }: _*)
       .agg(count(lit(1)).as("rows"), agg(cols).as("fp"))
 
+  /** The column [[byFile]] names each row's source file by. */
+  val FileCol = "__file"
+
+  /** [[byPartition]]'s per-file partials: one (`__file`, partKey, rows, fp)
+    * row per source file and partition key, `__file` being the scan's
+    * `_metadata.file_path` (the file's qualified URI). Count and XOR
+    * compose, so the per-key sum of `rows` and XOR of `fp` over a
+    * relation's files equal [[byPartition]] over it exactly — a caller
+    * that kept the partials of unchanged files hashes only the others
+    * (see [[graft.recon.VerdictLedger]]). `df` must be a file scan
+    * (possibly filtered or projected). */
+  def byFile(df: DataFrame, partKeys: Seq[(String, Column)], cols: Seq[Column]): DataFrame =
+    df.groupBy((col("_metadata.file_path").as(FileCol) +:
+        partKeys.map { case (n, c) => c.as(n) }): _*)
+      .agg(count(lit(1)).as("rows"), agg(cols).as("fp"))
+
   /** [[byPartition]] in the oracle-portable (md5-derived) hash family —
     * same one-shuffle plan, same (key, count, xor-fingerprint) shape,
     * externally verifiable against the DuckDB mirror. Output columns

@@ -32,6 +32,13 @@ import graft.fp.Fingerprint
   * fingerprint is over plain columns (`/root/reference/copy/copy.go:88-89,221-222`)
   * — i.e. we compare post-conversion source content against dest content.
   * Callers pass `srcCols` already cast (from `SchemaReconciler.castPlan`).
+  *
+  * Incremental form: [[VerdictLedger.pass]] hashes each side as per-file
+  * partials and reuses the partials of files unchanged since the last
+  * `--sync` (a `verdict_ledger/1` meta beside the destination, Σ files ×
+  * keys per file entries; a rewrite keeping path, length and mtime goes
+  * unseen), then applies the same ladder ([[decide]]) to the merged
+  * per-key rows — the verdict rows equal [[verdicts]]' exactly.
   */
 object Reconciler {
 
@@ -81,7 +88,15 @@ object Reconciler {
     val joined = s.join(d, joinCond, "full_outer")
       .withColumns(keys.map(k => k -> coalesce(s(k), d(s"__d_$k"))).toMap)
       .drop(keys.map(k => s"__d_$k"): _*)
+    decide(joined, keys, conf)
+  }
 
+  /** The decision ladder, applied to one row per partition key with the
+    * two sides' `src_rows`, `dst_rows`, `src_fp`, `dst_fp` (null where a
+    * side lacks the partition): the verdict rows of [[verdicts]]. Shared
+    * by the lazy plan above and the ledger pass's local relation
+    * ([[VerdictLedger.pass]]), so both decide alike. */
+  def decide(joined: DataFrame, keys: Seq[String], conf: Config): DataFrame = {
     val dstEmpty = col("dst_rows").isNull || col("dst_rows") === 0L
     val contentEqual =
       if (conf.checkHashes) col("src_fp") === col("dst_fp") && col("src_rows") === col("dst_rows")

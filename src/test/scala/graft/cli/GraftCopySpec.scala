@@ -304,4 +304,15 @@ class GraftCopySpec extends SparkSpec {
     li.limit(5).write.mode("append").parquet(s"$src/lineitem.parquet")
     assert(reconcile(spark, src, dst, "lineitem", Key, execute = false) == Status.HashFail)
   }
+
+  test("a destination on another filesystem is found: a clean second sync writes no data file") {
+    graft.core.FaultFs.install(spark)
+    val dst = graft.core.FaultFs.uri(tmpDir("graftcopy-faultfs"))
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = true) == Status.Ok)
+    val (status, mutations) = graft.core.FaultFs.recording(
+      reconcile(spark, sf001, dst, "lineitem", Key, execute = true))
+    assert(status == Status.Ok)
+    assert(!mutations.exists(_.paths.exists(_.endsWith(".parquet"))), mutations)
+    assert(reconcile(spark, sf001, dst, "lineitem", Key, execute = false) == Status.Ok)
+  }
 }

@@ -183,6 +183,33 @@ class PostWriteCrashSpec extends SparkSpec {
     try enumerate() finally spark.sparkContext.setLogLevel("INFO")
   }
 
+  test("a crashed leg's lease lock does not hold up the replay (no aging)") {
+    FaultFs.install(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    try {
+      val local = tmpDir("pw_lock")
+      val work = s"$local/work"
+      spark.read.parquet(s"$sf001/documents.parquet").orderBy("doc_id").limit(20)
+        .write.parquet(s"$local/in_0/documents.parquet")
+      spark.createDataFrame(Seq((1000L, "the fox and the owl", "en", "s0", 19L),
+          (1001L, "the owl and the fox", "en", "s1", 19L)))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.parquet(s"$local/in_1/documents.parquet")
+      val c1 = cfg(work, s"$local/in_1", 1)
+      GraftPipeline.run(spark, cfg(work, s"$local/in_0", 0))
+      val (out, sigs) = GraftPipeline.plan(spark, c1)
+      out.write.mode("overwrite").partitionBy("split").parquet(c1.outputDir)
+      // the seen leg dies after taking its lease: its lock stays behind
+      val (_, fault) = FaultFs.armed(p => tree(work)(p).startsWith("seen"), 2)(
+        GraftPipeline.postWrite(spark, c1, spark.read.parquet(c1.outputDir), sigs))
+      assert(fault.tripped)
+      assert(Files.exists(Paths.get(s"$work/seen.__writer.lock")))
+      GraftPipeline.run(spark, c1)
+      assert(graft.dedup.SeenStore.processedShards(spark, FaultFs.uri(s"$work/seen"))("shard-1"))
+      assert(!Files.exists(Paths.get(s"$work/seen.__writer.lock")))
+    } finally spark.sparkContext.setLogLevel("INFO")
+  }
+
   private def enumerate(): Unit = {
     val local = tmpDir("pw_crash")
     val (work, mid) = (s"$local/work", s"$local/mid")

@@ -129,4 +129,58 @@ class WriterLeaseSpec extends SparkSpec {
     // listing of the store path must not trip over lease artifacts
     assert(AggStore.merged(spark, store).count() > 0)
   }
+
+  private val host = java.net.InetAddress.getLocalHost.getHostName
+
+  /** Leave a lock as a writer `holder` ("host:pid:thread") that never
+    * released it would. */
+  private def plantLock(store: String, holder: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(store)
+    val lock = new org.apache.hadoop.fs.Path(root.getParent, root.getName + ".__writer.lock")
+    val out = lock.getFileSystem(spark.sparkContext.hadoopConfiguration).create(lock, false)
+    out.write((s"""{"holder":"$holder","token":"$holder#${java.util.UUID.randomUUID()}",""" +
+      s""""acquired_ms":${System.currentTimeMillis()}}""").getBytes("UTF-8"))
+    out.close()
+  }
+
+  test("an orphaned lock of this JVM is broken at once, also when the release could not delete it") {
+    val store = tmpDir("lease_orphan")
+    plantLock(store, s"$host:${ProcessHandle.current().pid()}:1")
+    WriterLease.acquire(spark, store).release()
+    // a writer killed mid-operation: its release's delete fails
+    FaultFs.install(spark)
+    val local = tmpDir("lease_orphan_fs")
+    val l = WriterLease.acquire(spark, FaultFs.uri(s"$local/store"))
+    val (_, fault) = FaultFs.armed(p => FaultFs.under(p, local), 1)(l.release())
+    assert(fault.tripped)
+    assert(new java.io.File(s"$local/store.__writer.lock").exists, "the lock should survive the failed release")
+    WriterLease.acquire(spark, FaultFs.uri(s"$local/store")).release()
+  }
+
+  test("a live lease held by another thread of this JVM is still refused") {
+    val store = tmpDir("lease_thread")
+    val (held, done) = (new java.util.concurrent.CountDownLatch(1), new java.util.concurrent.CountDownLatch(1))
+    val t = new Thread(() => {
+      val l = WriterLease.acquire(spark, store)
+      held.countDown()
+      try done.await() finally l.release()
+    })
+    t.start()
+    held.await()
+    try intercept[ConcurrentWriterException](WriterLease.acquire(spark, store))
+    finally { done.countDown(); t.join() }
+    WriterLease.acquire(spark, store).release()
+  }
+
+  test("a lock whose holder process is gone is broken at once; another host's keeps the TTL") {
+    val gone = new ProcessBuilder("true").start()
+    gone.waitFor()
+    assume(ProcessHandle.of(gone.pid()).isEmpty, "the exited process's pid was reused")
+    val store = tmpDir("lease_dead_pid")
+    plantLock(store, s"$host:${gone.pid()}:1")
+    WriterLease.acquire(spark, store).release()
+    val remote = tmpDir("lease_remote")
+    plantLock(remote, s"elsewhere-$host:${gone.pid()}:1")
+    intercept[ConcurrentWriterException](WriterLease.acquire(spark, remote))
+  }
 }
