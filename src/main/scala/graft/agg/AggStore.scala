@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.ShardStore.Compacted
+
 /** Persisted incremental-rollup store: the Spark-native analogue of a
   * ClickHouse AggregatingMergeTree fed by a materialized view (the
   * canonical production pattern around tables the reference copies —
@@ -44,8 +46,6 @@ import org.apache.spark.sql.types._
   * types. Single-writer per store path.
   */
 object AggStore {
-
-  private val CompactedShard = "__compacted"
 
   private def statesPath(path: String) = s"$path/states"
 
@@ -237,7 +237,7 @@ object AggStore {
   /** Shard ids whose states are committed (the caller's replay guard —
     * same protocol as SeenStore.processedShards). */
   def processedShards(spark: SparkSession, path: String): Set[String] =
-    readMeta(spark, path).shardIds - CompactedShard
+    readMeta(spark, path).shardIds - Compacted
 
   /** Fold one shard's raw rows into partial states and commit them as the
     * shard's own subtree — O(shard), nothing else rewritten. Idempotent
@@ -436,7 +436,7 @@ object AggStore {
       moments: Seq[String] = Nil,
       coMoments: Seq[(String, Column, Column)] = Nil): Unit =
     graft.core.WriterLease.withLease(spark, path) {
-    require(shardId != CompactedShard, s"shard id $CompactedShard is reserved")
+    require(shardId != Compacted, s"shard id $Compacted is reserved")
     val meta = readMeta(spark, path)
     if (meta.shardIds.contains(shardId)) return
     val partial = partialStates(shard, keys, distinctCol, measures, argMax,
@@ -781,11 +781,11 @@ object AggStore {
     * safe direction. */
   private def swapCompacted(spark: SparkSession, path: String, meta: Meta,
       mergedStates: DataFrame, nFiles: Int, generation: Long): Unit = {
-    if (!meta.shardIds.contains(CompactedShard) || generation != meta.generation)
-      writeMeta(spark, path, meta.shardIds + CompactedShard,
+    if (!meta.shardIds.contains(Compacted) || generation != meta.generation)
+      writeMeta(spark, path, meta.shardIds + Compacted,
         meta.stateSchema.get, meta.keyNames, generation)
     graft.core.AtomicStore.replaceVia(spark, statesPath(path)) { tmp =>
-      mergedStates.withColumn("shard", lit(CompactedShard)).coalesce(nFiles)
+      mergedStates.withColumn("shard", lit(Compacted)).coalesce(nFiles)
         .write.mode("overwrite").partitionBy("shard").parquet(tmp)
     }
   }
@@ -916,17 +916,17 @@ object AggStore {
     })
 
     // 1. compacted id visible under the OLD schema
-    if (!meta.shardIds.contains(CompactedShard))
-      writeMeta(spark, path, meta.shardIds + CompactedShard,
+    if (!meta.shardIds.contains(Compacted))
+      writeMeta(spark, path, meta.shardIds + Compacted,
         meta.stateSchema.get, meta.keyNames, meta.generation)
     // 2. atomic states swap (old-schema reads still resolve by name)
     graft.core.AtomicStore.replaceVia(spark, statesPath(path)) { tmp =>
-      assembled.withColumn("shard", lit(CompactedShard)).coalesce(nFiles)
+      assembled.withColumn("shard", lit(Compacted)).coalesce(nFiles)
         .write.mode("overwrite").partitionBy("shard").parquet(tmp)
     }
     // 3. COMMIT: the meta schema flip — with the generation bump (the
     // re-shaped store no longer answers the old defining query)
-    writeMeta(spark, path, meta.shardIds + CompactedShard, newSchema,
+    writeMeta(spark, path, meta.shardIds + Compacted, newSchema,
       meta.keyNames, meta.generation + 1)
     // a live MV registration describes the PRE-migration measure list —
     // drop it rather than let the rewrite serve a reshaped store

@@ -1123,13 +1123,14 @@ object GraftPipeline {
         graft.dedup.NearDupStore.compact(spark, cfg.nearDupStorePath)
       if (cfg.fingerprintStorePath.nonEmpty)
         graft.core.AtomicStore.compact(spark, cfg.fingerprintStorePath)
-      if (cfg.annIndexPath.nonEmpty && graft.core.Fs.exists(spark, cfg.annIndexPath))
+      if (cfg.annIndexPath.nonEmpty &&
+          graft.sim.Similarity.indexExists(spark, cfg.annIndexPath))
         graft.sim.Similarity.compactIvfIndex(spark, cfg.annIndexPath)
       if (cfg.pqIndexPath.nonEmpty &&
           graft.sim.Similarity.indexExists(spark, cfg.pqIndexPath))
         graft.sim.Similarity.compactPqIndex(spark, cfg.pqIndexPath)
       if (cfg.bm25IndexPath.nonEmpty &&
-          graft.core.Fs.exists(spark, s"${cfg.bm25IndexPath}/meta"))
+          graft.text.Retrieval.indexExists(spark, cfg.bm25IndexPath))
         graft.text.Retrieval.compactBm25Index(spark, cfg.bm25IndexPath)
       if (cfg.rollupStorePath.nonEmpty)
         graft.agg.AggStore.compact(spark, cfg.rollupStorePath)
@@ -1236,7 +1237,7 @@ object GraftPipeline {
     }
     def bm25(): Unit =
       if (cfg.bm25Mode == "append" &&
-          graft.core.Fs.exists(spark, s"${cfg.bm25IndexPath}/meta"))
+          graft.text.Retrieval.indexExists(spark, cfg.bm25IndexPath))
         graft.text.Retrieval.appendBm25Index(written, "text", "doc_id",
           cfg.bm25IndexPath, cfg.shardId)
       else // overwrite, or append's very first shard (nothing to fold into)

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.ShardStore.Compacted
 import graft.functions.expressions.TopKAggregate
 
 /** Similarity search over embedding columns (Array[Float]) — north-star
@@ -324,7 +325,7 @@ object Similarity {
     * production IVF deployment. */
   def appendIvfIndex(newRows: DataFrame, idCol: String, vecCol: String,
       path: String, shardId: String): Unit = {
-    require(shardId != IvfCompactedShard, s"shard id $IvfCompactedShard is reserved")
+    require(shardId != Compacted, s"shard id $Compacted is reserved")
     val spark = newRows.sparkSession
     graft.core.WriterLease.withLease(spark, path) {
     val meta = readIvfMeta(spark, path)
@@ -334,8 +335,6 @@ object Similarity {
     writeIvfMeta(spark, path, meta.shards + shardId, meta.gen)
     }
   }
-
-  private val IvfCompactedShard = "__compacted"
 
   /** Committed shard ids + the GENERATION the index's data trees live
     * under. `gen` is the [[rebalanceIvfIndex]] indirection: "" (the
@@ -412,11 +411,11 @@ object Similarity {
     // meta first (the SeenStore.compact discipline): a crash before the
     // swap leaves reads on the old subtrees — still correct; historical
     // shard ids stay recorded so append's replay guard survives
-    if (!meta.shards.contains(IvfCompactedShard))
-      writeIvfMeta(spark, path, meta.shards + IvfCompactedShard, meta.gen)
+    if (!meta.shards.contains(Compacted))
+      writeIvfMeta(spark, path, meta.shards + Compacted, meta.gen)
     val live = graft.core.AtomicStore.readRequired(spark, s"$root/assigned")
       .filter(col("shard").isin(meta.shards.toSeq: _*))
-      .drop("shard").withColumn("shard", lit(IvfCompactedShard))
+      .drop("shard").withColumn("shard", lit(Compacted))
     graft.core.AtomicStore.replaceVia(spark, s"$root/assigned") { tmp =>
       live.repartition(col("centroid_id"))
         .write.mode("overwrite").partitionBy("shard", "centroid_id").parquet(tmp)
@@ -571,9 +570,9 @@ object Similarity {
     graft.core.Par.both(
       cents.coalesce(1).write.mode("overwrite").parquet(s"$newRoot/centroids"),
       writeAssignedShard(vectors, "__rid", "__rv", newRoot,
-        IvfCompactedShard, cents))
+        Compacted, cents))
     // COMMIT: probes flip to the new generation here, atomically
-    writeIvfMeta(spark, path, meta.shards + IvfCompactedShard, nextGen)
+    writeIvfMeta(spark, path, meta.shards + Compacted, nextGen)
     // post-commit cleanup of the superseded generation (base-layout trees
     // when gen was ""); failure here is garbage, not corruption
     if (meta.gen.isEmpty) {
@@ -1066,7 +1065,7 @@ object Similarity {
     * until replayed (meta gating). */
   def appendPqIndex(newRows: DataFrame, idCol: String, vecCol: String,
       path: String, shardId: String): Unit = {
-    require(shardId != IvfCompactedShard, s"shard id $IvfCompactedShard is reserved")
+    require(shardId != Compacted, s"shard id $Compacted is reserved")
     val spark = newRows.sparkSession
     graft.core.WriterLease.withLease(spark, path) {
     val meta = readIvfMeta(spark, path)
@@ -1106,9 +1105,9 @@ object Similarity {
     // same literal-codebook + overlapped-writes discipline as buildPqIndex
     graft.core.Par.both(
       cb.coalesce(1).write.mode("overwrite").parquet(s"$newRoot/codebooks"),
-      writePqShard(corpus, idCol, vecCol, newRoot, IvfCompactedShard,
+      writePqShard(corpus, idCol, vecCol, newRoot, Compacted,
         codebooks = Some(cb)))
-    writeIvfMeta(spark, path, meta.shards + IvfCompactedShard, nextGen) // COMMIT
+    writeIvfMeta(spark, path, meta.shards + Compacted, nextGen) // COMMIT
     if (meta.gen.isEmpty) {
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/codebooks"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
@@ -1166,11 +1165,11 @@ object Similarity {
     val root = genRoot(path, meta.gen)
     graft.core.AtomicStore.compact(spark, s"$root/codebooks")
     if (meta.shards.isEmpty) return
-    if (!meta.shards.contains(IvfCompactedShard))
-      writeIvfMeta(spark, path, meta.shards + IvfCompactedShard, meta.gen)
+    if (!meta.shards.contains(Compacted))
+      writeIvfMeta(spark, path, meta.shards + Compacted, meta.gen)
     val live = graft.core.AtomicStore.readRequired(spark, s"$root/codes")
       .filter(col("shard").isin(meta.shards.toSeq: _*))
-      .select("id", "codes").withColumn("shard", lit(IvfCompactedShard))
+      .select("id", "codes").withColumn("shard", lit(Compacted))
     graft.core.AtomicStore.replaceVia(spark, s"$root/codes") { tmp =>
       live.coalesce(nFiles)
         .write.mode("overwrite").partitionBy("shard").parquet(tmp)

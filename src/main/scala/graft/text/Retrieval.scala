@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.ShardStore.Compacted
 import graft.functions.expressions.TopKAggregate
 
 /** BM25 ranked retrieval over the documents corpus (north-star extension;
@@ -73,152 +74,187 @@ object Retrieval {
     * [[appendBm25Index]] folds a new shard in at O(shard) cost.
     *
     * Layout under `path`:
-    *  - `postings/` — (doc_id, dl, tf) PARTITIONED BY (`shard`, `bucket`)
-    *    where `bucket` = pmod(xxhash64(tok), buckets): a probe prunes to
-    *    its terms' bucket directories before reading a byte (same
-    *    partition-pruning play as the IVF index's centroid directories),
-    *    and an append lands as its own `shard=` subtree via dynamic
-    *    partition overwrite — idempotent under replay by construction
-    *  - `meta` — ONE atomic relation ([[graft.core.AtomicStore]]) holding
-    *    three row kinds: per-term document frequencies (kind='df',
-    *    vocabulary-sized), the corpus stats row (kind='stats': n_docs,
-    *    n_text_docs, sum_dl, buckets — avgdl is DERIVED as
-    *    sum_dl/n_text_docs so incremental long-sums merge bit-exactly),
-    *    and the folded-shard guard (kind='shard'). One relation means the
-    *    df merge, the stats merge and the replay guard commit in a single
-    *    atomic replace — they can never desynchronise (the
-    *    [[graft.fp.FingerprintStore]] lesson).
+    *  - `postings/` — (doc_id, dl, tf, tok, block) PARTITIONED BY
+    *    (`shard`, `bucket`) where `bucket` = pmod(xxhash64(tok), buckets):
+    *    a probe prunes to its terms' bucket directories before reading a
+    *    byte (same partition-pruning play as the IVF index's centroid
+    *    directories), and an append lands as its own `shard=` subtree via
+    *    dynamic partition overwrite — idempotent under replay
+    *  - `impacts/` — per (tok, block) of each shard: max tf, min dl and
+    *    `n`, the shard's postings rows in that block; same partitioning
+    *  - `meta.json` — [[graft.core.AtomicStore.writeMetaJson]]:
+    *    `shard_ids` (the committed shards; committing the document is what
+    *    makes a shard visible), `n_docs`, `n_text_docs`, `sum_dl` (exact
+    *    longs: avgdl is DERIVED as sum_dl/n_text_docs, so appends add
+    *    longs and never round twice) and `buckets`. Read strictly: a
+    *    damaged or incomplete document throws naming the file.
     *
-    * Append crash-safety: postings first (dynamic overwrite of the
-    * shard's own partitions — a replay rewrites exactly the same
-    * directories), meta last (guard + merged df/stats in one swap). A
-    * crash before the meta commit leaves orphan shard postings, which
-    * probes IGNORE (the postings scan filters to meta-recorded shards),
-    * and the replayed append overwrites; a crash after it makes the
-    * replay a guarded no-op. Precondition: an appended shard's doc ids
-    * are new to the index (standard ingest contract — a re-shipped doc
-    * would double its postings and df contributions).
-    */
+    * Document frequencies are not stored. Postings are unique per
+    * (doc, tok), so df(tok) is tok's postings-row count, which is Σ `n`
+    * over tok's impacts rows of the committed shards — an exact long sum
+    * whatever the shard and block split, and compaction keeps it by
+    * summing `n`. A probe derives df for its own terms only, from the
+    * impacts rows of their bucket directories.
+    *
+    * Append: postings and impacts first (both settle before the meta
+    * commit), meta last. A crash before the commit leaves orphan shard
+    * subtrees, which probes ignore (every read filters to committed
+    * shards) and the replayed append overwrites; a crash after it makes
+    * the replay a guarded no-op. Precondition: an appended shard's doc
+    * ids are new to the index (standard ingest contract — a re-shipped
+    * doc would double its postings and df contributions).
+    *
+    * Build: under the lease, unpublish first — delete `meta.json`, then
+    * the index's other entries (the `postings`/`impacts` trees with their
+    * stale shard subtrees, their torn-compact tmps and an old-layout
+    * `meta/` relation; nothing else under `path`) — then write the trees and
+    * commit the meta. A torn rebuild therefore reads as no index, never
+    * as new trees under the old stats, and replaying it rebuilds.
+    *
+    * Indexes written before the `meta.json` layout (a `meta/` relation)
+    * cannot be read or appended to; every call that needs the meta says
+    * so naming the path, and a build over the path migrates it. */
   def buildBm25Index(
       docs: DataFrame, textCol: String, idCol: String, path: String,
       buckets: Int = 64, shardId: String = "base"): Unit = {
+    require(shardId != Compacted, s"shard id $Compacted is reserved")
     val spark = docs.sparkSession
     graft.core.WriterLease.withLease(spark, path) {
-    // a rebuild over a previously-used path must not inherit stale shard
-    // subtrees (the shard write replaces only its OWN partitions)
-    for (tree <- Seq("postings", "impacts")) {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$tree")
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(root, true)
-    }
-    val tf = writeShardPostings(docs, textCol, idCol, path, buckets, shardId)
-    try {
-      val stats = shardStats(docs, textCol, tf)
-      graft.core.AtomicStore.replace(spark, s"$path/meta",
-        metaRelation(spark, shardDfOf(spark, path, shardId), stats, buckets,
-          Set(shardId)))
-    } finally tf.unpersist()
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the meta tmp first: a meta read adopts a complete tmp when the file
+      // is missing, which would re-publish the old index over the new
+      // trees. Only the index's own entries go: the trees, their compact
+      // tmps and an old-layout `meta/` relation
+      for (entry <- Seq("meta.json_tmp", "meta.json") ++
+          Seq("postings", "impacts", "meta").flatMap(e => Seq(e, s"${e}_tmp")))
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$entry"), true)
+      val tf = writeShardPostings(docs, textCol, idCol, path, buckets, shardId)
+      try writeMeta(spark, path,
+        IndexMeta(shardStats(docs, textCol, tf), buckets, Set(shardId)))
+      finally tf.unpersist()
     }
   }
 
   /** Fold one new shard into an existing index at O(shard) cost: postings
-    * land as the shard's own partition subtree; df/stats merge as exact
-    * long sums against the stored meta (the [[graft.fp.Fingerprint.mergeDelta]]
-    * pattern — which is why a probe after N appends is bit-identical to a
-    * probe of a single full rebuild, spec'd and oracle-gated by q97).
-    * Returns false (no-op) when `shardId` is already folded — the replay
-    * guard. See [[buildBm25Index]] for the crash-safety protocol.
+    * and impacts land as the shard's own partition subtrees; the stats add
+    * as exact longs in the meta (which is why a probe after N appends is
+    * bit-identical to a probe of a single full rebuild, spec'd and
+    * oracle-gated by q97). Returns false (no-op) when `shardId` is already
+    * folded — the replay guard. See [[buildBm25Index]] for the layout and
+    * the crash-safety protocol.
     *
     * `preTf` (optional): the shard's [[shardTermFrequencies]] relation,
     * precomputed (and typically persisted) by the caller — the
     * ingest-pipelining overlap: shard k+1 tokenizes while shard k's
     * build/append commits. MUST be exactly
     * `shardTermFrequencies(docs, textCol, idCol)` for the same rows;
-    * everything downstream (postings, impacts, df, sum_dl) derives from
-    * it. n_docs/n_text_docs still count `docs` directly (null-text rows
-    * never reach the tf relation). */
+    * everything downstream (postings, impacts, sum_dl) derives from it.
+    * n_docs/n_text_docs still count `docs` directly (null-text rows never
+    * reach the tf relation). */
   def appendBm25Index(
       docs: DataFrame, textCol: String, idCol: String, path: String,
       shardId: String, preTf: DataFrame = null): Boolean = {
+    require(shardId != Compacted, s"shard id $Compacted is reserved")
     val spark = docs.sparkSession
     graft.core.WriterLease.withLease(spark, path) {
-    val meta = readMeta(spark, path)
-    if (meta.shards.contains(shardId)) {
-      System.err.println(s"[bm25] shard $shardId already in index at $path — skipping")
-      return false
-    }
-    val tf = writeShardPostings(docs, textCol, idCol, path, meta.buckets,
-      shardId, preTf)
-    try {
-      val mergedDf = meta.df.withColumnRenamed("df", "__old")
-        .join(shardDfOf(spark, path, shardId).withColumnRenamed("df", "__new"),
-          Seq("tok"), "full_outer")
-        .select(col("tok"),
-          (coalesce(col("__old"), lit(0L)) + coalesce(col("__new"), lit(0L))).as("df"))
-      val s = shardStats(docs, textCol, tf)
-      val merged = IndexStats(meta.stats.nDocs + s.nDocs,
-        meta.stats.nTextDocs + s.nTextDocs, meta.stats.sumDl + s.sumDl)
-      graft.core.AtomicStore.replace(spark, s"$path/meta",
-        metaRelation(spark, mergedDf, merged, meta.buckets, meta.shards + shardId))
-    } finally tf.unpersist()
-    true
+      val meta = requireMeta(spark, path)
+      if (meta.shards.contains(shardId)) {
+        System.err.println(s"[bm25] shard $shardId already in index at $path — skipping")
+        false
+      } else {
+        val tf = writeShardPostings(docs, textCol, idCol, path, meta.buckets,
+          shardId, preTf)
+        try writeMeta(spark, path, IndexMeta(meta.stats + shardStats(docs, textCol, tf),
+          meta.buckets, meta.shards + shardId))
+        finally tf.unpersist()
+        true
+      }
     }
   }
 
-  /** Small-file maintenance: rewrite the postings tree (shards × buckets
-    * directories after repeated appends) as ONE shard with one file per
-    * bucket, and coalesce the meta relation. Probe results are identical
-    * before/after (spec'd). Protocol: the compacted-shard id enters the
-    * meta guard FIRST (a crash before the postings swap leaves probes on
-    * the old tree — still correct), then the postings tree swaps through
-    * the same tmp/delete/rename discipline as flat stores
-    * ([[graft.core.AtomicStore.replaceVia]]). Historical shard ids STAY
-    * in the guard, so replays of long-gone shards still short-circuit
-    * after compaction. */
+  /** Small-file maintenance: rewrite the postings and impacts trees
+    * (shards × buckets directories after repeated appends) as ONE shard
+    * with one file per bucket. Probe results are identical before/after
+    * (spec'd). Protocol: the compacted-shard id enters the meta guard
+    * FIRST, then each tree swaps through the tmp/delete/rename discipline
+    * ([[graft.core.AtomicStore.replaceVia]]). Every state in between reads
+    * the same index: a tree not yet swapped still holds the committed
+    * shards' subtrees, a swapped one holds their fold under the compacted
+    * id, and both are filtered to the guard — impacts rows fold under
+    * max/min/sum, so ceilings and df are unchanged. A torn swap self-heals
+    * on the next read or append. Historical shard ids STAY in the guard,
+    * so replays of long-gone shards still short-circuit. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     graft.core.WriterLease.withLease(spark, path) {
-    val meta = readMeta(spark, path)
-    if (!meta.shards.contains(CompactedShard))
-      graft.core.AtomicStore.replace(spark, s"$path/meta",
-        metaRelation(spark, meta.df, meta.stats, meta.buckets,
-          meta.shards + CompactedShard))
-    else // meta relation itself still benefits from a coalesce pass
-      graft.core.AtomicStore.compact(spark, s"$path/meta")
-    val live = graft.core.AtomicStore.readRequired(spark, s"$path/postings")
-      .filter(col("shard").isin(meta.shards.toSeq: _*))
-      .drop("shard")
-      .withColumn("shard", lit(CompactedShard))
-    graft.core.AtomicStore.replaceVia(spark, s"$path/postings") { tmp =>
-      live.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("shard", "bucket").parquet(tmp)
-    }
-    // the impacts tree compacts the same way: per-(tok, block) maxima
-    // MERGE under max/min, so folding every live subtree into one is
-    // probe-identical (absent on pre-block-max indexes → skip)
-    if (graft.core.Fs.exists(spark, s"$path/impacts")) {
-      val liveImp = graft.core.AtomicStore.readRequired(spark, s"$path/impacts")
+      val meta = requireMeta(spark, path)
+      if (!meta.shards.contains(Compacted))
+        writeMeta(spark, path, meta.copy(shards = meta.shards + Compacted))
+      val live = graft.core.AtomicStore.readRequired(spark, s"$path/postings")
         .filter(col("shard").isin(meta.shards.toSeq: _*))
+        .drop("shard")
+        .withColumn("shard", lit(Compacted))
+      graft.core.AtomicStore.replaceVia(spark, s"$path/postings") { tmp =>
+        live.repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("shard", "bucket").parquet(tmp)
+      }
+      val liveImp = committedImpacts(spark, path, meta)
         .groupBy("tok", "block", "bucket")
         .agg(max("max_tf").as("max_tf"), min("min_dl").as("min_dl"),
           sum("n").as("n"))
-        .withColumn("shard", lit(CompactedShard))
+        .withColumn("shard", lit(Compacted))
       graft.core.AtomicStore.replaceVia(spark, s"$path/impacts") { tmp =>
         liveImp.repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("shard", "bucket").parquet(tmp)
       }
     }
-  }
 
-  /** Reserved shard id the compactor rewrites the whole tree under. */
-  private val CompactedShard = "__compacted"
+  /** Whether a BM25 index is committed at `path` (its meta landed). The
+    * pipeline's append-vs-build decision keys on this. An index in the
+    * old layout throws. */
+  def indexExists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    readMeta(spark, path).isDefined
 
   private final case class IndexStats(nDocs: Long, nTextDocs: Long, sumDl: Long) {
     /** Derived EXACTLY as the one-shot aggregate would: long→double cast,
       * one IEEE division — so merged longs reproduce the rebuild's double. */
     def avgdl: Double = sumDl.toDouble / nTextDocs
+    def +(o: IndexStats): IndexStats =
+      IndexStats(nDocs + o.nDocs, nTextDocs + o.nTextDocs, sumDl + o.sumDl)
   }
-  private final case class IndexMeta(
-      df: DataFrame, stats: IndexStats, buckets: Int, shards: Set[String])
+  private final case class IndexMeta(stats: IndexStats, buckets: Int, shards: Set[String])
+
+  private def metaPath(path: String) = s"$path/meta.json"
+
+  /** The committed meta, None when no index is committed at `path`. */
+  private def readMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[IndexMeta] =
+    graft.core.AtomicStore.readMetaJson(spark, metaPath(path)) { m =>
+      IndexMeta(
+        IndexStats(m.required("n_docs").asLong(), m.required("n_text_docs").asLong(),
+          m.required("sum_dl").asLong()),
+        m.required("buckets").asInt(), graft.core.AtomicStore.shardIds(m))
+    }.orElse {
+      if (graft.core.Fs.exists(spark, s"$path/meta"))
+        throw new IllegalStateException(s"BM25 index at $path is in the old layout " +
+          "(a meta/ relation, no meta.json) — rebuild it with buildBm25Index")
+      None
+    }
+
+  private def requireMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): IndexMeta =
+    readMeta(spark, path).getOrElse(
+      throw new IllegalStateException(s"no BM25 index at $path"))
+
+  private def writeMeta(spark: org.apache.spark.sql.SparkSession, path: String,
+      meta: IndexMeta): Unit =
+    graft.core.AtomicStore.writeMetaJson(spark, metaPath(path)) { root =>
+      graft.core.AtomicStore.putShardIds(root, meta.shards)
+      root.put("n_docs", meta.stats.nDocs)
+      root.put("n_text_docs", meta.stats.nTextDocs)
+      root.put("sum_dl", meta.stats.sumDl)
+      root.put("buckets", meta.buckets)
+    }
 
   /** Hash-blocks per term's posting space: `block = xxhash64(doc_id) %
     * PostingBlocks`. The SAME block id for a doc across all terms — the
@@ -260,9 +296,7 @@ object Retrieval {
     * written from: one tokenize+aggregate pass serves the postings write,
     * the impacts derivation, and sum_dl — the old shape paid a second
     * full regex pass (stats) plus a disk re-read with a footer-inference
-    * job (impacts). The shard's df derives from the written impacts tree
-    * ([[shardDfOf]] — round-11: reading the vocabulary×blocks-bounded
-    * subtree replaces a postings→vocabulary shuffle per shard).
+    * job (impacts).
     *
     * Both trees are clustered by bucket before the partitioned write
     * ([[graft.core.ClusteredWrite]]: one writer task per core, one file
@@ -275,7 +309,8 @@ object Retrieval {
     * ([[queryBm25Index]]'s `blockMax` pruning derives exact per-block
     * score CEILINGS from it at query time, since scoreU is monotone up
     * in tf and down in dl and df/N/avgdl are per-term constants). Shard
-    * merge is a query-time max/min — appends stay O(shard).
+    * merge is a query-time max/min — appends stay O(shard). Its `n` (the
+    * postings rows per block) is where every probe's df comes from.
     *
     * Materialisation is a MEMORY_AND_DISK_SER persist, not a
     * localCheckpoint: a localCheckpoint truncates lineage, making an
@@ -303,8 +338,9 @@ object Retrieval {
     // the two writes are INDEPENDENT actions over the same persisted tf
     // (disjoint trees; block-manager locks dedup a racing tf partition
     // materialisation) — overlapped, the pair costs max not sum
-    // (guide: "overlap independent jobs")
-    graft.core.Par.both(
+    // (guide: "overlap independent jobs"). A failed write unpersists:
+    // the caller never receives tf to release it
+    try graft.core.Par.both(
       graft.core.ClusteredWrite(tf, buckets, col("bucket"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -324,25 +360,9 @@ object Retrieval {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard", "bucket")
         .parquet(s"$path/impacts"))
+    catch { case e: Throwable => tf.unpersist(); throw e }
     tf
   }
-
-  /** Per-term document frequencies of one shard from its WRITTEN impacts
-    * tree: postings are unique per (doc, tok), so df(tok) is the
-    * postings-row count — Σ over blocks of the per-block posting count
-    * `n` the impacts relation already carries (exact long arithmetic,
-    * consistent with disk by construction: it reads what was just
-    * written). Round-11: the old form re-aggregated the postings-size tf
-    * relation (`groupBy(tok).count`) — at 100 TB that is a second
-    * postings→vocabulary shuffle per ingested shard; this reads the
-    * vocabulary×blocks-bounded impacts subtree of the one shard instead
-    * (footer-job-free via the explicit schema, directory-pruned by the
-    * shard= partition filter). */
-  private def shardDfOf(spark: org.apache.spark.sql.SparkSession,
-      path: String, shardId: String): DataFrame =
-    graft.core.AtomicStore.readRequired(spark, s"$path/impacts", ImpactsSchema)
-      .filter(col("shard") === shardId)
-      .groupBy("tok").agg(sum("n").as("df"))
 
   private def spark(df: DataFrame) = df.sparkSession
 
@@ -366,47 +386,6 @@ object Retrieval {
     IndexStats(r.getLong(0), r.getLong(1), sumDl)
   }
 
-  /** Assemble the meta relation: vocabulary-sized df rows stay
-    * distributed; the stats row and the shard-guard rows are driver-built
-    * (bounded: 1 + |shards|). */
-  private def metaRelation(spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame, stats: IndexStats, buckets: Int,
-      shards: Set[String]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val tailSchema = StructType(Seq(
-      StructField("kind", StringType), StructField("n_docs", LongType),
-      StructField("n_text_docs", LongType), StructField("sum_dl", LongType),
-      StructField("buckets", IntegerType), StructField("shard_id", StringType)))
-    val tailRows = Row("stats", stats.nDocs, stats.nTextDocs, stats.sumDl,
-        buckets, null) +:
-      shards.toSeq.sorted.map(s => Row("shard", null, null, null, null, s))
-    val tail = spark.createDataFrame(
-        spark.sparkContext.parallelize(tailRows, 1), tailSchema)
-      .withColumn("tok", lit(null).cast("string"))
-      .withColumn("df", lit(null).cast("long"))
-    df.select(col("tok"), col("df"))
-      .withColumn("kind", lit("df"))
-      .withColumn("n_docs", lit(null).cast("long"))
-      .withColumn("n_text_docs", lit(null).cast("long"))
-      .withColumn("sum_dl", lit(null).cast("long"))
-      .withColumn("buckets", lit(null).cast("int"))
-      .withColumn("shard_id", lit(null).cast("string"))
-      .unionByName(tail.select("tok", "df", "kind", "n_docs", "n_text_docs",
-        "sum_dl", "buckets", "shard_id"))
-  }
-
-  /** The meta relation's fixed schema ([[metaRelation]] writes it) —
-    * passed to every meta read so no footer-inference job runs. */
-  private val MetaSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("tok", StringType), StructField("df", LongType),
-      StructField("kind", StringType), StructField("n_docs", LongType),
-      StructField("n_text_docs", LongType), StructField("sum_dl", LongType),
-      StructField("buckets", IntegerType), StructField("shard_id", StringType)))
-  }
-
   /** Impacts-tree read schema (partition cols as strings — inference is
     * off session-wide), for footer-job-free reads. */
   private val ImpactsSchema = {
@@ -418,23 +397,22 @@ object Retrieval {
       StructField("shard", StringType), StructField("bucket", StringType)))
   }
 
-  private def readMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): IndexMeta = {
-    val rel = graft.core.AtomicStore.read(spark, s"$path/meta", MetaSchema).getOrElse(
-      throw new IllegalStateException(s"no BM25 index meta at $path/meta"))
-    val df = rel.filter(col("kind") === "df").select("tok", "df")
-    // ONE bounded collect for both tail kinds (1 stats row + |shards|
-    // guard rows) — was two jobs, each a full meta scan
-    val tail = rel.filter(col("kind") =!= "df")
-      .select("kind", "n_docs", "n_text_docs", "sum_dl", "buckets", "shard_id")
-      .collect()
-    val s = tail.find(_.getString(0) == "stats").getOrElse(
-      throw new IllegalStateException(s"BM25 meta at $path/meta has no stats row"))
-    val shards = tail.filter(_.getString(0) == "shard")
-      .map(_.getString(5)).toSet
-    IndexMeta(df, IndexStats(s.getLong(1), s.getLong(2), s.getLong(3)),
-      s.getInt(4), shards)
-  }
+  /** The committed shards' impacts rows. */
+  private def committedImpacts(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: IndexMeta): DataFrame =
+    graft.core.AtomicStore.readRequired(spark, s"$path/impacts", ImpactsSchema)
+      .filter(col("shard").isin(meta.shards.toSeq: _*))
+
+  /** df per term of `impacts` (committed rows): Σ n — see
+    * [[buildBm25Index]] for why that is exact. */
+  private def dfOf(impacts: DataFrame): DataFrame =
+    impacts.groupBy("tok").agg(sum("n").as("df"))
+
+  /** Every committed term's df (the spec observable of the rule the
+    * probes apply to their own terms). */
+  private[text] def documentFrequencies(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    dfOf(committedImpacts(spark, path, requireMeta(spark, path)))
 
   /** Probe a persisted BM25 index: bit-identical to [[bm25TopK]] on the
     * same corpus (spec'd, and q95 routes the q91 gate query through the
@@ -465,15 +443,14 @@ object Retrieval {
     *
     * The win is posting-row reduction (logged per probe): high-idf terms
     * concentrate their mass in few blocks and the long tail of
-    * low-impact blocks is never scored. Requires an index whose every
-    * shard carries the impacts relation (rebuild legacy indexes). */
+    * low-impact blocks is never scored. */
   def queryBm25Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queryTerms: DataFrame, k: Int = 5,
       k1: Double = 1.2, b: Double = 0.75,
       maxDfFrac: Double = 1.0, blockMax: Boolean = false,
       blockMaxStats: Boolean = false): DataFrame = {
-    val meta = readMeta(spark, path)
+    val meta = requireMeta(spark, path)
     // distinct: a duplicated (query_id, term) row would otherwise duplicate
     // scored rows (doubling score_u/n_hit_terms) and break the documented
     // bit-equality with bm25TopK — which dedups the same way
@@ -482,22 +459,27 @@ object Retrieval {
     // itself, never corpus data)
     val allTerms = q.select("term").distinct().collect().map(_.getString(0)).toSeq
     require(allTerms.nonEmpty, "queryTerms is empty")
-    // df-ceiling (stopword guard): the persisted df relation makes the
-    // ceiling enforceable BEFORE the postings scan — a stopword-like term
-    // ("the") has postings ≈ the whole corpus, and without the guard one
-    // hot term degrades the index probe to a corpus-sized read. Dropping a
-    // term is only APPROXIMATELY rank-safe: its near-zero odds-idf still
+    // the terms' df: one bounded collect of their impacts rows (|terms| ×
+    // blocks × shards, in the terms' bucket directories), summed in one
+    // task — a single input partition already satisfies the aggregate's
+    // clustering, so no shuffle stage runs
+    val df = dfOf(committedImpacts(spark, path, meta)
+        .filter(inBuckets(allTerms, meta.buckets) && col("tok").isin(allTerms: _*))
+        .coalesce(1))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // df-ceiling (stopword guard): df is known before the postings scan,
+    // so the ceiling is enforceable there — a stopword-like term ("the")
+    // has postings ≈ the whole corpus, and without the guard one hot term
+    // degrades the index probe to a corpus-sized read. Dropping a term is
+    // only APPROXIMATELY rank-safe: its near-zero odds-idf still
     // contributes to score_u and n_hit_terms (default 1.0 = off, which is
     // what the bit-exact gate queries use). Dropped terms are named on
-    // stderr. The df probe itself is footer-pruned to |terms| rows.
+    // stderr.
     val terms =
       if (maxDfFrac >= 1.0) allTerms
       else {
-        val dfMap = meta.df
-          .filter(col("tok").isin(allTerms: _*))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val (hot, kept) = allTerms.partition(t =>
-          dfMap.getOrElse(t, 0L) > maxDfFrac * meta.stats.nDocs)
+          df.getOrElse(t, 0L) > maxDfFrac * meta.stats.nDocs)
         if (hot.nonEmpty) System.err.println(
           s"[bm25] dropping ${hot.size} term(s) over df ceiling " +
             s"($maxDfFrac of ${meta.stats.nDocs} docs): ${hot.mkString(", ")}")
@@ -509,79 +491,69 @@ object Retrieval {
         .withColumn("rank", lit(null).cast("int"))
         .withColumn("score_u", lit(null).cast("long"))
         .withColumn("n_hit_terms", lit(null).cast("long"))
-    // bucket predicate from FOLDABLE expressions — pmod(xxhash64(lit(t)))
-    // constant-folds to the same literal the writer computed, so Catalyst
-    // prunes non-probed bucket directories at the scan (plan-guarded).
-    // Partition values round-trip as STRINGS (type inference is off
-    // session-wide), so the comparison is string = string — a cast on the
-    // partition column would defeat pruning. The exact term filter then
-    // lands on the parquet footer. The shard filter restricts the scan to
-    // META-RECORDED shards: orphan postings of a torn (crashed-before-
-    // meta) append stay invisible until their replay completes.
-    val bucketPred = terms
-      .map(t => col("bucket") === pmod(xxhash64(lit(t)), lit(meta.buckets)).cast("string"))
-      .reduce(_ || _)
+    // bucket predicate from FOLDABLE expressions (see inBuckets); the
+    // exact term filter then lands on the parquet footer. The shard filter
+    // restricts the scan to COMMITTED shards: orphan postings of a torn
+    // (crashed-before-meta) append stay invisible until their replay
+    // completes.
+    val bucketPred = inBuckets(terms, meta.buckets)
     // postings are corpus-scale (register for the broadcast demotion
     // rule); readRequired heals a torn compact swap on the next probe
     graft.plans.CorpusScale.register(s"$path/postings")
     val postings = graft.core.AtomicStore.readRequired(spark, s"$path/postings")
       .filter(col("shard").isin(meta.shards.toSeq: _*) &&
         bucketPred && col("tok").isin(terms: _*))
-    val dfq = broadcast(meta.df.filter(col("tok").isin(terms: _*)))
-    // stats as a literal 1-row relation; avgdl derives from the exact
-    // stored longs with the same single long→double-cast division the
-    // one-shot aggregate performs (bit-identical, see IndexStats.avgdl)
-    val stats = broadcast(spark.range(1).select(
-      lit(meta.stats.nDocs).as("n_docs"), lit(meta.stats.avgdl).as("avgdl")))
+    // df and the corpus stats enter as literals; avgdl derives from the
+    // exact stored longs with the same single long→double-cast division
+    // the one-shot aggregate performs (bit-identical, see IndexStats.avgdl)
+    val dfLit = typedLit(terms.map(t => t -> df.getOrElse(t, 0L)).toMap)
+    def score(tf: Column, dl: Column): Column =
+      scoreU(tf, dfLit(col("tok")), dl, lit(meta.stats.nDocs),
+        lit(meta.stats.avgdl), k1, b)
+    val tfAll = postings.join(broadcast(q), postings("tok") === q("term"))
+      .select(col("query_id"), col("doc_id"), col("tok"), col("dl"), col("tf"),
+        col("block"))
     val tf =
-      if (!blockMax)
-        postings.join(broadcast(q), postings("tok") === q("term"))
-          .select(col("query_id"), col("doc_id"), col("tok"), col("dl"), col("tf"))
-      else {
-        require(postings.columns.contains("block"),
-          s"index at $path predates block-max postings — rebuild it (or probe with blockMax = false)")
-        val tfAll = postings.join(broadcast(q), postings("tok") === q("term"))
-          .select(col("query_id"), col("doc_id"), col("tok"), col("dl"),
-            col("tf"), col("block"))
-        blockMaxPrune(spark, path, meta, q, terms, bucketPred, tfAll,
-            dfq, stats, k, k1, b, blockMaxStats)
-          .select(col("query_id"), col("doc_id"), col("tok"), col("dl"), col("tf"))
-      }
-    val scored = tf.join(dfq, "tok").crossJoin(stats)
-      .select(col("query_id"), col("doc_id"),
-        scoreU(col("tf"), col("df"), col("dl"), col("n_docs"), col("avgdl"),
-          k1, b).as("s"))
+      if (!blockMax) tfAll
+      else blockMaxPrune(spark, path, meta, q, terms, bucketPred, tfAll, score,
+        k, blockMaxStats)
+    val scored = tf.select(col("query_id"), col("doc_id"),
+      score(col("tf"), col("dl")).as("s"))
     val agg = scored.groupBy("query_id", "doc_id")
       .agg(sum("s").as("score_u"), count(lit(1)).as("n_hit_terms"))
     rankTopK(agg, k)
   }
 
+  /** `bucket` is one of the directories `terms` hash to. Built from
+    * FOLDABLE expressions — pmod(xxhash64(lit(t))) constant-folds to the
+    * literal the writer computed, so Catalyst prunes the other bucket
+    * directories at the scan (plan-guarded). Partition values round-trip
+    * as STRINGS (type inference is off session-wide), so the comparison
+    * is string = string — a cast on the partition column would defeat
+    * pruning. */
+  private def inBuckets(terms: Seq[String], buckets: Int): Column =
+    terms.map(t => col("bucket") === pmod(xxhash64(lit(t)), lit(buckets)).cast("string"))
+      .reduce(_ || _)
+
   /** The block-max pruning pass — see [[queryBm25Index]]'s scaladoc for
     * the soundness argument. Returns the surviving tf rows (a doc's
     * block survives → ALL its tf rows survive, so downstream scores are
     * exact). Every relation here is bounded by |terms| × PostingBlocks
-    * or |queries| — broadcast-scale by construction. */
+    * or |queries| — broadcast-scale by construction. `score(tf, dl)` is
+    * the probe's per-term scorer over a row carrying `tok`. */
   private def blockMaxPrune(
       spark: org.apache.spark.sql.SparkSession, path: String,
       meta: IndexMeta, q: DataFrame, terms: Seq[String],
-      bucketPred: org.apache.spark.sql.Column, tfAll: DataFrame,
-      dfq: DataFrame, stats: DataFrame, k: Int,
-      k1: Double, b: Double, collectStats: Boolean): DataFrame = {
-    // soundness precondition — see requireImpactsCover. "Live" = shard
-    // dirs present in the postings tree AND meta-committed (after
-    // compaction only __compacted remains on disk, and its impacts cover
-    // everything).
-    requireImpactsCover(spark, path, meta)
-    val ub = graft.core.AtomicStore.readRequired(spark, s"$path/impacts", ImpactsSchema)
-      .filter(col("shard").isin(meta.shards.toSeq: _*) &&
-        bucketPred && col("tok").isin(terms: _*))
+      bucketPred: Column, tfAll: DataFrame,
+      score: (Column, Column) => Column, k: Int,
+      collectStats: Boolean): DataFrame = {
+    val ub = committedImpacts(spark, path, meta)
+      .filter(bucketPred && col("tok").isin(terms: _*))
       .groupBy("tok", "block") // shard ceilings merge under max/min
       .agg(max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
       .join(broadcast(q), col("tok") === col("term"))
-      .join(dfq, "tok").crossJoin(stats)
       .select(col("query_id"), col("tok"), col("block"),
-        scoreU(col("max_tf"), col("df"), col("min_dl"),
-          col("n_docs"), col("avgdl"), k1, b).as("ub"))
+        score(col("max_tf"), col("min_dl")).as("ub"))
       // |terms| × blocks rows; read twice below — one partition keeps the
       // checkpoint (and every consumer stage) from paying 32-task overhead
       // for a few hundred rows
@@ -591,10 +563,7 @@ object Retrieval {
       .agg(max(struct(col("ub"), col("block"))).as("m"))
       .select(col("query_id"), col("tok"), col("m.block").as("block"))
     val partial = tfAll.join(broadcast(probe), Seq("query_id", "tok", "block"))
-      .join(dfq, "tok").crossJoin(stats)
-      .select(col("query_id"), col("doc_id"),
-        scoreU(col("tf"), col("df"), col("dl"), col("n_docs"), col("avgdl"),
-          k1, b).as("s"))
+      .select(col("query_id"), col("doc_id"), score(col("tf"), col("dl")).as("s"))
       .groupBy("query_id", "doc_id").agg(sum("s").as("ps"))
     // threshold T = k-th best PARTIAL total (valid lower bound on the
     // true k-th best); fewer than k partials → no pruning for that query
@@ -645,10 +614,12 @@ object Retrieval {
     *     (AQE still broadcasts a genuinely small batch adaptively), never
     *     a BroadcastNestedLoopJoin, with no driver-side term collect
     *     anywhere on the path (plan-guarded in RetrievalSpec);
-    *  3. document frequencies join from the index's PERSISTED df relation
-    *     on the same `tok` equi key (vocabulary-sized, distributed);
-    *  4. corpus stats enter as LITERALS (the meta read is one bounded
-    *     collect of 1 + |shards| rows — never query- or corpus-sized);
+    *  3. document frequencies derive from the impacts rows of the
+    *     batch's own (bucket, term) pairs — a semi-join on the same equi
+    *     key, summed per term — and join back on `tok` (distributed); the
+    *     batch's term rows are materialised once for all their readers;
+    *  4. corpus stats enter as LITERALS (the meta is read driver-side,
+    *     no Spark job);
     *  5. the per-query top-k is the k-bounded [[TopKAggregate]] partial,
     *     so the rank shuffle carries O(tasks × k) rows per query;
     *  6. identical term PROFILES are ranked once and fanned back out
@@ -658,7 +629,7 @@ object Retrieval {
     * Scores are bit-identical to [[queryBm25Index]] / [[bm25TopK]] for
     * any query set (same quantised algebra, same literal stats — spec'd,
     * and q152 gates a 1000-query batch against the q91-family oracle).
-    * `maxDfFrac` drops over-ceiling terms AFTER the df join (the direct
+    * `maxDfFrac` drops over-ceiling terms at the df relation (the direct
     * path's approximate-rank-safety caveat applies). `blockMax = true`
     * adds the EXACT per-query block-max cut in batch shape (see the
     * in-body comment): bit-identical results, scored-row shuffle cut to
@@ -668,7 +639,7 @@ object Retrieval {
       queryTerms: DataFrame, k: Int = 5,
       k1: Double = 1.2, b: Double = 0.75,
       maxDfFrac: Double = 1.0, blockMax: Boolean = false): DataFrame = {
-    val meta = readMeta(spark, path)
+    val meta = requireMeta(spark, path)
     // distinct at the contract boundary — the queryBm25Index rationale
     val q0 = queryTerms.select(col("query_id"), col("term")).distinct()
     // BATCH PROFILE DEDUP (round-11 optimization): a ranking depends ONLY
@@ -695,6 +666,12 @@ object Retrieval {
         // partition values round-trip as strings (inference off
         // session-wide) — compare string = string, the writer's layout
         pmod(xxhash64(col("term")), lit(meta.buckets)).cast("string"))
+      // derived ONCE: the postings join, the df semi-join and the ceilings
+      // all read it, and each would otherwise re-run the profile dedup's
+      // aggregates (without this the BatchStress 1k and 10k probes ran
+      // ~10% slower at sf0.1 on a 4-core host). Bounded by |profiles| ×
+      // terms, so ubQ's localCheckpoint caveat (below) applies
+      .localCheckpoint(true)
     graft.plans.CorpusScale.register(s"$path/postings")
     val postings = graft.core.AtomicStore.readRequired(spark, s"$path/postings")
       // orphan subtrees of torn appends stay invisible until replayed
@@ -702,18 +679,20 @@ object Retrieval {
     // (bucket, term) equi-join: bucket is functional on term, but keeping
     // it in the key gives dynamic partition pruning a handle on the
     // postings tree's partition column when the batch's term set is small
-    if (blockMax) // before tfAll's eager select would throw a raw
-      // UNRESOLVED_COLUMN on `block` (the per-query path's guard)
-      require(postings.columns.contains("block"),
-        s"index at $path predates block-max postings — rebuild it " +
-          "(or probe with blockMax = false)")
-    val tfBase = Seq(col("query_id"), col("doc_id"), col("tok"),
-      col("dl"), col("tf"))
     val tfAll = postings.join(q,
         postings("bucket") === q("__qbucket") && postings("tok") === q("term"))
-      // `block` only when pruning needs it — a legacy (pre-impacts) index
-      // has no block column and must keep working on the exhaustive path
-      .select(tfBase ++ (if (blockMax) Seq(col("block")) else Nil): _*)
+      .select(col("query_id"), col("doc_id"), col("tok"), col("dl"), col("tf"),
+        col("block"))
+    // the batch's committed impacts rows, semi-joined on the same key; df
+    // per term sums their `n` (terms over the ceiling drop here)
+    val impacts = committedImpacts(spark, path, meta)
+      .join(q.select(col("__qbucket").as("bucket"), col("term").as("tok")),
+        Seq("bucket", "tok"), "left_semi")
+    val dfs =
+      if (maxDfFrac >= 1.0) dfOf(impacts)
+      else dfOf(impacts).filter(col("df") <= lit(maxDfFrac * meta.stats.nDocs))
+    def score(tf: Column, dl: Column): Column =
+      scoreU(tf, col("df"), dl, lit(meta.stats.nDocs), lit(meta.stats.avgdl), k1, b)
     // BATCHED block-max pruning (the q112 soundness argument, batch
     // shape): the exhaustive batch's wall-clock is dominated NOT by the
     // postings join (linear, measured 7.0M → 70.0M rows at 1k → 10k
@@ -721,8 +700,8 @@ object Retrieval {
     // per-(query, doc) sum — the classic exhaustive-scoring cost that
     // WAND/block-max exists to cut (Broder 2003; Ding & Suel 2011).
     // Everything stays an equi-join on distributed relations: ceilings
-    // semi-join the batch's (bucket, term) set, pass-1 probes one block
-    // per (query, term), thresholds are per-query k-bounded partials, and
+    // come from the batch's impacts rows, pass-1 probes one block per
+    // (query, term), thresholds are per-query k-bounded partials, and
     // the survivors relation (≤ |queries| × blocks rows) joins back on
     // (query_id, block) — no driver term collect, no broadcast query set.
     // Postings are scanned twice (pass 1 + final), which buys skipping
@@ -730,21 +709,12 @@ object Retrieval {
     val tf =
       if (!blockMax) tfAll
       else {
-        requireImpactsCover(spark, path, meta)
-        val termRel = q.select(col("__qbucket").as("bucket"),
-          col("term").as("tok")).distinct()
-        val ubBase = graft.core.AtomicStore
-          .readRequired(spark, s"$path/impacts", ImpactsSchema)
-          .filter(col("shard").isin(meta.shards.toSeq: _*))
-          .join(termRel, Seq("bucket", "tok"), "left_semi")
+        val ubBase = impacts
           .groupBy("tok", "block") // shard ceilings merge under max/min
           .agg(max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
-          .join(meta.df, "tok")
-          .filter(if (maxDfFrac >= 1.0) lit(true)
-            else col("df") <= lit(maxDfFrac * meta.stats.nDocs))
+          .join(dfs, "tok")
           .select(col("tok"), col("block"),
-            scoreU(col("max_tf"), col("df"), col("min_dl"),
-              lit(meta.stats.nDocs), lit(meta.stats.avgdl), k1, b).as("ub"))
+            score(col("max_tf"), col("min_dl")).as("ub"))
         // per-(query, term, block) ceilings: bounded by |batch term pairs|
         // × blocks; eagerly materialised (read twice below) — bounded, so
         // the localCheckpoint fault-tolerance caveat is acceptable here
@@ -758,10 +728,8 @@ object Retrieval {
           .agg(max(struct(col("ub"), col("block"))).as("m"))
           .select(col("query_id"), col("tok"), col("m.block").as("block"))
         val partial = tfAll.join(probe, Seq("query_id", "tok", "block"))
-          .join(meta.df, "tok")
-          .select(col("query_id"), col("doc_id"),
-            scoreU(col("tf"), col("df"), col("dl"),
-              lit(meta.stats.nDocs), lit(meta.stats.avgdl), k1, b).as("s"))
+          .join(dfs, "tok")
+          .select(col("query_id"), col("doc_id"), score(col("tf"), col("dl")).as("s"))
           .groupBy("query_id", "doc_id").agg(sum("s").as("ps"))
         val thresh = partial.groupBy("query_id")
           .agg(TopKAggregate.topK(struct(col("ps"), col("doc_id")), k).as("tk"))
@@ -781,16 +749,10 @@ object Retrieval {
           // recomputing it would re-run pass 1's postings scan
         tfAll.join(surviving, Seq("query_id", "block"))
       }
-    // df from the persisted vocabulary relation — tok equi-join (the tf
-    // side is already term-restricted, so this is |hit postings| rows
-    // against |vocabulary|; Spark picks broadcast only if df is small)
-    val withDf = tf.drop("block").join(meta.df, "tok")
-    val limited =
-      if (maxDfFrac >= 1.0) withDf
-      else withDf.filter(col("df") <= lit(maxDfFrac * meta.stats.nDocs))
-    val scored = limited.select(col("query_id"), col("doc_id"),
-      scoreU(col("tf"), col("df"), col("dl"),
-        lit(meta.stats.nDocs), lit(meta.stats.avgdl), k1, b).as("s"))
+    // tok equi-join (the tf side is already term-restricted, so this is
+    // |hit postings| rows against the batch's terms)
+    val scored = tf.drop("block").join(dfs, "tok")
+      .select(col("query_id"), col("doc_id"), score(col("tf"), col("dl")).as("s"))
     // pre-partition by the grouping keys: the default partial+final
     // aggregate is the WRONG plan for this shape — each (query, doc)
     // group holds ≤ |query terms| rows scattered across input partitions,
@@ -810,27 +772,6 @@ object Retrieval {
     ranked.join(qmap, col("query_id") === col("__rep"))
       .select(col("__qid").as("query_id"), col("doc_id"), col("rank"),
         col("score_u"), col("n_hit_terms"))
-  }
-
-  /** Soundness precondition shared by the per-query and batched block-max
-    * paths: ceilings must cover every LIVE shard's postings (an index
-    * whose older shards predate the impacts relation would under-bound
-    * and prune real hits). */
-  private def requireImpactsCover(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      meta: IndexMeta): Unit = {
-    def shardDirs(tree: String): Set[String] = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$tree")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) Set.empty
-      else fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("shard=")).map(_.stripPrefix("shard=")).toSet
-    }
-    val live = shardDirs("postings").intersect(meta.shards)
-    val impactShards = shardDirs("impacts")
-    require(live.subsetOf(impactShards),
-      s"block-max needs impacts for every live shard at $path — " +
-        s"missing: ${(live -- impactShards).mkString(", ")} (rebuild the index)")
   }
 
   /** Top-`k` documents per query by quantised-BM25 score.
@@ -884,7 +825,7 @@ object Retrieval {
     // df-ceiling in the DIRECT path bounds the score aggregate, not the
     // scan (df is only known after the term-restricted postings exist —
     // the I/O-pruning form of this guard lives in [[queryBm25Index]],
-    // where the persisted df/ relation is consultable BEFORE the scan).
+    // where the index's impacts give df BEFORE the postings scan).
     // Same approximate-rank-safety caveat; default 1.0 = off.
     val limited =
       if (maxDfFrac >= 1.0) tf.join(broadcast(dfq), "tok")

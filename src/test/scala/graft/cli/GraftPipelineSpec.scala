@@ -698,7 +698,7 @@ class GraftPipelineSpec extends SparkSpec {
     graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(s"$root/card"))
     val (_, n2) = GraftPipeline.run(spark, cfg) // short-circuits on the store
     assert(n2 == n1)
-    assert(graft.core.Fs.exists(spark, s"$root/bm25/meta"), "index not healed")
+    assert(graft.text.Retrieval.indexExists(spark, s"$root/bm25"), "index not healed")
     assert(spark.read.parquet(s"$root/card").count() > 0, "card not healed")
     val q = Seq((1L, "dup")).toDF("query_id", "term")
     assert(graft.text.Retrieval.queryBm25Index(spark, s"$root/bm25", q, k = 3)
@@ -938,8 +938,7 @@ class GraftPipelineSpec extends SparkSpec {
     assert(buildCfg.bm25IndexPath == s"$out/inv")
     val (nIn, nOut) = GraftPipeline.run(spark, buildCfg)
     assert(nIn == nOut && nOut > 0)
-    assert(spark.read.parquet(s"$out/inv/meta")
-      .filter(col("kind") === "stats").count() == 1)
+    assert(graft.text.Retrieval.indexExists(spark, s"$out/inv"))
 
     // probe: input relation IS the (query_id, term) set
     Seq((1L, "dup"), (1L, "merge"), (2L, "vector"))

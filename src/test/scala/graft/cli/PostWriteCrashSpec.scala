@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path => JPath, Paths}
 
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
@@ -99,23 +99,6 @@ class PostWriteCrashSpec extends SparkSpec {
       try it.iterator().asScala.filter(Files.isRegularFile(_)).toList finally it.close()
     }
   }
-  private def deleteTree(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val it = Files.walk(root)
-      try it.iterator().asScala.toList.reverse.foreach(Files.delete) finally it.close()
-    }
-  }
-  private def copyTree(from: String, to: String): Unit = {
-    val src = Paths.get(from)
-    val it = Files.walk(src)
-    try it.iterator().asScala.foreach { p =>
-      val d = Paths.get(to).resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(d)
-      else Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES)
-    } finally it.close()
-  }
-  private def restore(from: String, work: String): Unit = { deleteTree(work); copyTree(from, work) }
 
   /** What each store's own reader sees. */
   private def readerState(work: String): Map[String, Seq[String]] = {
@@ -239,7 +222,7 @@ class PostWriteCrashSpec extends SparkSpec {
     val (out, sigs) = GraftPipeline.plan(spark, c1)
     assert(sigs.isDefined)
     out.write.mode("overwrite").partitionBy("split").parquet(c1.outputDir)
-    copyTree(work, mid)
+    FaultFs.copyTree(work, mid)
     def written() = spark.read.parquet(c1.outputDir)
 
     // the no-crash post-write: its mutations and the stores it leaves
@@ -257,7 +240,7 @@ class PostWriteCrashSpec extends SparkSpec {
     assert(legNames == Seq("fingerprint_store", "rollup", "dedup_seen", "dedup_neardup",
       "bm25_index", "data_card"))
     val footprint = legNames.map { leg =>
-      restore(mid, work)
+      FaultFs.restore(mid, work)
       val body = GraftPipeline.postWriteLegs(spark, c1, written(), sigs).toMap.apply(leg)
       val (_, ms) = FaultFs.recording(body())
       leg -> ms.flatMap(_.paths).map(tree(work)).toSet
@@ -283,7 +266,7 @@ class PostWriteCrashSpec extends SparkSpec {
       def written() = spark.read.parquet(c.outputDir)
       try Iterator.continually(points.poll()).takeWhile(_ != null && !failed).foreach { case (leg, k, n) =>
         val at = s"$leg crashed at mutation $k of $n"
-        restore(mid, dir)
+        FaultFs.restore(mid, dir)
         val (_, fault) = FaultFs.armed(p => footprint(leg)(tree(dir)(p)), k)(
           GraftPipeline.postWrite(spark, c, written(), sigs))
         // a crash at a cleanup the leg swallows (its lease-lock release)

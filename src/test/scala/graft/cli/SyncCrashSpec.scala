@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -29,14 +29,6 @@ class SyncCrashSpec extends SparkSpec {
   private def walk(dir: String): Seq[java.nio.file.Path] = {
     val it = Files.walk(Paths.get(dir))
     try it.iterator().asScala.toList finally it.close()
-  }
-  private def restore(from: String, to: String): Unit = {
-    if (Files.exists(Paths.get(to))) walk(to).reverse.foreach(Files.delete)
-    walk(from).foreach { p =>
-      val d = Paths.get(to).resolve(Paths.get(from).relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(d)
-      else Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES)
-    }
   }
   private def state(dir: String): Seq[(String, Long, Long)] =
     walk(dir).map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).sortBy(_._1)
@@ -89,7 +81,7 @@ class SyncCrashSpec extends SparkSpec {
     val workers = 3
     graft.core.Par.all((0 until workers).map { i => () =>
       damaged(s"$local/work_$i")
-      restore(s"$local/work_$i", s"$local/work_$i-saved")
+      FaultFs.restore(s"$local/work_$i", s"$local/work_$i-saved")
     })
     // each worker's no-crash sync: its mutations (one recording at a time)
     val counts = (0 until workers).map { i =>
@@ -115,7 +107,7 @@ class SyncCrashSpec extends SparkSpec {
       spark.sparkContext.setJobGroup(group, "sync crash points", interruptOnCancel = false)
       try Iterator.continually(points.poll()).takeWhile(k => k != null && !failed).foreach { k =>
         val at = s"sync crashed at mutation $k of $n"
-        restore(s"$dir-saved", dir)
+        FaultFs.restore(s"$dir-saved", dir)
         val (_, fault) = FaultFs.armed(FaultFs.under(_, dir), k)(
           try run(dir, execute = true) finally quiesce(group))
         assert(fault.tripped, s"$at: never reached")

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.net.URI
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -124,6 +125,29 @@ object FaultFs {
   }
 
   def unhold(): Unit = held.getAndSet(None).foreach(_._3.countDown())
+
+  /** Delete the local tree `dir`, if it exists. */
+  def deleteTree(dir: String): Unit = {
+    val root = Paths.get(dir)
+    if (Files.exists(root)) {
+      val it = Files.walk(root)
+      try it.iterator().asScala.toList.reverse.foreach(Files.delete) finally it.close()
+    }
+  }
+
+  /** Copy the local tree `from` to `to`, keeping file attributes (mtimes). */
+  def copyTree(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val it = Files.walk(src)
+    try it.iterator().asScala.foreach { p =>
+      val d = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(d)
+      else Files.copy(p, d, StandardCopyOption.COPY_ATTRIBUTES)
+    } finally it.close()
+  }
+
+  /** Make the local tree `to` a copy of `from`: the start of a crash point. */
+  def restore(from: String, to: String): Unit = { deleteTree(to); copyTree(from, to) }
 
   /** Hadoop's own overloads call each other: count the outermost call only. */
   private val depth = ThreadLocal.withInitial[Integer](() => 0)

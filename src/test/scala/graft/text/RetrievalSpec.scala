@@ -117,16 +117,6 @@ class RetrievalSpec extends SparkSpec {
     assert(set(Retrieval.queryBm25IndexBatched(spark, idx, batch, k = 3,
       blockMax = true)) == set(probe),
       "batched block-max pruning changed results — the cut is not exact")
-    // a legacy (pre-block-max) index must refuse the pruned probe with
-    // the actionable message, not a raw unresolved-column analysis error
-    val legacy = tmpDir("bm25idx_legacy")
-    spark.read.parquet(s"$idx/meta").write.parquet(s"$legacy/meta")
-    spark.read.parquet(s"$idx/postings").drop("block")
-      .write.partitionBy("shard", "bucket").parquet(s"$legacy/postings")
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.queryBm25IndexBatched(spark, legacy, terms, k = 3, blockMax = true)
-    }
-    assert(e.getMessage.contains("rebuild"), e.getMessage)
     // plan guard (round-8 verdict task #1): the batched path must be pure
     // equi-join — no BroadcastNestedLoopJoin, no CartesianProduct — and
     // must keep the k-bounded partial aggregate (never a window sort)
@@ -191,6 +181,10 @@ class RetrievalSpec extends SparkSpec {
     assert(empty.count() == 0)
   }
 
+  private def metaJson(idx: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$idx/meta.json")),
+      "UTF-8")
+
   private def probeSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSet
@@ -238,8 +232,8 @@ class RetrievalSpec extends SparkSpec {
       "prepaid append wrote different postings")
     assert(rel(plain, "impacts") == rel(prep, "impacts"),
       "prepaid append wrote different impacts")
-    assert(rel(plain, "meta") == rel(prep, "meta"),
-      "prepaid append committed different meta (df/stats/guard)")
+    assert(metaJson(plain) == metaJson(prep),
+      "prepaid append committed a different meta (stats/guard)")
     assert(probeSet(Retrieval.queryBm25Index(spark, prep, terms, k = 5)) ==
       probeSet(Retrieval.queryBm25Index(spark, plain, terms, k = 5)))
   }
@@ -388,14 +382,108 @@ class RetrievalSpec extends SparkSpec {
     val afterCompact = Retrieval.queryBm25Index(spark, idx, q(1L -> "zz"), k = 7,
       blockMax = true).collect().map(_.toSeq).toSet
     assert(afterCompact == full)
-    // an index missing impacts for a committed shard must refuse to
-    // prune (under-bounded ceilings would silently drop real hits)
+    // df and the ceilings come from the impacts tree: without it every
+    // probe, pruned or not, throws naming the tree
     graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(s"$idx/impacts"))
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.queryBm25Index(spark, idx, q(1L -> "zz"), k = 7, blockMax = true)
-        .collect()
+    val probes = Seq[() => Unit](
+      () => Retrieval.queryBm25Index(spark, idx, q(1L -> "zz"), k = 7).collect(),
+      () => Retrieval.queryBm25Index(spark, idx, q(1L -> "zz"), k = 7, blockMax = true)
+        .collect(),
+      () => Retrieval.queryBm25IndexBatched(spark, idx, q(1L -> "zz"), k = 7).collect(),
+      () => Retrieval.queryBm25IndexBatched(spark, idx, q(1L -> "zz"), k = 7,
+        blockMax = true).collect())
+    probes.foreach { probe =>
+      val e = intercept[IllegalStateException](probe())
+      assert(e.getMessage.contains(s"$idx/impacts"), e.getMessage)
     }
-    assert(e.getMessage.contains("impacts"))
+  }
+
+  test("bm25 df from impacts: build, append, append, compact, append ≡ countDistinct; stats ≡ one-shot build") {
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    def shard(i: Int) = docs.filter(pmod(col("doc_id"), lit(4)) === i ||
+      col("doc_id").isNull && lit(i) === 0)
+    val idx = tmpDir("bm25_df")
+    Retrieval.buildBm25Index(shard(0), "text", "doc_id", idx, buckets = 16, shardId = "s0")
+    assert(Retrieval.appendBm25Index(shard(1), "text", "doc_id", idx, "s1"))
+    assert(Retrieval.appendBm25Index(shard(2), "text", "doc_id", idx, "s2"))
+    Retrieval.compactBm25Index(spark, idx)
+    assert(Retrieval.appendBm25Index(shard(3), "text", "doc_id", idx, "s3"))
+    val want = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
+      .groupBy("tok").agg(countDistinct("doc_id").as("df"))
+    val got = Retrieval.documentFrequencies(spark, idx)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (w, g) = (rows(want), rows(got))
+    assert(w.nonEmpty && g == w,
+      s"df diverged on ${(w.toSet diff g.toSet).take(5)} / ${(g.toSet diff w.toSet).take(5)}")
+    val full = tmpDir("bm25_df_full")
+    Retrieval.buildBm25Index(docs, "text", "doc_id", full, buckets = 16)
+    def stats(path: String) = graft.core.AtomicStore.readMetaJson(spark, s"$path/meta.json") { m =>
+      Seq("n_docs", "n_text_docs", "sum_dl", "buckets").map(f => f -> m.required(f).asLong())
+    }.get
+    assert(stats(idx) == stats(full))
+  }
+
+  test("bm25 meta.json: a truncated document or a missing field throws naming the file") {
+    val docs = (0 to 9).map(i => (i.toLong, s"aa b$i")).toDF("doc_id", "text")
+    val idx = tmpDir("bm25_meta_strict")
+    Retrieval.buildBm25Index(docs, "text", "doc_id", idx, buckets = 4)
+    val file = java.nio.file.Paths.get(s"$idx/meta.json")
+    val good = java.nio.file.Files.readAllBytes(file)
+    def probeFails(): Unit = {
+      val e = intercept[IllegalStateException](
+        Retrieval.queryBm25Index(spark, idx, q(1L -> "aa")).collect())
+      assert(e.getMessage.contains(s"$idx/meta.json"), e.getMessage)
+      assert(intercept[IllegalStateException](Retrieval.indexExists(spark, idx))
+        .getMessage.contains("meta.json"))
+    }
+    java.nio.file.Files.write(file, good.take(good.length / 2))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$idx/.meta.json.crc"))
+    probeFails()
+    // a complete document without sum_dl, written through the store's own
+    // writer (so its checksum holds and only the decoder can reject it)
+    graft.core.AtomicStore.writeMetaJson(spark, s"$idx/meta.json") { root =>
+      graft.core.AtomicStore.putShardIds(root, Set("base"))
+      root.put("n_docs", 10L).put("n_text_docs", 10L).put("buckets", 4)
+    }
+    probeFails()
+  }
+
+  test("bm25 reserved shard id: build and append reject the compacted id") {
+    val docs = (0 to 9).map(i => (i.toLong, s"aa b$i")).toDF("doc_id", "text")
+    val idx = tmpDir("bm25_reserved")
+    val reserved = graft.core.ShardStore.Compacted
+    val e1 = intercept[IllegalArgumentException](
+      Retrieval.buildBm25Index(docs, "text", "doc_id", idx, shardId = reserved))
+    assert(e1.getMessage.contains(reserved))
+    Retrieval.buildBm25Index(docs, "text", "doc_id", idx, shardId = "s0")
+    Retrieval.compactBm25Index(spark, idx)
+    val e2 = intercept[IllegalArgumentException](
+      Retrieval.appendBm25Index(docs, "text", "doc_id", idx, reserved))
+    assert(e2.getMessage.contains(reserved))
+  }
+
+  test("bm25 old layout (meta/ relation, no meta.json): reads and appends throw, a build migrates") {
+    val docs = (0 to 9).map(i => (i.toLong, s"aa b$i")).toDF("doc_id", "text")
+    val idx = tmpDir("bm25_old_layout")
+    spark.range(3).write.parquet(s"$idx/meta")
+    // not an index entry: a build leaves it alone
+    val other = java.nio.file.Paths.get(s"$idx/notes.txt")
+    java.nio.file.Files.writeString(other, "kept")
+    def old(e: Throwable) =
+      assert(e.getMessage.contains(idx) && e.getMessage.contains("rebuild"), e.getMessage)
+    old(intercept[IllegalStateException](Retrieval.indexExists(spark, idx)))
+    old(intercept[IllegalStateException](
+      Retrieval.appendBm25Index(docs, "text", "doc_id", idx, "s1")))
+    old(intercept[IllegalStateException](Retrieval.queryBm25Index(spark, idx, q(1L -> "aa"))))
+    old(intercept[IllegalStateException](
+      Retrieval.queryBm25IndexBatched(spark, idx, q(1L -> "aa"))))
+    Retrieval.buildBm25Index(docs, "text", "doc_id", idx, buckets = 4)
+    assert(!graft.core.Fs.exists(spark, s"$idx/meta"))
+    assert(java.nio.file.Files.readString(other) == "kept")
+    assert(Retrieval.indexExists(spark, idx))
+    assert(probeSet(Retrieval.queryBm25Index(spark, idx, q(1L -> "b3"))).map(_._2) == Set(3L))
   }
 
   test("bm25: per-term ranking agrees with the textbook log-idf weights") {
